@@ -37,9 +37,6 @@ import graft.kg.{Incremental, Link, Materialize, Pipeline}
   *                     O(delta) per trigger)
   *   --exact-resolve   resolver uses the exact (recall-1.0) prefix-filter
   *                     same-as join instead of MinHash/LSH
-  *   --sig-index       resolver keeps a persisted band-signature index
-  *                     under OUT/_resolve/sig_index (banding CPU O(delta)
-  *                     per pass; LSH path only)
   *   --threshold T     fuzzy Jaccard threshold           [0.7]
   *   --run-id ID       resumable run id                  [main]
   *   --stage-dir PATH  parquet staging boundary (constant-memory mode)
@@ -64,7 +61,6 @@ object Main {
     var resolve = false
     var resolveEvery = 0
     var exactResolve = false
-    var sigIndex = false
     var threshold = 0.7
     var runId = "main"
     var stageDir: Option[String] = None
@@ -83,7 +79,6 @@ object Main {
         case "--resolve" => resolve = true; i += 1
         case "--resolve-every" => resolveEvery = args(i + 1).toInt; i += 2
         case "--exact-resolve" => exactResolve = true; i += 1
-        case "--sig-index" => sigIndex = true; i += 1
         case "--threshold" => threshold = args(i + 1).toDouble; i += 2
         case "--run-id" => runId = args(i + 1); i += 2
         case "--stage-dir" => stageDir = Some(args(i + 1)); i += 2
@@ -98,8 +93,6 @@ object Main {
       die("--stream applies to --format transcript only")
     if (resolveEvery > 0 && !stream)
       die("--resolve-every requires --stream (use --resolve for batch)")
-    if (sigIndex && exactResolve)
-      die("--sig-index applies to the MinHash/LSH resolver (drop --exact-resolve)")
     stageDir.foreach(d => sys.props("graft.stage.dir") = d)
 
     // embedded use (tests, notebooks): getOrCreate joins a live session —
@@ -127,8 +120,7 @@ object Main {
       case "transcript" if stream =>
         val q = graft.streaming.StreamingIngest.start(spark, in, out,
           s"$out/_stream_ck", dict, linkCfg,
-          resolveEvery = resolveEvery, resolveCfg = resolverCfg,
-          resolveSigIndex = sigIndex)
+          resolveEvery = resolveEvery, resolveCfg = resolverCfg)
         q.awaitTermination()
         println(s"[graft] stream drained (AvailableNow; offsets under " +
           s"$out/_stream_ck — re-run to pick up new files)")
@@ -156,7 +148,7 @@ object Main {
     }
 
     if (resolve)
-      Incremental.resolveDisjoint(spark, out, resolverCfg, sigIndex = sigIndex)
+      Incremental.resolveDisjoint(spark, out, resolverCfg)
 
     val edges = Materialize.readTable(spark, s"$out/edges").map(_.count()).getOrElse(0L)
     val nodes = Materialize.readTable(spark, s"$out/nodes").map(_.count()).getOrElse(0L)

@@ -136,10 +136,7 @@ object ResolverBench {
     val q = graft.streaming.StreamingIngest.start(spark, inDir, outDir,
       s"$base/ck", graft.kg.Pipeline.emptyDict(spark),
       graft.kg.Link.Config(fuzzy = false),
-      resolveEvery = 1, resolveCfg = resolveCfg, maxFilesPerTrigger = Some(1),
-      // SPARK_GRAFT_SIGIDX=1 backs discovery with the persisted
-      // band-signature index (per-trigger banding CPU O(delta))
-      resolveSigIndex = sys.env.get("SPARK_GRAFT_SIGIDX").contains("1"))
+      resolveEvery = 1, resolveCfg = resolveCfg, maxFilesPerTrigger = Some(1))
     q.awaitTermination(3600000)
     q.exception.foreach { e =>
       System.err.println(s"[resolver-bench] STREAM FAILED: ${e.getMessage}")

@@ -2,9 +2,10 @@ package graft.kg
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** S6 — connected-components entity resolution.
   *
@@ -30,7 +31,11 @@ import org.apache.spark.sql.types._
   *    the drop-in replacement.
   *
   * Both strategies produce identical output (property-tested): one row per
-  * distinct key, labeled with the lexicographic min key of its component.
+  * distinct key, labeled with the min key of its component in Spark's
+  * string order. The Disjoint Resolver's driver lane
+  * ([[Incremental.resolveDisjoint]]) skips the DataFrame round trip: it
+  * verifies its same-as pairs on the driver and hands them straight to the
+  * union-find ([[componentsOnDriver]]).
   */
 object Canonicalize {
 
@@ -69,15 +74,27 @@ object Canonicalize {
       sum(length(col("entity_type")) + length(col("src")) + length(col("dst")))).head()
     val n = sized.getLong(0)
     val bytes = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-    val out =
-      if (n <= driverThreshold && bytes <= maxDriverStringBytes)
-        driverUnionFind(spark, cp.collect())
-      else labelsByStar(cp, maxIter)
-    out
+    if (n <= driverThreshold && bytes <= maxDriverStringBytes)
+      componentsOnDriver(spark,
+        cp.collect().iterator.map(r => (r.getString(0), r.getString(1), r.getString(2))))
+    else labelsByStar(cp, maxIter)
   }
 
-  private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,
-      edgeRows: Array[Row]): DataFrame = {
+  /** Spark's string order (unsigned UTF-8 bytes — what `<` and `min` compare
+    * on a StringType column). Java's `compareTo` orders UTF-16 code units,
+    * which disagrees for supplementary vs U+E000..U+FFFF characters; the
+    * driver lanes use this so they pick the same min key as the
+    * distributed ones. */
+  private[kg] def utf8Less(a: String, b: String): Boolean =
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0
+
+  /** Union-find on the driver over same-as pairs `(entity_type, key_a,
+    * key_b)` (undirected; duplicates and either orientation allowed): one
+    * output row per key in a pair, labeled with its component's min key.
+    * Both the small-edge-set lane above and the resolver's driver lane
+    * ([[Incremental.resolveDisjoint]]) feed it. */
+  private[kg] def componentsOnDriver(spark: SparkSession,
+      pairs: IterableOnce[(String, String, String)]): DataFrame = {
     val parent = mutable.Map.empty[(String, String), (String, String)]
     // iterative find (walk to root, then compress): the recursive form
     // overflows the driver stack on an adversarially ordered long chain
@@ -91,13 +108,12 @@ object Canonicalize {
       root
     }
     val verts = mutable.Set.empty[(String, String)]
-    edgeRows.foreach { r =>
-      val et = r.getString(0)
-      val a = (et, r.getString(1))
-      val b = (et, r.getString(2))
+    pairs.iterator.foreach { case (et, ka, kb) =>
+      val a = (et, ka)
+      val b = (et, kb)
       verts += a += b
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra._2 < rb._2) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (utf8Less(ra._2, rb._2)) parent(rb) = ra else parent(ra) = rb }
     }
     val rows = new java.util.ArrayList[Row]()
     verts.toSeq.sorted.foreach { k =>

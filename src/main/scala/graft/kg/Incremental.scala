@@ -253,7 +253,6 @@ object Incremental {
   private def resolveDir(outDir: String) = s"$outDir/_resolve"
   private def resolvedKeysTable(outDir: String) = s"${resolveDir(outDir)}/resolved_keys"
   private def resolveCfgPath(outDir: String) = Paths.get(resolveDir(outDir), "_CONFIG")
-  private def sigIndexDir(outDir: String) = s"${resolveDir(outDir)}/sig_index"
 
   /** The Config fields that determine the same-as pair set — a change in any
     * invalidates the converged-old-keys invariant and forces a full
@@ -262,13 +261,33 @@ object Incremental {
     Seq(cfg.exactSameAs, cfg.numHashes, cfg.bands, cfg.jaccardThreshold,
       cfg.fuzzyTypes.sorted.mkString(","), cfg.maxBandBucket).mkString("|")
 
+  // Driver-lane gate. Measured heap per examined key while the lane runs
+  // (collected row, band buckets, packed shingles): the smallest -Xmx that
+  // completes the lane grew by 208 MB from 100k to 200k keys, at both 20-
+  // and 62-char keys (JDK 17, G1) — about 2.1 KB a key, which
+  // DriverBytesPerKey + DriverBytesPerChar per character bounds. A checked
+  // candidate pair (a tuple in the dedup set) costs about DriverBytesPerPair.
+  // The lane may use an eighth of the heap: about 100k 20-char keys at a
+  // 2g driver, scaling with the heap.
+  private val DriverBytesPerKey = 2048L
+  private val DriverBytesPerChar = 16L
+  private val DriverBytesPerPair = 160L
+  private def driverBudget: Long = Runtime.getRuntime.maxMemory / 8
+
+  /** Whether `rows` keys of `chars` total string length fit the driver lane. */
+  private def fitsDriver(rows: Long, chars: Long): Boolean =
+    rows * DriverBytesPerKey + chars * DriverBytesPerChar <= driverBudget
+
+  /** What one resolver pass examined and changed. */
+  final case class ResolveStats(touched: Long, total: Long, rewritten: Long)
+
   /** Global fuzzy-canonicalization compaction — megamind's Disjoint Resolver
     * as a batch job, DELTA-AWARE like the reference's watch-triggered design
     * (the Disjoint Watcher reacts to new (TUID, GUID) pairs, so only
     * entities touched since the last resolution are re-examined —
     * `docs/diagrams/megamind.drawio:80-88`).
     *
-    * Each resolve records the post-rewrite eligible key set under
+    * Each resolve records a watermark of eligible keys under
     * `_resolve/resolved_keys`; the next invocation anti-joins the node table
     * against it and runs same-as discovery ONLY over pairs involving a new
     * key ([[Link.fuzzySameAsDelta]] — old×old pairs are never enumerated).
@@ -278,25 +297,42 @@ object Incremental {
     * signature) voids that invariant, so it triggers full rediscovery
     * automatically; `fullRediscovery = true` forces it.
     *
+    * Discovery runs in one of two lanes, chosen by size. The pass's first
+    * agg over the flagged key set measures its rows and key bytes; when they
+    * fit a budget of `Runtime.maxMemory` / 8 at a measured per-key driver
+    * cost, the LSH pass collects the keys ONCE and does banding, the bucket
+    * cap, the delta split and the Jaccard check on the driver
+    * ([[Link.fuzzySameAsOnDriver]]), then labels components with
+    * [[Canonicalize.componentsOnDriver]] — a handful of Spark jobs instead of
+    * ~20 per pass, for identical `cc` rows. Above the gate, or on the exact
+    * PPJoin path, the distributed discovery runs. Each decision goes to
+    * `_metrics` as `driver_lane`, `flagged_rows` and `flagged_bytes`.
+    *
     * Rewrites are entity-granular too: only rows touching a rewritten GUID
     * are deleted+re-inserted ([[Materialize.appendRewrite]] — one tombstone
     * + one delta under a single manifest flip), O(affected) instead of the
-    * O(corpus) full-snapshot replace. Touched/total entity counts are logged
-    * and appended to `_metrics` (stage `resolve`).
+    * O(corpus) full-snapshot replace. Touched/total entity counts and the
+    * per-phase times (`scan_ms`, `discover_ms`, `rewrite_ms`,
+    * `watermark_ms`) are appended to `_metrics` (stage `resolve`).
+    *
+    * The new watermark is the key set this pass EXAMINED minus the names its
+    * rewrite merged away — never a re-read of the node table, which would
+    * also mark as resolved any key another writer appended after the scan.
     *
     * Idempotent: a second invocation sees zero new keys and returns after
     * one node-table scan. First invocation (no state) = full resolve.
     */
-  /** What one resolver pass examined and changed. */
-  final case class ResolveStats(touched: Long, total: Long, rewritten: Long)
-
   def resolveDisjoint(spark: SparkSession, outDir: String,
       cfg: Link.Config = Link.Config(),
-      fullRediscovery: Boolean = false,
-      /** back LSH discovery with the persisted band-signature index
-        * ([[SigIndex]]) — per-pass banding CPU drops from O(total) to
-        * O(delta); identical output. Ignored on the exact-PPJoin path. */
-      sigIndex: Boolean = false): ResolveStats = {
+      fullRediscovery: Boolean = false): ResolveStats =
+    resolvePass(spark, outDir, cfg, fullRediscovery, lane = None)
+
+  /** [[resolveDisjoint]] with the discovery lane forced — `Some(true)`
+    * driver, `Some(false)` distributed — instead of gated by size: the entry
+    * point of the lane-equality tests. */
+  private[kg] def resolvePass(spark: SparkSession, outDir: String,
+      cfg: Link.Config, fullRediscovery: Boolean,
+      lane: Option[Boolean]): ResolveStats = {
     val nodesOpt = Materialize.readTable(spark, s"$outDir/nodes")
     val edgesOpt = Materialize.readTable(spark, s"$outDir/edges")
     if (nodesOpt.isEmpty || edgesOpt.isEmpty) return ResolveStats(0L, 0L, 0L)
@@ -328,9 +364,11 @@ object Incremental {
     }).localCheckpoint(eager = true)
 
     val counts = flagged.agg(count(lit(1)),
-      sum(when(col("is_new"), 1L).otherwise(0L))).head()
+      sum(when(col("is_new"), 1L).otherwise(0L)),
+      sum(length(col("entity_type")) + length(col("dict_key")))).head()
     val total = counts.getLong(0)
     val touched = if (counts.isNullAt(1)) 0L else counts.getLong(1)
+    val flaggedBytes = if (counts.isNullAt(2)) 0L else counts.getLong(2)
     // phase boundary timestamps → per-phase _metrics rows: the flat-vs-
     // growing decomposition (O(delta) discovery vs O(total) merge-on-read
     // scan) must be readable from the artifact, not re-derived by hand
@@ -346,18 +384,10 @@ object Incremental {
       return ResolveStats(0L, total, 0L)
     }
 
-    val useIdx = sigIndex && !cfg.exactSameAs
-    val (sameAs, freeDiscovery, idxStats) =
-      if (useIdx) SigIndex.fuzzySameAsIndexed(spark, sigIndexDir(outDir),
-        flagged, cfg, rebuild = oldKeys.isEmpty)
-      else {
-        val (sa, free) = Link.fuzzySameAsManaged(flagged, cfg, delta = true)
-        (sa, free, SigIndex.Stats(-1L, rebuilt = false))
-      }
-    val cc = Canonicalize.connectedComponents(
-        sameAs.select(col("entity_type"), col("key_a"), col("key_b")))
-      .select(col("entity_type").as("cc_et"), col("key").as("cc_key"),
-        col("component"))
+    val wantDriver = !cfg.exactSameAs && lane.getOrElse(fitsDriver(total, flaggedBytes))
+    val (cc0, freeDiscovery, onDriver) = sameAsComponents(flagged, cfg, wantDriver)
+    val cc = cc0.select(col("entity_type").as("cc_et"), col("key").as("cc_key"),
+      col("component"))
 
     // guid rewrite map: old guid -> canonical guid (only where it changes)
     val rewrite = nodes.join(cc,
@@ -421,55 +451,45 @@ object Incremental {
         })
       if (affectedEdges != null) affectedEdges.unpersist()
       if (affectedNodes != null) affectedNodes.unpersist()
-      // merged-away names leave the node table; they must leave the
-      // signature index too (a stale signature row would keep discovering
-      // pairs against a dead key, resurrecting it as a same-as edge)
-      if (useIdx) SigIndex.remove(spark, sigIndexDir(outDir),
-        rewrite.select(col("rw_et").as("entity_type"),
-          col("old_name").as("dict_key")).distinct(), cfg)
     }
     val tRewrite = System.currentTimeMillis()
 
-    // record the new watermark: post-rewrite eligible key set + config sig
-    // (read fresh so merged-away names are gone and component reps present).
-    // Removing merged-away names is LOAD-BEARING: a name resolved away in
-    // pass k can reappear in pass k+2 — it must count as NEW again so its
-    // merge is rediscovered; a stale "seen" row would silently skip it.
+    // record the new watermark: the keys this pass examined minus the names
+    // its rewrite merged away (component reps are examined keys, so they
+    // stay). Removing merged-away names is LOAD-BEARING: a name resolved
+    // away in pass k can reappear in pass k+2 — it must count as NEW again
+    // so its merge is rediscovered; a stale "seen" row would silently skip
+    // it. Keys another writer appended after the scan stay NEW for the next
+    // pass, which is why the node table is not re-read here.
     //
     // The UPDATE is delta-shaped (added keys as a delta, removed keys as an
     // equality-delete tombstone): the replace-snapshot form rewrote the
     // ENTIRE key set every pass — measured 1.8M key rows written per
     // trigger at the 10M-turn rehearsal, an O(total) write that would
-    // dominate per-trigger cost at corpus scale. Computing added/removed is
-    // two anti-joins (linear COMPUTE is unavoidable — the node table must
-    // be scanned anyway); the WRITE is O(changed). Full snapshot only on
-    // the first resolve or a config change (watermark rebuilt from
-    // scratch).
+    // dominate per-trigger cost at corpus scale. Full snapshot only on the
+    // first resolve or a config change (watermark rebuilt from scratch).
     Files.createDirectories(Paths.get(resolveDir(outDir)))
-    val after = Materialize.readTable(spark, s"$outDir/nodes").get
-      .filter(col("entity_type").isin(cfg.fuzzyTypes: _*))
-      .select(col("entity_type"), col("name").as("dict_key")).distinct()
     val wmKey = Seq("entity_type", "dict_key")
+    val kept = flagged.join(rewrite.select(col("rw_et").as("entity_type"),
+      col("old_name").as("dict_key")), wmKey, "left_anti")
     oldKeys match {
       case Some(old) =>
-        val added = after.join(old.select(wmKey.map(col): _*), wmKey, "left_anti")
-        val removed = old.select(wmKey.map(col): _*).join(after, wmKey, "left_anti")
         Materialize.appendRewrite(spark, resolvedKeysTable(outDir),
-          added, removed, wmKey)
+          kept.filter(col("is_new")).select(wmKey.map(col): _*),
+          old.select(wmKey.map(col): _*).join(kept, wmKey, "left_anti"), wmKey)
       case None =>
-        Materialize.mergeSnapshot(spark, resolvedKeysTable(outDir), after,
-          wmKey, replace = true)
+        Materialize.mergeSnapshot(spark, resolvedKeysTable(outDir),
+          kept.select(wmKey.map(col): _*), wmKey, replace = true)
     }
     Files.writeString(resolveCfgPath(outDir), sig)
 
     appendMetrics(spark, outDir, Seq(
       ("resolve", "resolve", -1, "touched_entities", touched),
       ("resolve", "resolve", -1, "total_entities", total),
-      ("resolve", "resolve", -1, "rewritten_entities", nRewrites)) ++
-      (if (useIdx) Seq(
-        ("resolve", "resolve", -1, "sig_banded_keys", idxStats.bandedKeys),
-        ("resolve", "resolve", -1, "sig_rebuilt", if (idxStats.rebuilt) 1L else 0L))
-       else Seq.empty) ++ Seq(
+      ("resolve", "resolve", -1, "rewritten_entities", nRewrites),
+      ("resolve", "resolve", -1, "driver_lane", if (onDriver) 1L else 0L),
+      ("resolve", "resolve", -1, "flagged_rows", total),
+      ("resolve", "resolve", -1, "flagged_bytes", flaggedBytes),
       ("resolve", "resolve", -1, "scan_ms", tScan - t0),
       ("resolve", "resolve", -1, "discover_ms", tDiscover - tScan),
       ("resolve", "resolve", -1, "rewrite_ms", tRewrite - tDiscover),
@@ -478,5 +498,29 @@ object Incremental {
     rewrite.unpersist()
     flagged.unpersist()
     ResolveStats(touched, total, nRewrites)
+  }
+
+  /** Same-as discovery + components over `flagged` `(entity_type, dict_key,
+    * is_new)`: the `cc` frame `(entity_type, key, component)` for every key
+    * in a verified pair, a cleanup for the discovery's internal checkpoints
+    * (call once `cc` is consumed), and whether the driver lane ran. The
+    * driver lane falls back to the distributed one when its candidate-pair
+    * bound does not fit the budget. */
+  private[kg] def sameAsComponents(flagged: DataFrame, cfg: Link.Config,
+      driver: Boolean): (DataFrame, () => Unit, Boolean) = {
+    val onDriver =
+      if (!driver) None
+      else Link.fuzzySameAsOnDriver(
+        flagged.select("entity_type", "dict_key", "is_new").collect()
+          .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))),
+        cfg, maxPairs = driverBudget / DriverBytesPerPair)
+    onDriver match {
+      case Some(pairs) =>
+        (Canonicalize.componentsOnDriver(flagged.sparkSession, pairs), () => (), true)
+      case None =>
+        val (sameAs, free) = Link.fuzzySameAsManaged(flagged, cfg, delta = true)
+        (Canonicalize.connectedComponents(
+          sameAs.select(col("entity_type"), col("key_a"), col("key_b"))), free, false)
+    }
   }
 }

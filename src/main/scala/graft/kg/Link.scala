@@ -1,5 +1,7 @@
 package graft.kg
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,10 +110,14 @@ object Link {
   def shingles(s: String): Set[String] =
     if (s.length < 3) Set(s) else s.sliding(3).toSet
 
-  /** [[shingles]] packed injectively into longs, SORTED DISTINCT: a
-    * trigram's 3 UTF-16 code units occupy 48 bits (c0<<32 | c1<<16 | c2);
-    * a key shorter than 3 chars packs whole into < 2^32, disjoint from any
-    * trigram's >= 2^32 (normalized keys never contain NUL, so c0 > 0).
+  private val TrigramTag = 1L << 48
+
+  /** [[shingles]] packed injectively into longs, SORTED DISTINCT, for
+    * EVERY input string: a trigram's 3 UTF-16 code units occupy the low 48
+    * bits (c0<<32 | c1<<16 | c2) under a length-tag bit 2^48; a key shorter
+    * than 3 chars packs whole as (length<<32 | its code units), below 2^34
+    * and so disjoint from every tagged trigram. Without the tag the trigram
+    * (NUL, 'a', 'b') packed equal to the short key "ab".
     * Injective ⇒ the distinct COUNT equals `shingles(s).size` and set
     * intersections map 1:1 — jaccard over packed arrays is the identical
     * integer ratio (and so the identical IEEE double) as over the string
@@ -123,13 +129,13 @@ object Link {
     if (n <= 0) {
       var v = 0L; var i = 0
       while (i < s.length) { v = (v << 16) | s.charAt(i).toLong; i += 1 }
-      Array(v)
+      Array((s.length.toLong << 32) | v)
     } else {
       val out = new Array[Long](n)
       var i = 0
       while (i < n) {
-        out(i) = (s.charAt(i).toLong << 32) | (s.charAt(i + 1).toLong << 16) |
-          s.charAt(i + 2).toLong
+        out(i) = TrigramTag | (s.charAt(i).toLong << 32) |
+          (s.charAt(i + 1).toLong << 16) | s.charAt(i + 2).toLong
         i += 1
       }
       java.util.Arrays.sort(out)
@@ -320,6 +326,52 @@ object Link {
 
     (verifySameAs(eligible, candidates, cfg.jaccardThreshold),
       () => { capped.unpersist(); () })
+  }
+
+  /** Driver mirror of the LSH delta discovery ([[fuzzySameAsManaged]] with
+    * `delta = true`) for a key set small enough to hold on the driver:
+    * `keys` are `(entity_type, dict_key, is_new)` rows. Every step is the
+    * distributed lane's, in plain collections: the fuzzy-type filter and the
+    * min(is_new) collapse, the `(entity_type, band, band_hash)` buckets of
+    * [[bandSignature]], the [[Config.maxBandBucket]] cap (its
+    * `dropped_rows`/`max_bucket` recorded under CapMetrics site `link.lsh`,
+    * the values the window lane observes), the new-involved pair split and
+    * the [[shinglesPacked]]/[[jaccardPackedKernel]] check. Returns the
+    * verified pairs `(entity_type, key_a, key_b)`, key_a < key_b in Spark's
+    * UTF-8 order — or None, recording nothing, when the capped buckets could
+    * emit more than `maxPairs` candidates (the caller then runs the
+    * distributed lane, so a few huge buckets cannot exhaust the heap). */
+  private[kg] def fuzzySameAsOnDriver(keys: Iterable[(String, String, Boolean)],
+      cfg: Config, maxPairs: Long): Option[Seq[(String, String, String)]] = {
+    require(!cfg.exactSameAs, "the driver lane mirrors the MinHash/LSH path only")
+    val types = cfg.fuzzyTypes.toSet
+    val isNew = mutable.HashMap.empty[(String, String), Boolean]
+    keys.foreach { case (et, k, n) =>
+      if (types.contains(et)) isNew((et, k)) = isNew.getOrElse((et, k), true) && n
+    }
+    val buckets = mutable.HashMap.empty[(String, Int, Long), mutable.ArrayBuffer[String]]
+    isNew.keysIterator.foreach { case (et, k) =>
+      bandSignature(k, cfg.numHashes, cfg.bands).foreach { case (b, h) =>
+        buckets.getOrElseUpdate((et, b, h), mutable.ArrayBuffer.empty) += k
+      }
+    }
+    val sizes = buckets.valuesIterator.map(_.size.toLong).toSeq
+    val pairBound = sizes.filter(_ <= cfg.maxBandBucket).map(n => n * (n - 1) / 2).sum
+    if (pairBound > maxPairs) return None
+    graft.ops.CapMetrics.record("link.lsh", Map(
+      "dropped_rows" -> sizes.filter(_ > cfg.maxBandBucket).sum,
+      "max_bucket" -> sizes.maxOption.getOrElse(0L)))
+
+    val candidates = mutable.HashSet.empty[(String, String, String)]
+    for (((et, _, _), ks) <- buckets if ks.size <= cfg.maxBandBucket;
+         i <- ks.indices; j <- i + 1 until ks.size) {
+      val (a, b) = if (Canonicalize.utf8Less(ks(i), ks(j))) (ks(i), ks(j)) else (ks(j), ks(i))
+      if (isNew((et, a)) || isNew((et, b))) candidates += ((et, a, b))
+    }
+    val packed = mutable.HashMap.empty[String, Array[Long]]
+    def sh(k: String) = packed.getOrElseUpdate(k, shinglesPacked(k))
+    Some(candidates.toSeq.filter { case (_, a, b) =>
+      jaccardPackedKernel(sh(a), sh(b)) >= cfg.jaccardThreshold })
   }
 
   /** Full linking: mentions → dict keys → fuzzy same-as edges → CC canonical

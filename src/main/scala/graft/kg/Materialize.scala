@@ -209,14 +209,17 @@ object Materialize {
     * throws if the dir exists, so two writers listing the same max id can
     * never both claim `kind-N` — the loser retries upward. (Plain
     * list-and-increment let two processes mint the same id and silently
-    * clobber each other's parquet files.)
+    * clobber each other's parquet files.) The reservation holds only while
+    * the dir EXISTS, so every write into a reserved dir goes through
+    * [[writeReserved]], never `SaveMode.Overwrite` — Overwrite deletes the
+    * dir first, and in that window a concurrent reserveDir re-mints the
+    * same id (two writers in one dir: lost rows, aborted commits).
     *
     * A sibling `.pending-<dir>` marker protects the reservation from a
     * concurrent [[gc]] until the writer flips it into the manifest and
-    * [[commitReserved]] removes the marker (the marker sits OUTSIDE the dir
-    * because Spark's Overwrite write clears the dir's contents). A crashed
-    * writer's marker goes stale and stops protecting after
-    * [[PendingStaleMs]] — gc then reclaims both. */
+    * [[commitReserved]] removes the marker. A crashed writer's marker goes
+    * stale and stops protecting after [[PendingStaleMs]] — gc then reclaims
+    * both. */
   private def reserveDir(table: String, kind: String): String = {
     Files.createDirectories(Paths.get(table))
     var id = nextId(table)
@@ -228,6 +231,12 @@ object Materialize {
     Files.writeString(pendingMarker(table, made), "")
     made
   }
+
+  /** Write `df` into a dir [[reserveDir]] created (empty, owned by this
+    * writer): Append adds the part files without deleting the dir, so the
+    * id stays claimed for the whole write. */
+  private def writeReserved(df: DataFrame, table: String, dirName: String): Unit =
+    df.write.mode(SaveMode.Append).parquet(Paths.get(table, dirName).toString)
 
   private[kg] val PendingStaleMs = 15L * 60 * 1000
   private def pendingMarker(table: String, dirName: String): Path =
@@ -344,7 +353,7 @@ object Materialize {
       case _ => staged.dropDuplicates(key)
     }
     val snapDir = reserveDir(table, "snap")
-    merged.write.mode(SaveMode.Overwrite).parquet(Paths.get(table, snapDir).toString)
+    writeReserved(merged, table, snapDir)
     flip(table, Manifest(Some(snapDir), Nil))
     commitReserved(table, snapDir)
     gc(table, retainSnapshots)
@@ -368,8 +377,8 @@ object Materialize {
     // would collapse any duplicates anyway, so this only trades write size.
     // The (long) data write runs OUTSIDE the manifest lock — only the
     // read-modify-write of _CURRENT is serialized.
-    (if (dedupStaged) staged.dropDuplicates(key) else staged)
-      .write.mode(SaveMode.Overwrite).parquet(Paths.get(table, deltaDir).toString)
+    writeReserved(if (dedupStaged) staged.dropDuplicates(key) else staged,
+      table, deltaDir)
     val shouldCompact = withTableLock(table) {
       val m = currentManifest(table).getOrElse(Manifest(None, Nil))
       flip(table, Manifest(m.base, m.deltas :+ deltaDir, m.tombs))
@@ -400,10 +409,9 @@ object Materialize {
     val tombDir = reserveDir(table, "tomb")
     val deltaDir = reserveDir(table, "delta")
     awaitBoth(
-      () => deleteKeys.select(key.map(col): _*).dropDuplicates(key)
-        .write.mode(SaveMode.Overwrite).parquet(Paths.get(table, tombDir).toString),
-      () => upserts.dropDuplicates(key)
-        .write.mode(SaveMode.Overwrite).parquet(Paths.get(table, deltaDir).toString))
+      () => writeReserved(deleteKeys.select(key.map(col): _*).dropDuplicates(key),
+        table, tombDir),
+      () => writeReserved(upserts.dropDuplicates(key), table, deltaDir))
     val shouldCompact = withTableLock(table) {
       val m = currentManifest(table).getOrElse(Manifest(None, Nil))
       flip(table, Manifest(m.base, m.deltas :+ deltaDir, m.tombs :+ tombDir))
@@ -423,8 +431,7 @@ object Materialize {
       if (m.deltas.nonEmpty || m.tombs.nonEmpty) {
         val merged = readTable(spark, table).get
         val snapDir = reserveDir(table, "snap")
-        merged.write.mode(SaveMode.Overwrite)
-          .parquet(Paths.get(table, snapDir).toString)
+        writeReserved(merged, table, snapDir)
         flip(table, Manifest(Some(snapDir), Nil))
         commitReserved(table, snapDir)
         gc(table, retainSnapshots)

@@ -39,22 +39,27 @@ object CapMetrics {
         qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
   }
 
-  private def harvest(name: String, row: Row): Unit = {
+  private def harvest(name: String, row: Row): Unit =
     if (name.startsWith("graft.cap.")) {
       // graft.cap.<site>#<seq>
-      val site = name.stripPrefix("graft.cap.").takeWhile(_ != '#')
-      val vals = row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-        f -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-      }.toMap
-      bySite.put(site, (writes.incrementAndGet(), vals))
-      val dropped = vals.getOrElse("dropped_rows", 0L)
-      if (dropped > 0L)
-        log.warn(s"[graft] cap '$site' dropped $dropped rows " +
-          vals.removed("dropped_rows").map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")"))
-      else if (vals.nonEmpty)
-        log.info(s"[graft] metrics '$site': " +
-          vals.map { case (k, v) => s"$k=$v" }.mkString(", "))
+      record(name.stripPrefix("graft.cap.").takeWhile(_ != '#'),
+        row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
+          f -> (if (row.isNullAt(i)) 0L else row.getLong(i))
+        }.toMap)
     }
+
+  /** Record `site`'s metrics computed without a Spark query — a driver-side
+    * mirror of an [[observed]] site reports here, so its cap stays just as
+    * visible: same map, same write sequence, same WARN on `dropped_rows`. */
+  def record(site: String, vals: Map[String, Long]): Unit = {
+    bySite.put(site, (writes.incrementAndGet(), vals))
+    val dropped = vals.getOrElse("dropped_rows", 0L)
+    if (dropped > 0L)
+      log.warn(s"[graft] cap '$site' dropped $dropped rows " +
+        vals.removed("dropped_rows").map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")"))
+    else if (vals.nonEmpty)
+      log.info(s"[graft] metrics '$site': " +
+        vals.map { case (k, v) => s"$k=$v" }.mkString(", "))
   }
 
   private def ensureListener(spark: SparkSession): Unit =

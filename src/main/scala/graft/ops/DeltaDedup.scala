@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   * batch at a time against the accumulated graph (docs/diagrams/
   * megamind.drawio:80-113 — the Watcher reacts to deltas, not snapshots);
   * these operators are the same delta discipline applied to corpus dedup,
-  * mirroring [[graft.kg.Link.fuzzySameAsDelta]]'s (new⋈all) split and
-  * [[graft.kg.SigIndex]]'s persisted-signature move.
+  * mirroring [[graft.kg.Link.fuzzySameAsDelta]]'s (new⋈all) split, plus
+  * persisted band signatures (the resolver dropped its own signature index
+  * after it measured slower end to end — BENCH/RESOLVER.md; here the
+  * signatures double as the dedup state, so they stay).
   *
   * Two layers, same contracts as the full-corpus operators:
   *
@@ -242,9 +244,9 @@ object DeltaDedup {
       case None => fresh
     }).localCheckpoint(eager = true)
 
-    // bucket caps by partial agg over the persisted frame (the SigIndex
-    // move: the shuffle carries distinct buckets, not rows) — identical cap
-    // semantics to the full op's count window; drops observed
+    // bucket caps by partial agg over the persisted frame (the shuffle
+    // carries distinct buckets, not rows) — identical cap semantics to the
+    // full op's count window; drops observed
     val bucketCounts = allSigs.groupBy(col("band"), col("band_hash"))
       .agg(count(lit(1)).as("bucket_n"))
     val observed = CapMetrics.observed(bucketCounts, "dedup.delta.ingest",

@@ -42,11 +42,7 @@ object StreamingIngest {
       dict: DataFrame, linkCfg: Link.Config = Link.Config(fuzzy = false),
       resolveEvery: Int = 0,
       resolveCfg: Link.Config = Link.Config(fuzzy = true),
-      maxFilesPerTrigger: Option[Int] = None,
-      /** persisted band-signature index for the in-stream resolver
-        * ([[graft.kg.SigIndex]]) — per-trigger discovery CPU becomes
-        * O(delta) instead of re-banding the accumulated key set. */
-      resolveSigIndex: Boolean = false): StreamingQuery = {
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
     val reader = spark.readStream.schema(Model.turnSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
@@ -92,7 +88,7 @@ object StreamingIngest {
         // O(affected) rewrite), so running it in-stream is bounded work
         if (resolveEvery > 0 && (batchId + 1) % resolveEvery == 0) {
           val stats = Incremental.resolveDisjoint(batch.sparkSession, outDir,
-            resolveCfg, sigIndex = resolveSigIndex)
+            resolveCfg)
           log.info(s"[graft] stream resolve after batch $batchId: " +
             s"touched=${stats.touched}/${stats.total} rewritten=${stats.rewritten}")
         }

@@ -97,29 +97,6 @@ class MainSpec extends AnyFunSuite {
     assert(got == want && got.nonEmpty)
   }
 
-  test("--resolve --sig-index equals the unindexed resolve and persists the index") {
-    val base = Files.createTempDirectory("graft-main-sigidx").toString
-    val turns = Transcripts.fromTestdataResolve(spark, "/root/testdata/sf0.001")
-    turns.write.mode("overwrite").parquet(s"$base/in")
-
-    Main.main(Array("--in", s"$base/in", "--out", s"$base/kgA", "--buckets", "2",
-      "--resolve", "--sig-index", "--threshold", "0.8"))
-    val got = edgeSet(Materialize.readTable(spark, s"$base/kgA/edges").get)
-    // the flag reached the resolver: the band-signature index is on disk
-    assert(new java.io.File(s"$base/kgA/_resolve/sig_index").exists(),
-      "sig_index dir missing — --sig-index did not reach resolveDisjoint")
-
-    // unindexed mirror (index is a pure compute optimization, same output)
-    graft.kg.Incremental.run(turns, Pipeline.emptyDict(spark), s"$base/kgB",
-      "main", nBuckets = 2,
-      linkCfg = Link.Config(fuzzy = false, jaccardThreshold = 0.8),
-      recordCounts = false)
-    graft.kg.Incremental.resolveDisjoint(spark, s"$base/kgB",
-      Link.Config(fuzzy = true, exactSameAs = false, jaccardThreshold = 0.8))
-    val want = edgeSet(Materialize.readTable(spark, s"$base/kgB/edges").get)
-    assert(got == want && got.nonEmpty)
-  }
-
   test("--stage-dir + --fuzzy: staged run equals the in-memory run, staging cleaned up") {
     val base = Files.createTempDirectory("graft-main-stage").toString
     val turns = Transcripts.fromTestdataResolve(spark, "/root/testdata/sf0.001")

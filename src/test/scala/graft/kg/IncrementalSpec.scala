@@ -181,4 +181,96 @@ class IncrementalSpec extends AnyFunSuite {
     assert(gotEdges == refEdges)
     assert(personsAfter == refPersons)
   }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSet
+
+  test("resolver discovery lanes: driver == distributed on randomized key sets") {
+    import spark.implicits._
+    for (seed <- 1 to 4) {
+      val r = new scala.util.Random(seed)
+      val stems = Seq.fill(5)(Seq.fill(5 + r.nextInt(6))(('a' + r.nextInt(6)).toChar).mkString)
+      def variant(st: String) = r.nextInt(5) match {
+        case 0 => st
+        case 1 => st.dropRight(1)
+        case 2 => st + "x"
+        case 3 => st.take(2) // shorter than one trigram
+        case _ => st.take(3) + "q" + st.drop(3)
+      }
+      // Order is not fuzzy-eligible; repeated keys mix new and old flags;
+      // "aaa"/"aaaa"/"aaaaa" share one shingle set, so one bucket per band
+      // holds at least three keys and maxBandBucket = 2 fires
+      val keys = Seq.fill(60)((Seq("Person", "City", "Order")(r.nextInt(3)),
+          variant(stems(r.nextInt(5))), r.nextBoolean())) ++
+        Seq("aaa", "aaaa", "aaaaa").map(k => ("Person", k, true))
+      val cfg = Link.Config(maxBandBucket = if (seed % 2 == 0) 2 else 10000)
+      val flagged = keys.toDF("entity_type", "dict_key", "is_new")
+      def lane(driver: Boolean) = {
+        val (cc, free, onDriver) = Incremental.sameAsComponents(flagged, cfg, driver)
+        assert(onDriver == driver)
+        val got = rows(cc)
+        free()
+        (got, graft.ops.CapMetrics.latest("link.lsh"))
+      }
+      val (driverCc, driverCaps) = lane(driver = true)
+      val (sparkCc, sparkCaps) = lane(driver = false)
+      assert(driverCc == sparkCc, s"seed=$seed")
+      assert(driverCaps == sparkCaps, s"seed=$seed")
+      assert(driverCc.exists(_.startsWith("City|")) && !driverCc.exists(_.startsWith("Order|")))
+      if (cfg.maxBandBucket == 2) assert(driverCaps("dropped_rows") > 0L)
+    }
+  }
+
+  test("resolver lanes: two-batch resolve gives identical tables, watermarks and metrics") {
+    import spark.implicits._
+    val ts0 = new java.sql.Timestamp(0L)
+    def turns(lines: String*) = lines.zipWithIndex.map { case (text, i) =>
+      graft.model.Model.Turn(s"c${text.hashCode}", i, "user", text, "", ts0) }.toDS()
+    val b1 = turns("My name is Alice Smith.", "Alice Smith lives in Francee.",
+      "My name is Bob Jones.", "Bob Jones lives in Japan.", "My name is Al.",
+      "Order 7 total 12.5.")
+    val b2 = turns("My name is Alice Smit.", "Alice Smit lives in France.",
+      "My name is Bob Jones Jr.", "My name is Dave Black.", "My name is Alx.")
+    val cfg = Link.Config()
+    def converge(driver: Boolean) = {
+      val out = Files.createTempDirectory(s"graft-lane-$driver").toString
+      val dict = Pipeline.emptyDict(spark)
+      val passes = Seq(b1, b2).zipWithIndex.map { case (b, i) =>
+        Incremental.run(b, dict, out, s"r$i", nBuckets = 1)
+        val st = Incremental.resolvePass(spark, out, cfg, fullRediscovery = false,
+          lane = Some(driver))
+        (st, graft.ops.CapMetrics.latest("link.lsh"))
+      }
+      (out, passes)
+    }
+    val (outD, passesD) = converge(driver = true)
+    val (outS, passesS) = converge(driver = false)
+    assert(passesD == passesS)
+    assert(passesD.map(_._1.rewritten).sum >= 2L, passesD)
+    for (t <- Seq("nodes", "edges", "_resolve/resolved_keys"))
+      assert(rows(Materialize.readTable(spark, s"$outD/$t").get) ==
+        rows(Materialize.readTable(spark, s"$outS/$t").get), t)
+    // single writer: the watermark built from the examined keys equals the
+    // converged table's eligible key set (merged-away names left it)
+    assert(rows(Materialize.readTable(spark, s"$outD/_resolve/resolved_keys").get) ==
+      rows(Materialize.readTable(spark, s"$outD/nodes").get
+        .filter($"entity_type".isin(cfg.fuzzyTypes: _*)).select("entity_type", "name")))
+
+    // each gate decision is in _metrics, next to the phase times
+    def gate(out: String) = Incremental.readMetrics(spark, out)
+      .filter($"stage" === "resolve" &&
+        $"metric".isin("driver_lane", "flagged_rows", "flagged_bytes", "scan_ms"))
+      .collect().groupBy(_.getAs[String]("metric")).map { case (m, rs) =>
+        m -> rs.map(_.getAs[Long]("value")).sorted.toSeq }
+    val (gd, gs) = (gate(outD), gate(outS))
+    assert(gd("driver_lane") == Seq(1L, 1L) && gs("driver_lane") == Seq(0L, 0L))
+    assert(gd("flagged_rows") == gs("flagged_rows") && gd("flagged_rows").forall(_ > 0L))
+    assert(gd("flagged_bytes") == gs("flagged_bytes") && gd("scan_ms").size == 2)
+
+    // the public entry point lets the size gate pick the driver lane here
+    val outG = Files.createTempDirectory("graft-lane-gate").toString
+    Incremental.run(b1, Pipeline.emptyDict(spark), outG, "g", nBuckets = 1)
+    Incremental.resolveDisjoint(spark, outG, cfg)
+    assert(gate(outG)("driver_lane") == Seq(1L))
+  }
 }

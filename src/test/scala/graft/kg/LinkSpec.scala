@@ -33,6 +33,20 @@ class LinkSpec extends AnyFunSuite {
     assert(Link.jaccard("alice smith", "bob jones") < 0.1)
   }
 
+  test("shinglesPacked is injective on every string, NUL-led trigrams included") {
+    // the trigram (NUL, 'a', 'b') used to pack equal to the short key "ab"
+    assert(!(Link.shinglesPacked("\u0000ab") sameElements Link.shinglesPacked("ab")))
+    val alphabet = Seq("\u0000", "a", "b", "\uffff")
+    val strs = (0 to 4).flatMap(n => Seq.fill(n)(alphabet).foldLeft(Seq(""))(
+      (acc, cs) => for (p <- acc; c <- cs) yield p + c))
+    val packed = strs.map(s => s -> Link.shinglesPacked(s)).toMap
+    for (a <- strs) assert(packed(a).length == Link.shingles(a).size, a)
+    for (a <- strs; b <- strs) {
+      assert((packed(a) sameElements packed(b)) == (Link.shingles(a) == Link.shingles(b)))
+      assert(Link.jaccardPackedKernel(packed(a), packed(b)) == Link.jaccard(a, b))
+    }
+  }
+
   test("bandSignature is deterministic and has `bands` entries") {
     val a = Link.bandSignature("alice smith", 24, 8)
     val b = Link.bandSignature("alice smith", 24, 8)

@@ -1,6 +1,8 @@
 package graft.kg
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,22 +167,42 @@ class MaterializeSpec extends AnyFunSuite {
   test("concurrent appendDelta writers lose no delta (exclusive ids + manifest lock)") {
     import spark.implicits._
     val table = freshDir() + "/t"
-    // 8 concurrent appends to ONE table: before the r5 guard, the
+    // 24 appends to ONE table, 12 in flight: before the r5 guard, the
     // list-and-increment id mint could clobber a data dir and the unlocked
-    // manifest read-modify-write could drop a sibling's delta from _CURRENT
-    val threads = (0 until 8).map { i =>
-      new Thread(() => Materialize.appendDelta(spark, table,
-        Seq((s"k$i", i.toLong)).toDF("k", "v"), Seq("k"), compactEvery = 0))
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join(120000))
+    // manifest read-modify-write could drop a sibling's delta from _CURRENT;
+    // while writes used SaveMode.Overwrite, deleting the reserved dir let a
+    // concurrent reservation re-mint its id (two writers, one dir). That
+    // window is too short to hit reliably, so the test also watches for it:
+    // no reserved dir may be deleted while the appends run.
+    Files.createDirectories(Paths.get(table))
+    val watch = java.nio.file.FileSystems.getDefault.newWatchService()
+    Paths.get(table).register(watch, java.nio.file.StandardWatchEventKinds.ENTRY_DELETE)
+    val n = 24
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(12)
+    try {
+      val fs = (0 until n).map(i => pool.submit(new Runnable {
+        def run(): Unit = Materialize.appendDelta(spark, table,
+          Seq((s"k$i", i.toLong)).toDF("k", "v"), Seq("k"), compactEvery = 0)
+      }))
+      fs.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    val deleted = Iterator.continually(watch.poll(1, java.util.concurrent.TimeUnit.SECONDS))
+      .takeWhile(_ != null).flatMap { k =>
+        val names = k.pollEvents().asScala.map(_.context.toString).toList
+        k.reset()
+        names
+      }.filter(_.startsWith("delta-")).toList
+    watch.close()
+    assert(deleted.isEmpty, deleted)
     val got = Materialize.readTable(spark, table).get.collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == (0 until 8).map(i => (s"k$i", i.toLong)).toSet)
+    assert(got == (0 until n).map(i => (s"k$i", i.toLong)).toSet)
     val m = Materialize.currentManifest(table).get
-    assert(m.deltas.size == 8 && m.deltas.distinct.size == 8)
+    assert(m.deltas.size == n && m.deltas.distinct.size == n)
+    // every delta dir holds exactly its own writer's row
+    assert(m.deltas.map(d => spark.read.parquet(s"$table/$d").count()).forall(_ == 1L))
     // lock file released
-    assert(!Files.exists(java.nio.file.Paths.get(table, "_LOCK")))
+    assert(!Files.exists(Paths.get(table, "_LOCK")))
   }
 
   test("concurrent appendDelta with auto-compaction converges to the full row set") {
