@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,22 +30,9 @@ import org.apache.spark.sql.functions._
   */
 object CurateBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-curatebench-$cores")
-      .config("spark.sql.shuffle.partitions", math.max(cores * 4, 32))
-      // multi-GB corpus: the 128 MB default bin-packs the scan into ~7
-      // tasks regardless of core count (the KgBench scaling killer)
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(cores: Int): SparkSession =
+    Sessions.local(cores, appName = Some(s"graft-curatebench-$cores"),
+      partitions = Some(math.max(cores * 4, 32)), multiGbInputs = true).spark
 
   private final case class Stage(name: String, secs: Double, rows: Long,
       caps: Map[String, Map[String, Long]])
@@ -89,7 +76,9 @@ object CurateBench {
     // per-source budgets = half of each source's kept mass — a pure
     // deterministic function of the kept frame (one O(sources) agg), so the
     // selection does real work at ANY factor
-    val budgets = kept.groupBy(col("source"))
+    // (null sources are excluded: they would key the map with null and the
+    // mix drops them anyway)
+    val budgets = kept.filter(col("source").isNotNull).groupBy(col("source"))
       .agg(sum(col("n_chars").cast("long")).as("w"))
       .collect().map(r => r.getString(0) -> math.max(1L, r.getLong(1) / 2)).toMap
     val mixed = stage("mixed") {
@@ -111,16 +100,6 @@ object CurateBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fixDir = sys.env.getOrElse("SPARK_GRAFT_CURATE_DIR",
       s"/tmp/graft-curate-${factor}x")
-    val stageBase = s"/tmp/graft-curate-stage"
-
-    def wipeStage(): Unit = {
-      val d = Paths.get(stageBase)
-      if (Files.exists(d))
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Files.delete(f); () })
-      Files.createDirectories(d)
-      ()
-    }
 
     // fixture generation at full width (deterministic per-id streams — the
     // fixture bytes do not depend on the generating parallelism)
@@ -135,6 +114,19 @@ object CurateBench {
         "\"" + site + "\":" + m.toSeq.sortBy(_._1)
           .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       }.mkString("{", ",", "}")
+
+    // private to this run: concurrent runs (or runs at other factors) never
+    // wipe each other's staging tables
+    val stageDir = Files.createTempDirectory(
+      s"graft-curate-stage-${factor}x-${ProcessHandle.current.pid}-")
+    val stageBase = stageDir.toString
+    def deleteStage(): Unit = if (Files.exists(stageDir)) {
+      val all = Files.walk(stageDir)
+      try all.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => { Files.delete(f); () })
+      finally all.close()
+    }
+    def wipeStage(): Unit = { deleteStage(); Files.createDirectories(stageDir); () }
 
     // min-of-reps per level (the noisy-host protocol); caps from the best rep
     def timedLevel(cores: Int): (Double, Seq[Stage]) = {
@@ -154,8 +146,8 @@ object CurateBench {
       (best, stages)
     }
 
-    val (loSecs, loStages) = timedLevel(loCores)
-    val (hiSecs, hiStages) = timedLevel(hiCores)
+    val ((loSecs, loStages), (hiSecs, hiStages)) =
+      try (timedLevel(loCores), timedLevel(hiCores)) finally deleteStage()
     loStages.zip(hiStages).foreach { case (a, b) =>
       require(a.rows == b.rows,
         s"parallelism changed ${a.name}: ${a.rows} vs ${b.rows}")

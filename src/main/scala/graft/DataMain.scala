@@ -348,17 +348,9 @@ object DataMain {
     val out = args.getOrElse("out", die("--out is required"))
     val cores = args.getOrElse("cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
 
-    val hadSession = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val builder = SparkSession.builder().appName("megamindspark-data")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    if (!new org.apache.spark.SparkConf().contains("spark.master"))
-      builder.master(s"local[$cores]")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val session = Sessions.local(cores.toInt,
+      appName = Some("megamindspark-data"), ui = true)
+    val spark = session.spark
 
     val result = try run(spark, op, in, args) catch {
       case e: IllegalArgumentException => die(e.getMessage)
@@ -366,6 +358,6 @@ object DataMain {
     result.write.mode("overwrite").parquet(out)
     val rows = spark.read.parquet(out).count()
     println(s"[graft] $op: wrote $rows rows to $out")
-    if (!hadSession) spark.stop()
+    session.stopIfCreated()
   }
 }

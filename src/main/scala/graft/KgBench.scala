@@ -17,29 +17,11 @@ import graft.kg.{Link, Pipeline, Transcripts}
   */
 object KgBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-kgbench-$cores")
-      // 4 partitions per core: bounds per-task sort/spill chunks at large
-      // corpora; AQE coalesces small stages back down
-      .config("spark.sql.shuffle.partitions", math.max(cores * 4, 32))
-      // input split sizing: the default 128 MB maxPartitionBytes bin-packs a
-      // sub-GB compressed corpus into ~7 scan tasks, capping the scan +
-      // shuffle-write stage at 7-wide REGARDLESS of core count — the single
-      // biggest scaling-efficiency killer measured on this bench. 16 MB
-      // keeps the scan at least as wide as the machine. (On a real cluster
-      // the corpus is TBs, so the default split is already thousands wide;
-      // this matters only when benching multi-GB inputs.)
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // 4 shuffle partitions per core: bounds per-task sort/spill chunks at
+  // large corpora; AQE coalesces small stages back down
+  private def session(cores: Int): SparkSession =
+    Sessions.local(cores, appName = Some(s"graft-kgbench-$cores"),
+      partitions = Some(math.max(cores * 4, 32)), multiGbInputs = true).spark
 
   def main(args: Array[String]): Unit = {
     val nConvs = args.lift(0).map(_.toInt).getOrElse(200000)

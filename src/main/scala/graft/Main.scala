@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.kg.{Incremental, Link, Materialize, Pipeline}
@@ -95,20 +94,11 @@ object Main {
       die("--resolve-every requires --stream (use --resolve for batch)")
     stageDir.foreach(d => sys.props("graft.stage.dir") = d)
 
-    // embedded use (tests, notebooks): getOrCreate joins a live session —
-    // which we then must not stop on the way out
-    val hadSession = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val builder = SparkSession.builder().appName("megamindspark")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    // spark-submit's --master wins; default to local only when unset
-    if (!new org.apache.spark.SparkConf().contains("spark.master"))
-      builder.master(s"local[$cores]")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // embedded use (tests, notebooks) joins a live session, which is then
+    // left running on the way out
+    val session = Sessions.local(cores.toInt, appName = Some("megamindspark"),
+      ui = true)
+    val spark = session.spark
 
     val dict = dictPath.map(spark.read.parquet(_)).getOrElse(Pipeline.emptyDict(spark))
     val linkCfg = Link.Config(fuzzy = fuzzy, jaccardThreshold = threshold)
@@ -128,7 +118,7 @@ object Main {
         import spark.implicits._
         val turns = spark.read.parquet(in).as[graft.model.Model.Turn]
         val n = Incremental.run(turns, dict, out, runId, nBuckets = buckets,
-          linkCfg = linkCfg, recordCounts = false)
+          linkCfg = linkCfg)
         println(s"[graft] processed $n/$buckets buckets (run-id=$runId; " +
           "already-done buckets skipped)")
       case enc =>
@@ -153,6 +143,6 @@ object Main {
     val edges = Materialize.readTable(spark, s"$out/edges").map(_.count()).getOrElse(0L)
     val nodes = Materialize.readTable(spark, s"$out/nodes").map(_.count()).getOrElse(0L)
     println(s"[graft] table $out: $edges edges, $nodes nodes")
-    if (!hadSession) spark.stop()
+    session.stopIfCreated()
   }
 }

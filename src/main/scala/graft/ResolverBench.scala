@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Large-scale rehearsal of the in-stream delta resolver (megamind's
@@ -39,14 +38,7 @@ object ResolverBench {
       if (p % 3 == 0) p - 1 else p
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cores).spark
 
     val base = Files.createTempDirectory("graft-resolver-bench").toString
     val inDir = s"$base/in"

@@ -142,7 +142,7 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-inc-q").toString
       graft.kg.Incremental.run(Transcripts.fromTestdata(s, dir),
         Pipeline.emptyDict(s), out, "verify-run", nBuckets = 2,
-        linkCfg = Link.Config(fuzzy = false), recordCounts = false)
+        linkCfg = Link.Config(fuzzy = false))
       Materialize.readTable(s, s"$out/edges").get
         .orderBy(Materialize.edgeKey.map(col): _*)
     }),
@@ -183,7 +183,7 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-resolve-q").toString
       graft.kg.Incremental.run(Transcripts.fromTestdataResolve(s, dir),
         Pipeline.emptyDict(s), out, "resolve-run", nBuckets = 2,
-        linkCfg = Link.Config(fuzzy = false), recordCounts = false)
+        linkCfg = Link.Config(fuzzy = false))
       graft.kg.Incremental.resolveDisjoint(s, out,
         Link.Config(fuzzy = true, exactSameAs = true, jaccardThreshold = 0.8,
           fuzzyTypes = Seq("Person")))

@@ -150,7 +150,6 @@ object Incremental {
       nBuckets: Int = 16,
       linkCfg: Link.Config = Link.Config(fuzzy = false),
       failAtBucket: Option[Int] = None,
-      recordCounts: Boolean = false,
       compactEvery: Int = 8,
       maxConcurrentBuckets: Int = 2): Int = {
     val spark = turns.sparkSession
@@ -170,7 +169,6 @@ object Incremental {
         throw new RuntimeException(s"injected failure at bucket $b"))
       val t0 = System.currentTimeMillis()
       val slice = input.filter(pmod(hash(col("conv_id")), lit(nBuckets)) === b)
-      val rowsIn = if (recordCounts) slice.count() else -1L
       val lshSeqBefore = graft.ops.CapMetrics.seqOf("link.lsh")
       val r = Pipeline.run(slice, dict, linkCfg)
       // per-bucket DELTA append: O(bucket) bytes written per bucket instead
@@ -187,16 +185,14 @@ object Incremental {
         () => Materialize.appendDelta(spark, s"$outDir/nodes", r.nodes,
           Seq("guid", "entity_type"), compactEvery = compactEvery,
           dedupStaged = false))
-      // count the BUCKET's delta, not the whole table: an O(table) count per
-      // bucket is O(B * table-read) across B buckets — the wrong default
-      // posture at corpus scale (and `recordCounts` itself defaults off)
-      val rowsOut = if (recordCounts) r.edges.count() else -1L
       // free this bucket's pipeline caches (raw-triple persist + registry
       // checkpoint) — without this, blocks accumulate once per bucket for
       // the whole session (merged tables are parquet-backed, independent)
       r.close()
+      // rows_in / rows_out stay -1 (not counted): a count per bucket is an
+      // extra Spark job each, O(B * bucket-read) across B buckets
       appendCheckpoint(spark, outDir,
-        Checkpoint(runId, "pipeline", b, "done", rowsIn, rowsOut,
+        Checkpoint(runId, "pipeline", b, "done", -1L, -1L,
           t0, System.currentTimeMillis()))
       // cap observability into the run's _metrics table ("no silent caps"):
       // fuzzy LSH bucket drops for THIS bucket's linking pass — recorded
@@ -209,8 +205,8 @@ object Incremental {
           }
         else Seq.empty
       appendMetrics(spark, outDir, Seq(
-        (runId, "pipeline", b, "rows_in", rowsIn),
-        (runId, "pipeline", b, "edges_bucket_out", rowsOut)) ++ lshCaps)
+        (runId, "pipeline", b, "rows_in", -1L),
+        (runId, "pipeline", b, "edges_bucket_out", -1L)) ++ lshCaps)
       processed.incrementAndGet()
       ()
     }

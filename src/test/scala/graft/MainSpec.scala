@@ -89,8 +89,7 @@ class MainSpec extends AnyFunSuite {
     // library mirror of Main's transcript + LSH-resolve path
     graft.kg.Incremental.run(turns, Pipeline.emptyDict(spark), s"$base/kgB",
       "main", nBuckets = 2,
-      linkCfg = Link.Config(fuzzy = false, jaccardThreshold = 0.8),
-      recordCounts = false)
+      linkCfg = Link.Config(fuzzy = false, jaccardThreshold = 0.8))
     graft.kg.Incremental.resolveDisjoint(spark, s"$base/kgB",
       Link.Config(fuzzy = true, exactSameAs = false, jaccardThreshold = 0.8))
     val want = edgeSet(Materialize.readTable(spark, s"$base/kgB/edges").get)
@@ -110,8 +109,7 @@ class MainSpec extends AnyFunSuite {
 
     graft.kg.Incremental.run(turns, Pipeline.emptyDict(spark), s"$base/kgM",
       "main", nBuckets = 2,
-      linkCfg = Link.Config(fuzzy = true, jaccardThreshold = 0.8),
-      recordCounts = false)
+      linkCfg = Link.Config(fuzzy = true, jaccardThreshold = 0.8))
     val want = edgeSet(Materialize.readTable(spark, s"$base/kgM/edges").get)
     assert(got == want && got.nonEmpty)
     // per-bucket staging dirs are deleted by Result.close — no disk leak
@@ -131,8 +129,7 @@ class MainSpec extends AnyFunSuite {
 
     graft.kg.Incremental.run(turns, Pipeline.emptyDict(spark), s"$base/kgB",
       "main", nBuckets = 2,
-      linkCfg = Link.Config(fuzzy = false, jaccardThreshold = 0.8),
-      recordCounts = false)
+      linkCfg = Link.Config(fuzzy = false, jaccardThreshold = 0.8))
     graft.kg.Incremental.resolveDisjoint(spark, s"$base/kgB",
       Link.Config(fuzzy = true, exactSameAs = true, jaccardThreshold = 0.8))
     val want = edgeSet(Materialize.readTable(spark, s"$base/kgB/edges").get)

@@ -5,15 +5,6 @@ import org.apache.spark.sql.SparkSession
 /** One SparkSession shared across all suites (ScalaTest runs them in one
   * forked JVM — build.sbt `Test / fork := true`). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Sessions.local(4, appName = Some("graft-test")).spark
 }

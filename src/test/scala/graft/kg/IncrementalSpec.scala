@@ -168,7 +168,7 @@ class IncrementalSpec extends AnyFunSuite {
     // bucketed runs link exactly (fuzzy off): " jr" variants stay split...
     val out = java.nio.file.Files.createTempDirectory("graft-resolve").toString
     Incremental.run(turns, Pipeline.emptyDict(spark), out, "r", nBuckets = 3,
-      linkCfg = Link.Config(fuzzy = false), recordCounts = false)
+      linkCfg = Link.Config(fuzzy = false))
     val personsBefore = Materialize.readTable(spark, s"$out/nodes").get
       .filter($"entity_type" === "Person").count()
     assert(personsBefore > refPersons) // divergence is real pre-resolve
