@@ -1,0 +1,50 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{broadcast, count, lit, sum}
+
+import graft.ops.CapMetrics
+
+/** The one policy behind every driver-lane and broadcast-hint decision (an
+  * explicit hint is never demoted by AQE): a frame is collected to, or
+  * broadcast from, the driver only when its estimated heap cost fits an
+  * eighth of the driver heap. Each site measures its frame and prices its
+  * rows; every decision is recorded as CapMetrics `gate.<site>`. */
+object SizeGate {
+
+  // driver heap per row of a broadcast hash relation keyed by at most 16
+  // bytes: the collected row, its relation slot and the serialized copy
+  private val BroadcastRowBytes = 128L
+
+  // process-wide, not thread-local: gates also run on awaitBoth pool threads
+  private val forced = new AtomicInteger(0)
+
+  /** The heap bytes one gated frame may use on the driver. */
+  def budget: Long = Runtime.getRuntime.maxMemory / 8
+
+  /** Rows of `df` and the sum of `units` over them, in one agg pass. */
+  def measure(df: DataFrame, units: Column): (Long, Long) = {
+    val r = df.agg(count(lit(1)), sum(units)).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** Whether `rows` rows costing `heapBytes` of driver heap fit [[budget]]. */
+  def fits(site: String, rows: Long, heapBytes: Long): Boolean = {
+    val taken = forced.get == 0 && heapBytes <= budget
+    CapMetrics.record(s"gate.$site",
+      Map("rows" -> rows, "heap_bytes" -> heapBytes, "taken" -> (if (taken) 1L else 0L)))
+    taken
+  }
+
+  /** `df` hinted for broadcast when its `rows` fit as a hash relation. */
+  def broadcastIfFits(site: String, df: DataFrame, rows: Long): DataFrame =
+    if (fits(site, rows, rows * BroadcastRowBytes)) broadcast(df) else df
+
+  /** Runs `body` with every gate answering "does not fit" (tests only). */
+  private[graft] def forceDistributed[T](body: => T): T = {
+    forced.incrementAndGet()
+    try body finally forced.decrementAndGet()
+  }
+}

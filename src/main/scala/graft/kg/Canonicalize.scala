@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * strategies chosen by measured edge count (the same adaptive posture as
   * Spark's own broadcast-join threshold):
   *
-  *  - '''Small edge set''' (≤ `driverThreshold` rows): union-find on the
+  *  - '''Small edge set''' (fits [[graft.SizeGate]]): union-find on the
   *    driver. Same-as edges are a similarity-join OUTPUT — pairs of distinct
   *    entity keys judged equal — which is orders of magnitude smaller than
   *    the corpus; below the threshold the DataFrame loop's per-iteration job
@@ -47,19 +47,15 @@ object Canonicalize {
   /** Input: edge list (entity_type, key_a, key_b); undirected semantics.
     * Output: (entity_type, key, component).
     *
-    * Driver strategy is gated on BOTH row count and estimated bytes: the same
+    * Driver strategy is gated on BOTH row count and string length: the same
     * agg pass that counts the checkpointed edge set sums its string lengths,
-    * and `collect()` happens only under `driverThreshold` rows AND
-    * `maxDriverStringBytes` of raw UTF-8 (Row/String/tuple-key object
-    * overhead on the driver is ~8x the raw bytes, so the 128 MB default caps
-    * driver heap use around a GB — same-as edges are a similarity-join
-    * OUTPUT, orders of magnitude smaller than the corpus, and the
-    * distributed star path's per-iteration driver scheduling overhead is a
-    * measured scaling-efficiency tax, so the driver path is preferred while
-    * it safely fits). */
-  def connectedComponents(sameAs: DataFrame, maxIter: Int = 25,
-      driverThreshold: Int = 2000000,
-      maxDriverStringBytes: Long = 128L * 1024 * 1024): DataFrame = {
+    * and `collect()` happens only when their driver heap cost fits
+    * [[graft.SizeGate]] (same-as edges are a similarity-join OUTPUT, orders of
+    * magnitude smaller than the corpus, and the distributed star path's
+    * per-iteration driver scheduling overhead is a measured
+    * scaling-efficiency tax, so the driver path is preferred while it
+    * safely fits). */
+  def connectedComponents(sameAs: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = sameAs.sparkSession
     val fwd = sameAs.select(col("entity_type"), col("key_a").as("src"), col("key_b").as("dst"))
     val edges = fwd.unionByName(
@@ -70,14 +66,18 @@ object Canonicalize {
     // upstream similarity join once per CollectLimit scale-up round —
     // measured 8x slower than checkpoint+count.)
     val cp = edges.localCheckpoint(eager = true)
-    val sized = cp.agg(count(lit(1)),
-      sum(length(col("entity_type")) + length(col("src")) + length(col("dst")))).head()
-    val n = sized.getLong(0)
-    val bytes = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-    if (n <= driverThreshold && bytes <= maxDriverStringBytes)
+    if (edgesFitDriver("canonicalize", cp, "entity_type", "src", "dst"))
       componentsOnDriver(spark,
         cp.collect().iterator.map(r => (r.getString(0), r.getString(1), r.getString(2))))
     else labelsByStar(cp, maxIter)
+  }
+
+  /** Whether the string edge rows `e` fit the driver, priced per row (the
+    * Row, its Strings, the (type, key) tuples and their union-find and
+    * vertex-set entries) and per character of `cols`. */
+  private[kg] def edgesFitDriver(site: String, e: DataFrame, cols: String*): Boolean = {
+    val (rows, chars) = graft.SizeGate.measure(e, cols.map(c => length(col(c))).reduce(_ + _))
+    graft.SizeGate.fits(site, rows, rows * 384L + chars * 2L)
   }
 
   /** Spark's string order (unsigned UTF-8 bytes — what `<` and `min` compare

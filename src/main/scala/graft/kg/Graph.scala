@@ -25,22 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Row+byte gate for the driver fast paths below (the
-    * [[Canonicalize.connectedComponents]] adaptive posture): one agg pass
-    * over the checkpointed distinct-edge frame measures rows AND raw string
-    * bytes; at or below both limits the iteration runs on the driver —
-    * per-iteration DataFrame-loop scheduling overhead dwarfs the work for
-    * small graphs (each distributed iteration is a join + agg + checkpoint
-    * job; 10 iterations ≈ 2-3 s of pure orchestration at any size) — above
-    * them the distributed loop is authoritative. */
-  private def fitsDriver(e: DataFrame, driverThreshold: Long,
-      maxDriverStringBytes: Long): Boolean = {
-    val r = e.agg(count(lit(1)),
-      sum(length(col("src")) + length(col("dst")))).head()
-    r.getLong(0) <= driverThreshold &&
-      (r.isNullAt(1) || r.getLong(1) <= maxDriverStringBytes)
-  }
-
   /** Driver-side power method over a collected edge list — the identical
     * update rule in IEEE double arithmetic; contribution sums run in sorted
     * (src, dst) edge order (deterministic across runs; the distributed
@@ -92,12 +76,12 @@ object Graph {
   /** Distinct-edge PageRank. `edges` needs (src, dst) columns; multi-edges
     * collapse. Returns (node, rank). */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-      danglingRedistribution: Boolean = false, tol: Double = 0.0,
-      driverThreshold: Long = 2000000L,
-      maxDriverStringBytes: Long = 128L * 1024 * 1024): DataFrame = {
+      danglingRedistribution: Boolean = false, tol: Double = 0.0): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(eager = true)
-    if (fitsDriver(e, driverThreshold, maxDriverStringBytes)) {
+    // driver loop when the edges fit: per-iteration DataFrame-loop scheduling
+    // (10 join + agg + checkpoint jobs ≈ 2-3 s) dwarfs small-graph work
+    if (Canonicalize.edgesFitDriver("graph.pagerank", e, "src", "dst")) {
       val spark = edges.sparkSession
       val rows = e.collect().map(r => (r.getString(0), r.getString(1)))
       e.unpersist()
@@ -157,12 +141,10 @@ object Graph {
     * This is the general traversal the 2-hop query specializes: ego
     * networks, reachability cones, provenance closures over the KG's
     * (subj_guid, obj_guid) edges. */
-  def kHop(edges: DataFrame, seeds: DataFrame, k: Int,
-      driverThreshold: Long = 2000000L,
-      maxDriverStringBytes: Long = 128L * 1024 * 1024): DataFrame = {
+  def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(eager = true)
-    if (fitsDriver(e, driverThreshold, maxDriverStringBytes)) {
+    if (Canonicalize.edgesFitDriver("graph.khop", e, "src", "dst")) {
       // driver BFS over the collected adjacency — pure integer hop counts,
       // bit-identical to the distributed loop by construction; per-hop the
       // distributed form costs join + anti-join + two checkpoints of pure

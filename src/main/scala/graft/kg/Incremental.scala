@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SizeGate
 import graft.model.Model._
 
 /** Incremental/resumable execution with per-partition checkpoints, lineage
@@ -263,16 +264,11 @@ object Incremental {
   // and 62-char keys (JDK 17, G1) — about 2.1 KB a key, which
   // DriverBytesPerKey + DriverBytesPerChar per character bounds. A checked
   // candidate pair (a tuple in the dedup set) costs about DriverBytesPerPair.
-  // The lane may use an eighth of the heap: about 100k 20-char keys at a
-  // 2g driver, scaling with the heap.
+  // The SizeGate budget admits about 100k 20-char keys at a 2g driver,
+  // scaling with the heap.
   private val DriverBytesPerKey = 2048L
   private val DriverBytesPerChar = 16L
   private val DriverBytesPerPair = 160L
-  private def driverBudget: Long = Runtime.getRuntime.maxMemory / 8
-
-  /** Whether `rows` keys of `chars` total string length fit the driver lane. */
-  private def fitsDriver(rows: Long, chars: Long): Boolean =
-    rows * DriverBytesPerKey + chars * DriverBytesPerChar <= driverBudget
 
   /** What one resolver pass examined and changed. */
   final case class ResolveStats(touched: Long, total: Long, rewritten: Long)
@@ -295,9 +291,9 @@ object Incremental {
     *
     * Discovery runs in one of two lanes, chosen by size. The pass's first
     * agg over the flagged key set measures its rows and key bytes; when they
-    * fit a budget of `Runtime.maxMemory` / 8 at a measured per-key driver
-    * cost, the LSH pass collects the keys ONCE and does banding, the bucket
-    * cap, the delta split and the Jaccard check on the driver
+    * fit [[graft.SizeGate]] at a measured per-key driver cost, the LSH pass
+    * collects the keys ONCE and does banding, the bucket cap, the delta
+    * split and the Jaccard check on the driver
     * ([[Link.fuzzySameAsOnDriver]]), then labels components with
     * [[Canonicalize.componentsOnDriver]] — a handful of Spark jobs instead of
     * ~20 per pass, for identical `cc` rows. Above the gate, or on the exact
@@ -320,15 +316,7 @@ object Incremental {
     */
   def resolveDisjoint(spark: SparkSession, outDir: String,
       cfg: Link.Config = Link.Config(),
-      fullRediscovery: Boolean = false): ResolveStats =
-    resolvePass(spark, outDir, cfg, fullRediscovery, lane = None)
-
-  /** [[resolveDisjoint]] with the discovery lane forced — `Some(true)`
-    * driver, `Some(false)` distributed — instead of gated by size: the entry
-    * point of the lane-equality tests. */
-  private[kg] def resolvePass(spark: SparkSession, outDir: String,
-      cfg: Link.Config, fullRediscovery: Boolean,
-      lane: Option[Boolean]): ResolveStats = {
+      fullRediscovery: Boolean = false): ResolveStats = {
     val nodesOpt = Materialize.readTable(spark, s"$outDir/nodes")
     val edgesOpt = Materialize.readTable(spark, s"$outDir/edges")
     if (nodesOpt.isEmpty || edgesOpt.isEmpty) return ResolveStats(0L, 0L, 0L)
@@ -380,7 +368,8 @@ object Incremental {
       return ResolveStats(0L, total, 0L)
     }
 
-    val wantDriver = !cfg.exactSameAs && lane.getOrElse(fitsDriver(total, flaggedBytes))
+    val wantDriver = !cfg.exactSameAs && SizeGate.fits("resolve", total,
+      total * DriverBytesPerKey + flaggedBytes * DriverBytesPerChar)
     val (cc0, freeDiscovery, onDriver) = sameAsComponents(flagged, cfg, wantDriver)
     val cc = cc0.select(col("entity_type").as("cc_et"), col("key").as("cc_key"),
       col("component"))
@@ -509,7 +498,7 @@ object Incremental {
       else Link.fuzzySameAsOnDriver(
         flagged.select("entity_type", "dict_key", "is_new").collect()
           .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))),
-        cfg, maxPairs = driverBudget / DriverBytesPerPair)
+        cfg, maxPairs = SizeGate.budget / DriverBytesPerPair)
     onDriver match {
       case Some(pairs) =>
         (Canonicalize.componentsOnDriver(flagged.sparkSession, pairs), () => (), true)

@@ -73,7 +73,7 @@ object Bpe {
     * Execution (the r5 "one Spark job per merge" fix): the corpus reduces
     * to the distinct-word frequency table in ONE distributed scan as
     * before, and then — when the measured vocabulary fits
-    * `maxDriverVocab` rows — the merge loop runs ON THE DRIVER with
+    * [[graft.SizeGate]] — the merge loop runs ON THE DRIVER with
     * incremental pair counts: a TreeSet argmax under the identical total
     * order (cnt desc, a asc, b asc) and O(words-containing-pair) count
     * updates per merge, instead of a full distributed recount + driver
@@ -91,7 +91,6 @@ object Bpe {
     * ASCII corpora convention. */
   def learnMerges(docs: DataFrame, nMerges: Int,
       textCol: String = "text",
-      maxDriverVocab: Long = 2000000L,
       heavyHitterTopK: Int = 0): Seq[(Int, String, String)] = {
     require(nMerges > 0, s"learnMerges needs nMerges > 0: $nMerges")
     val spark = docs.sparkSession
@@ -103,8 +102,9 @@ object Bpe {
       else all
     }
     val wordsCp = wordsBase.localCheckpoint(true)
-    val nVocab = wordsCp.count()
-    if (nVocab <= maxDriverVocab) {
+    val (nVocab, nChars) = graft.SizeGate.measure(wordsCp, length(col("word")))
+    // per char: a symbol ref and its pair's count and occurrence entries
+    if (graft.SizeGate.fits("bpe.vocab", nVocab, nVocab * 128L + nChars * 64L)) {
       val vocab = wordsCp.as[(String, Long)].collect()
       wordsCp.unpersist()
       return learnMergesDriver(vocab, nMerges)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.SizeGate
 import graft.functions.TextHash
 
 /** Benchmark decontamination — the training-data gate that keeps evaluation
@@ -49,10 +50,8 @@ object Contamination {
     * own row, with hit counts attributed to all of them).
     */
   def flagContaminated(train: DataFrame, benchmark: DataFrame,
-      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text",
-      maxBroadcastRows: Long = 50000000L): DataFrame = {
-    val m = flagContaminatedManaged(train, benchmark, shingleN, idCol, textCol,
-      maxBroadcastRows)
+      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val m = flagContaminatedManaged(train, benchmark, shingleN, idCol, textCol)
     val out = m.pairs.localCheckpoint(eager = true)
     m.free()
     out
@@ -62,10 +61,8 @@ object Contamination {
     * internal eager checkpoint (the measured benchmark hash set) — call
     * `free()` only after materializing. */
   def flagContaminatedManaged(train: DataFrame, benchmark: DataFrame,
-      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text",
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
-    val m = hitCountsManaged(train, benchmark, shingleN, idCol, textCol,
-      maxBroadcastRows)
+      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text"): Dedup.ManagedPairs = {
+    val m = hitCountsManaged(train, benchmark, shingleN, idCol, textCol)
     val out = train.select(col(idCol))
       .join(m.pairs, Seq(idCol), "left")
       .na.fill(0L, Seq("n_hits"))
@@ -79,15 +76,13 @@ object Contamination {
     * assembly) left-joins this small frame instead of paying a second
     * corpus scan + corpus-sized join. */
   def hitCountsManaged(train: DataFrame, benchmark: DataFrame,
-      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text",
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
+      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text"): Dedup.ManagedPairs = {
     // global distinct benchmark hash set, measured once (8-byte rows: the
     // row count IS the size estimate, no second bytes pass needed)
     val benchSet = shingleHashes(benchmark, idCol, textCol, shingleN)
       .select(col("shingle_h")).distinct()
       .localCheckpoint(eager = true)
-    val nBench = benchSet.count()
-    val probe = if (nBench <= maxBroadcastRows) broadcast(benchSet) else benchSet
+    val probe = SizeGate.broadcastIfFits("contamination", benchSet, benchSet.count())
 
     val trainSh = shingleHashes(train, idCol, textCol, shingleN)
     // per-doc shingles are DISTINCT by construction (Set in the kernel), so

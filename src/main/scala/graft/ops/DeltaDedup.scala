@@ -258,10 +258,9 @@ object DeltaDedup {
         .select(col("band"), col("band_hash")))
     // structurally ≤ rows/maxBandBucket entries; broadcast only when
     // measured small (explicit hints are never demoted by AQE)
-    val overSmall = over.count() <= 1500000L
+    val overP = graft.SizeGate.broadcastIfFits("dedup.delta.cap", over, over.count())
     def capped(df: DataFrame): DataFrame =
-      df.join(if (overSmall) broadcast(over) else over,
-        Seq("band", "band_hash"), "left_anti")
+      df.join(overP, Seq("band", "band_hash"), "left_anti")
 
     val candidates = capped(fresh).select(col("doc_id").as("doc_a"),
         col("band"), col("band_hash"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.SizeGate
 import graft.functions.TextHashKernels
 
 /** Exact duplicate-SPAN detection (Lee et al., ACL 2022, "Deduplicating
@@ -72,10 +73,8 @@ object DupSpans {
   /** Sealing variant of [[dupSpanStatsManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal duplicated-set checkpoint. */
   def dupSpanStats(docs: DataFrame, windowW: Int = 8, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text",
-      maxBroadcastRows: Long = 50000000L): DataFrame = {
-    val m = dupSpanStatsManaged(docs, windowW, minDocs, idCol, textCol,
-      maxBroadcastRows)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val m = dupSpanStatsManaged(docs, windowW, minDocs, idCol, textCol)
     val out = m.pairs.localCheckpoint(eager = true)
     m.free()
     out
@@ -87,8 +86,7 @@ object DupSpans {
     * the gap exceeds `w`, i.e. the next window starts past the previous
     * coverage end), so downstream coverage sums never double-count. */
   private def spans(docs: DataFrame, windowW: Int, minDocs: Int,
-      idCol: String, textCol: String, maxBroadcastRows: Long)
-      : Dedup.ManagedPairs = {
+      idCol: String, textCol: String): Dedup.ManagedPairs = {
     require(windowW >= 1, s"windowW must be >= 1: $windowW")
     require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
     val wins = windows(docs, idCol, textCol, windowW)
@@ -100,8 +98,7 @@ object DupSpans {
       .filter(col("__nd") >= minDocs)
       .select(col("win_h"))
       .localCheckpoint(eager = true)
-    val nDup = dupSet.count()
-    val probe = if (nDup <= maxBroadcastRows) broadcast(dupSet) else dupSet
+    val probe = SizeGate.broadcastIfFits("dup_spans", dupSet, dupSet.count())
 
     // duplicated window positions -> gaps-and-islands span merge; the window
     // and BOTH aggregations reuse the post-join doc-id partitioning
@@ -121,9 +118,8 @@ object DupSpans {
     * checkpoint of the measured duplicated-window set — call `free()` only
     * after materializing (the [[Dedup.ManagedPairs]] contract). */
   def dupSpanStatsManaged(docs: DataFrame, windowW: Int = 8, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text",
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
-    val m = spans(docs, windowW, minDocs, idCol, textCol, maxBroadcastRows)
+      idCol: String = "doc_id", textCol: String = "text"): Dedup.ManagedPairs = {
+    val m = spans(docs, windowW, minDocs, idCol, textCol)
     val spansDf = m.pairs
     val perDoc = spansDf.groupBy(col(idCol))
       .agg(sum(col("__nw")).as("n_dup_windows"),
@@ -180,10 +176,8 @@ object DupSpans {
     * strictly smaller than the text already on the row; the collect +
     * removal join reuses the doc-id partitioning from the span merge. */
   def removeDupSpans(docs: DataFrame, windowW: Int = 8, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text",
-      maxBroadcastRows: Long = 50000000L): DataFrame = {
-    val m = removeDupSpansManaged(docs, windowW, minDocs, idCol, textCol,
-      maxBroadcastRows)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val m = removeDupSpansManaged(docs, windowW, minDocs, idCol, textCol)
     val out = m.pairs.localCheckpoint(eager = true)
     m.free()
     out
@@ -192,9 +186,8 @@ object DupSpans {
   /** [[removeDupSpans]] as a [[Dedup.ManagedPairs]] (lazy plan + explicit
     * free of the duplicated-window-set checkpoint). */
   def removeDupSpansManaged(docs: DataFrame, windowW: Int = 8,
-      minDocs: Int = 2, idCol: String = "doc_id", textCol: String = "text",
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
-    val m = spans(docs, windowW, minDocs, idCol, textCol, maxBroadcastRows)
+      minDocs: Int = 2, idCol: String = "doc_id", textCol: String = "text"): Dedup.ManagedPairs = {
+    val m = spans(docs, windowW, minDocs, idCol, textCol)
     // sorted disjoint (start, len) arrays; len = mx - mn + windowW
     val perDoc = m.pairs.groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("__mn").as("mn"),

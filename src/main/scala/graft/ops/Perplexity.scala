@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.SizeGate
 import graft.functions.TextHashKernels
 
 /** Bigram language-model scoring of a raw corpus against a (small) target
@@ -50,9 +51,8 @@ object Perplexity {
 
   /** Sealing variant of [[lmScoreManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal count-table checkpoints. */
-  def lmScore(docs: DataFrame, target: DataFrame, addK: Double = 1.0,
-      maxBroadcastRows: Long = 50000000L): DataFrame = {
-    val m = lmScoreManaged(docs, target, addK, maxBroadcastRows)
+  def lmScore(docs: DataFrame, target: DataFrame, addK: Double = 1.0): DataFrame = {
+    val m = lmScoreManaged(docs, target, addK)
     val out = m.pairs.localCheckpoint(eager = true)
     m.free()
     out
@@ -61,8 +61,7 @@ object Perplexity {
   /** Lazy variant: the returned frame references the internal eager
     * checkpoints of the measured count tables — call `free()` only after
     * materializing (the [[Dedup.ManagedPairs]] contract). */
-  def lmScoreManaged(docs: DataFrame, target: DataFrame, addK: Double = 1.0,
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
+  def lmScoreManaged(docs: DataFrame, target: DataFrame, addK: Double = 1.0): Dedup.ManagedPairs = {
     require(addK > 0.0, s"addK must be > 0: $addK")
     val bk = udf(bigramHashKernel _)
 
@@ -98,8 +97,8 @@ object Perplexity {
         () => v = target.select(explode(tokK(col("text"))).as("h"))
           .agg(countDistinct(col("h"))).head().getLong(0)))
     tb.unpersist()
-    val uniP = if (nUni <= maxBroadcastRows) broadcast(uni) else uni
-    val bigP = if (nBig <= maxBroadcastRows) broadcast(big) else big
+    val uniP = SizeGate.broadcastIfFits("lm.unigram", uni, nUni)
+    val bigP = SizeGate.broadcastIfFits("lm.bigram", big, nBig)
 
     // raw corpus: one bigram scan, count-table lookups, doc-keyed agg
     val logp = log((coalesce(col("c2"), lit(0L)).cast("double") + addK) /

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.SizeGate
 import graft.functions.TextHashKernels
 
 /** Model-based quality filtering — the "quality classifier" stage of the
@@ -60,8 +61,8 @@ object QualityClassifier {
   /** Sealing variant of [[nbScoreManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal count-table checkpoints. */
   def nbScore(docs: DataFrame, positive: DataFrame, negative: DataFrame,
-      addK: Double = 1.0, maxBroadcastRows: Long = 50000000L): DataFrame = {
-    val m = nbScoreManaged(docs, positive, negative, addK, maxBroadcastRows)
+      addK: Double = 1.0): DataFrame = {
+    val m = nbScoreManaged(docs, positive, negative, addK)
     val out = m.pairs.localCheckpoint(eager = true)
     m.free()
     out
@@ -73,8 +74,7 @@ object QualityClassifier {
     * `(doc_id, n_tokens, nb_logodds float32, nb_keep)` — one row per input
     * doc, empty docs score the bare prior. */
   def nbScoreManaged(docs: DataFrame, positive: DataFrame,
-      negative: DataFrame, addK: Double = 1.0,
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
+      negative: DataFrame, addK: Double = 1.0): Dedup.ManagedPairs = {
     require(addK > 0.0, s"addK must be > 0: $addK")
     val tk = udf(tokenHashKernel _)
 
@@ -111,8 +111,8 @@ object QualityClassifier {
       .distinct().count()
     val prior = math.log(math.max(nPosDocs, 1L).toDouble) -
       math.log(math.max(nNegDocs, 1L).toDouble)
-    val posP = if (posRows <= maxBroadcastRows) broadcast(pos) else pos
-    val negP = if (negRows <= maxBroadcastRows) broadcast(neg) else neg
+    val posP = SizeGate.broadcastIfFits("nb_quality.pos", pos, posRows)
+    val negP = SizeGate.broadcastIfFits("nb_quality.neg", neg, negRows)
 
     // raw corpus: one token scan, count-table lookups, doc-keyed agg
     val w = log((coalesce(col("c_pos"), lit(0L)).cast("double") + addK) /

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SizeGate
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`embeddings(vec_id, embedding: array<float>, label)`).
   *
@@ -133,8 +135,9 @@ object Similarity {
   /** Exact top-k neighbors for each query row.
     * `queries` must have (query_id, q_embedding).
     *
-    * Plan (r5 rewrite): the query matrix is measured and — under
-    * `maxDriverQueries` rows — shipped to executors once; each corpus
+    * Plan (r5 rewrite): the query matrix is measured (rows and embedding
+    * floats, one agg pass) and — when it fits [[SizeGate]] at the driver's
+    * collect cost — shipped to executors once; each corpus
     * partition keeps a bounded per-query heap of its LOCAL top-k, so only
     * Q×partitions×k candidate rows ever shuffle, never the Q×N scored
     * cross product (the previous windowed plan shuffled+sorted 8M scored
@@ -145,12 +148,12 @@ object Similarity {
     * takes the exact global window rank — output (values, ranks AND
     * tie-breaks) is identical to the naive plan, which remains as the
     * over-gate fallback for query sets too large to ship whole. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      maxDriverQueries: Long = 2000000L): DataFrame = {
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qcnt = queries.count()
-    val scored = if (qcnt <= maxDriverQueries) {
+    val (qcnt, qFloats) = SizeGate.measure(queries, size(col("q_embedding")))
+    // per float: the collected boxed element, its primitive copy, its broadcast
+    val scored = if (SizeGate.fits("knn.queries", qcnt, qcnt * 64L + qFloats * 32L)) {
       val qs = queries
         .select(col("query_id").cast("long"), col("q_embedding"))
         .as[(Long, Seq[Float])].collect()
@@ -215,7 +218,7 @@ object Similarity {
           }
         }.toDF("query_id", "vec_id", "cos")
     } else {
-      corpus.crossJoin(broadcast(queries))
+      corpus.crossJoin(queries)
         .filter(col("query_id") =!= col("vec_id"))
         .withColumn("cos", cosine(col("q_embedding"), col("embedding")))
         .select(col("query_id"), col("vec_id"), col("cos"))
@@ -358,13 +361,7 @@ object Similarity {
 
   // ---- IVF (inverted-file) ANN ----------------------------------------------
 
-  /** `maxBroadcastProbeRows`/`Bytes` gate the probed-queries broadcast in
-    * [[ivfTopK]]: explicit broadcast hints are never demoted by AQE, and the
-    * probed frame is queries x nProbe rows EACH carrying the full embedding
-    * — un-gated it is the OOM path for large query batches. */
-  final case class IvfConfig(nLists: Int = 64, kmeansIters: Int = 5, nProbe: Int = 8,
-      maxBroadcastProbeRows: Long = 2000000L,
-      maxBroadcastProbeBytes: Long = 128L << 20)
+  final case class IvfConfig(nLists: Int = 64, kmeansIters: Int = 5, nProbe: Int = 8)
 
   /** Deterministic Lloyd k-means coarse quantizer: centroids initialized
     * from the `nLists` smallest ids (pure function of the corpus — no RNG),
@@ -376,8 +373,7 @@ object Similarity {
     * skips the quantizer (asserted in tests; cheap, process-wide). */
   private[ops] val kmeansRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def kmeansCentroids(corpus: DataFrame, cfg: IvfConfig,
-      maxDriverVecFloats: Long = 32L * 1024 * 1024): Array[Array[Double]] = {
+  def kmeansCentroids(corpus: DataFrame, cfg: IvfConfig): Array[Array[Double]] = {
     kmeansRuns.incrementAndGet()
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -390,9 +386,9 @@ object Similarity {
     // Driver fast path: Lloyd's per-iteration cost distributed is one tiny
     // mapPartitions job + a collect — at small corpus sizes that is
     // kmeansIters jobs of pure scheduling. The driver loop is
-    // SINGLE-THREADED, so the gate is a flops budget (rows × dim × nLists
-    // × iters ≤ ~2e9, well under a second of distance arithmetic), not
-    // just a memory bound — a 20k×64 corpus at nLists=64 is in, a corpus
+    // SINGLE-THREADED, so besides the SizeGate memory bound the gate is a
+    // flops budget (rows × dim × nLists × iters ≤ ~2e9, well under a second
+    // of distance arithmetic) — a 20k×64 corpus at nLists=64 is in, a corpus
     // whose assignment compute would out-cost the saved job overhead is
     // out. The driver loop REPLICATES the distributed arithmetic
     // bit-for-bit (per-PARTITION accumulation in row order, partials
@@ -400,13 +396,12 @@ object Similarity {
     // tree), so centroids — and therefore every assignment, SemDeDup
     // blocking decision and persisted index — are byte-identical to the
     // distributed path on the same corpus.
-    val nFloats = {
-      val r = vecs.toDF("vec_id", "embedding")
-        .agg(sum(size(col("embedding")))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
+    val (nRows, nFloats) =
+      SizeGate.measure(vecs.toDF("vec_id", "embedding"), size(col("embedding")))
     val driverFlops = nFloats * cfg.nLists.toLong * cfg.kmeansIters.toLong
-    if (nFloats <= maxDriverVecFloats && driverFlops <= 2000000000L) {
+    // per float: the collected primitive array and its serialized result
+    if (driverFlops <= 2000000000L &&
+        SizeGate.fits("kmeans", nRows, nRows * 128L + nFloats * 8L)) {
       // materialize rows as primitive float arrays ONCE at collect time:
       // the deserialized Seq[Float] is not guaranteed indexed, and the
       // driver loop touches every element nLists times per iteration
@@ -617,13 +612,10 @@ object Similarity {
     // same ship-volume gate as the r5 probed-broadcast (rows = queries ×
     // nProbe; bytes = embedding floats + per-row overhead), measured with
     // one agg pass over the query frame
-    val qSized = queries.agg(count(lit(1)), sum(size(col("q_embedding")))).head()
-    val qRows = qSized.getLong(0)
+    val (qRows, qFloats) = SizeGate.measure(queries, size(col("q_embedding")))
     val probeRows = qRows * cfg.nProbe
-    val probeBytes = (if (qSized.isNullAt(1)) 0L
-      else qSized.getLong(1)) * 4L * cfg.nProbe + probeRows * 24L
-    if (probeRows <= cfg.maxBroadcastProbeRows &&
-        probeBytes <= cfg.maxBroadcastProbeBytes) {
+    val probeBytes = qFloats * 4L * cfg.nProbe + probeRows * 24L
+    if (SizeGate.fits("ivf.probe", probeRows, probeBytes)) {
       val qs = queries.select(col("query_id").cast("long"), col("q_embedding"))
         .as[(Long, Seq[Float])].collect()
       def dotA(a: Array[Float], b: Array[Float]): Double = {

@@ -2,7 +2,7 @@ package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 class CanonicalizeSpec extends AnyFunSuite {
 
@@ -64,14 +64,13 @@ class CanonicalizeSpec extends AnyFunSuite {
     }
   }
 
-  // --- distributed large-star/small-star path (driverThreshold = 0) ---
+  // --- distributed large-star/small-star path (SizeGate.forceDistributed) ---
 
   private def ccStar(edges: Seq[(String, String)]): Map[String, String] = {
     import spark.implicits._
-    Canonicalize.connectedComponents(
-        edges.map { case (a, b) => ("T", a, b) }.toDF("entity_type", "key_a", "key_b"),
-        driverThreshold = 0)
-      .collect().map(r => r.getString(1) -> r.getString(2)).toMap
+    SizeGate.forceDistributed(Canonicalize.connectedComponents(
+        edges.map { case (a, b) => ("T", a, b) }.toDF("entity_type", "key_a", "key_b"))
+      .collect()).map(r => r.getString(1) -> r.getString(2)).toMap
   }
 
   test("driver union-find survives an adversarially ordered 150k-deep chain") {
@@ -105,8 +104,8 @@ class CanonicalizeSpec extends AnyFunSuite {
   test("large-star/small-star keeps entity types disjoint") {
     import spark.implicits._
     val df = Seq(("A", "x", "y"), ("B", "y", "z")).toDF("entity_type", "key_a", "key_b")
-    val labels = Canonicalize.connectedComponents(df, driverThreshold = 0)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+    val labels = SizeGate.forceDistributed(Canonicalize.connectedComponents(df).collect())
+      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     assert(labels(("A", "y")) == "x" && labels(("B", "y")) == "y")
   }
 }

@@ -2,7 +2,7 @@ package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 class GraphSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -80,7 +80,7 @@ class GraphSpec extends AnyFunSuite {
   test("pageRank driver fast path == forced distributed loop (both mirror-exact)") {
     import spark.implicits._
     // mixed shape: cycle + sinks + a chain, with dangling redistribution on
-    // one run and off on the other — driverThreshold = 0 forces the
+    // one run and off on the other — forceDistributed forces the
     // distributed iteration, the default takes the driver loop; both must
     // agree with each other and the in-memory mirror
     val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d",
@@ -89,9 +89,9 @@ class GraphSpec extends AnyFunSuite {
       val drv = Graph.pageRank(edges.toDF("src", "dst"), iters = 8,
           danglingRedistribution = dangling)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val dist = Graph.pageRank(edges.toDF("src", "dst"), iters = 8,
-          danglingRedistribution = dangling, driverThreshold = 0L)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val dist = SizeGate.forceDistributed(Graph.pageRank(edges.toDF("src", "dst"),
+          iters = 8, danglingRedistribution = dangling).collect())
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
       val want = mirror(edges, 8, 0.85, dangling = dangling)
       assert(drv.keySet == dist.keySet && drv.keySet == want.keySet)
       drv.foreach { case (k, v) =>
@@ -108,8 +108,8 @@ class GraphSpec extends AnyFunSuite {
     for (k <- Seq(1, 2, 3, 9)) {
       val drv = Graph.kHop(edges, Seq("a").toDF("node"), k).collect()
         .map(r => r.getString(0) -> r.getInt(1)).toMap
-      val dist = Graph.kHop(edges, Seq("a").toDF("node"), k,
-          driverThreshold = 0L).collect()
+      val dist = SizeGate.forceDistributed(
+          Graph.kHop(edges, Seq("a").toDF("node"), k).collect())
         .map(r => r.getString(0) -> r.getInt(1)).toMap
       assert(drv == dist, s"k=$k")
     }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 class IncrementalSpec extends AnyFunSuite {
 
@@ -237,8 +237,8 @@ class IncrementalSpec extends AnyFunSuite {
       val dict = Pipeline.emptyDict(spark)
       val passes = Seq(b1, b2).zipWithIndex.map { case (b, i) =>
         Incremental.run(b, dict, out, s"r$i", nBuckets = 1)
-        val st = Incremental.resolvePass(spark, out, cfg, fullRediscovery = false,
-          lane = Some(driver))
+        def resolve() = Incremental.resolveDisjoint(spark, out, cfg)
+        val st = if (driver) resolve() else SizeGate.forceDistributed(resolve())
         (st, graft.ops.CapMetrics.latest("link.lsh"))
       }
       (out, passes)

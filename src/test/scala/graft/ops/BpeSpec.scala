@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 class BpeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -87,11 +87,11 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("driver merge loop == forced distributed loop on the classic corpus") {
-    // maxDriverVocab = 0 forces the per-merge distributed recount; the
+    // forceDistributed forces the per-merge distributed recount; the
     // default takes the incremental driver loop — integer counts and the
     // identical argmax total order make the tables exactly equal
     val drv = Bpe.learnMerges(docs(corpus: _*), 8)
-    val dist = Bpe.learnMerges(docs(corpus: _*), 8, maxDriverVocab = 0L)
+    val dist = SizeGate.forceDistributed(Bpe.learnMerges(docs(corpus: _*), 8))
     assert(drv == dist)
   }
 

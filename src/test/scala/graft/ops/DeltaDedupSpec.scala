@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 class DeltaDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -66,6 +66,12 @@ class DeltaDedupSpec extends AnyFunSuite {
   test("ingest over sequential batches == stateless ops vs the accumulated union") {
     val dir = java.nio.file.Files.createTempDirectory("graft-deltadedup").toString
     val cfg = Dedup.MinHashConfig(jaccardThreshold = 0.5)
+    // the same batches under a bucket cap that fires (batch 2's doc 210
+    // joins docs 3 and 103 in one bucket), once per lane of the cap
+    // anti-join: broadcast by default, keyed with every gate forced off
+    val capCfg = cfg.copy(maxBandBucket = 2)
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (dirCapped, dirForced) = (tmp("graft-deltadedup-c"), tmp("graft-deltadedup-f"))
 
     val batch0 = docs((0 until 7).map(f => f.toLong -> baseText(f)): _*)
     val batch1 = docs(
@@ -80,6 +86,15 @@ class DeltaDedupSpec extends AnyFunSuite {
     Seq(batch0, batch1, batch2).zipWithIndex.foreach { case (batch, k) =>
       val res = DeltaDedup.ingest(spark, dir, batch, cfg,
         partnerTexts = Option(accumulated))
+      val capped = DeltaDedup.ingest(spark, dirCapped, batch, capCfg,
+        partnerTexts = Option(accumulated))
+      if (k == 2) assert(CapMetrics.latest("dedup.delta.ingest")("dropped_rows") > 0L)
+      val forced = SizeGate.forceDistributed(DeltaDedup.ingest(spark, dirForced, batch,
+        capCfg, partnerTexts = Option(accumulated)))
+      def rows(df: DataFrame) = df.collect().map(_.toString).toSet
+      assert(rows(forced.classified) == rows(capped.classified) &&
+        rows(forced.candidates) == rows(capped.candidates) &&
+        forced.verified.map(rows) == capped.verified.map(rows), s"batch $k forced lane")
 
       // O(delta) evidence: only this batch was shingled+minhashed
       assert(res.bandedDocs == batch.count(), s"batch $k banded too much")

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 /** [[DupSpans]] vs an in-memory brute force (window strings, no hashing) —
   * also proves the fingerprint path collision-free on these fixtures. */
@@ -55,11 +55,9 @@ class DupSpansSpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def run(w: Int, frame: org.apache.spark.sql.DataFrame = null,
-      maxBroadcastRows: Long = 50000000L)
+  private def run(w: Int, frame: org.apache.spark.sql.DataFrame = null)
       : Map[Long, (Long, Long, Long, Double)] =
-    DupSpans.dupSpanStats(Option(frame).getOrElse(docs), windowW = w,
-        maxBroadcastRows = maxBroadcastRows).collect()
+    DupSpans.dupSpanStats(Option(frame).getOrElse(docs), windowW = w).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4)))).toMap
 
@@ -85,7 +83,7 @@ class DupSpansSpec extends AnyFunSuite {
 
   test("keyed-join path (broadcast gate forced off) matches the default") {
     val a = run(w = 8)
-    val b = run(w = 8, maxBroadcastRows = 0L)
+    val b = SizeGate.forceDistributed(run(w = 8))
     assert(a == b && a.nonEmpty)
   }
 
@@ -111,10 +109,8 @@ class DupSpansSpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def runRemove(w: Int, maxBroadcastRows: Long = 50000000L)
-      : Map[Long, (String, Long)] =
-    DupSpans.removeDupSpans(docs, windowW = w,
-        maxBroadcastRows = maxBroadcastRows).collect()
+  private def runRemove(w: Int): Map[Long, (String, Long)] =
+    DupSpans.removeDupSpans(docs, windowW = w).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
 
   test("removeDupSpans == brute-force token removal (w=8 and w=4)") {
@@ -142,7 +138,7 @@ class DupSpansSpec extends AnyFunSuite {
   }
 
   test("removal keyed-join path (broadcast gate off) matches the default") {
-    assert(runRemove(w = 8, maxBroadcastRows = 0L) == runRemove(w = 8))
+    assert(SizeGate.forceDistributed(runRemove(w = 8)) == runRemove(w = 8))
   }
 
   test("config guards throw") {

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 import graft.functions.{TextHash, TextHashKernels}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -390,13 +390,13 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("brute-force partial-top-k kernel == windowed cross-join fallback") {
-    // maxDriverQueries = 0 forces the over-gate naive plan; the default
+    // forceDistributed forces the over-gate naive plan; the default
     // takes the per-partition heap path — outputs must be IDENTICAL
     // (values, ranks, tie-breaks), including under a different input split
     val a = Similarity.bruteForceTopK(corpus, queries, 5)
       .orderBy("query_id", "rank").collect().toSeq
-    val b = Similarity.bruteForceTopK(corpus, queries, 5, maxDriverQueries = 0L)
-      .orderBy("query_id", "rank").collect().toSeq
+    val b = SizeGate.forceDistributed(Similarity.bruteForceTopK(corpus, queries, 5)
+      .orderBy("query_id", "rank").collect().toSeq)
     val c = Similarity.bruteForceTopK(corpus.repartition(7), queries, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(a == b)
@@ -428,13 +428,13 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("kmeansCentroids driver fast path is BIT-identical to the distributed loop") {
-    // maxDriverVecFloats = 0 forces the distributed Lloyd iteration; the
+    // forceDistributed forces the distributed Lloyd iteration; the
     // default takes the driver loop, which replicates the per-partition
     // accumulation order — centroids must match to the last bit (SemDeDup
     // blocking and persisted-index assignments both hang off them)
     val cfg = Similarity.IvfConfig(nLists = 5, kmeansIters = 4, nProbe = 5)
     val drv = Similarity.kmeansCentroids(corpus, cfg)
-    val dist = Similarity.kmeansCentroids(corpus, cfg, maxDriverVecFloats = 0L)
+    val dist = SizeGate.forceDistributed(Similarity.kmeansCentroids(corpus, cfg))
     assert(drv.length == dist.length)
     drv.zip(dist).foreach { case (a, b) =>
       assert(a.sameElements(b), "centroid mismatch between driver and distributed Lloyd")
@@ -446,12 +446,14 @@ class SimilaritySpec extends AnyFunSuite {
     val bf = Similarity.bruteForceTopK(corpus, queries, k).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank")))
       .toSet
-    // nProbe == nLists: identical to brute force, ranks included
-    val exhaustive = Similarity.ivfTopK(corpus, queries, k,
+    // nProbe == nLists: identical to brute force, ranks included — on the
+    // shipped-probe kernel and on the keyed-join fallback alike
+    def exhaustive = Similarity.ivfTopK(corpus, queries, k,
       Similarity.IvfConfig(nLists = 6, kmeansIters = 3, nProbe = 6)).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank")))
       .toSet
     assert(exhaustive == bf)
+    assert(SizeGate.forceDistributed(exhaustive) == bf)
     // partial probe: the quantizer should route each query to its own
     // cluster's lists — high recall at a third of the scan
     val partial = Similarity.ivfTopK(corpus, queries, k,

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 /** [[Perplexity]] vs an in-memory brute force over raw token strings (also
   * proves the fingerprinted join path collision-free on the fixture). */
@@ -45,9 +45,8 @@ class PerplexitySpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def run(k: Double = 1.0, maxBroadcastRows: Long = 50000000L)
-      : Map[Long, (Long, Float, Option[Float])] =
-    Perplexity.lmScore(docs, target, k, maxBroadcastRows).collect()
+  private def run(k: Double = 1.0): Map[Long, (Long, Float, Option[Float])] =
+    Perplexity.lmScore(docs, target, k).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getFloat(2),
         if (r.isNullAt(3)) None else Some(r.getFloat(3))))).toMap
 
@@ -66,7 +65,7 @@ class PerplexitySpec extends AnyFunSuite {
   }
 
   test("keyed-join path (broadcast gate off) matches the default") {
-    assert(run(maxBroadcastRows = 0L) == run())
+    assert(SizeGate.forceDistributed(run()) == run())
   }
 
   test("config guard throws") {

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 /** [[QualityClassifier]] vs an in-memory brute force over raw token strings
   * (also proves the fingerprinted count-table joins collision-free on the
@@ -52,9 +52,8 @@ class QualityClassifierSpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def run(k: Double = 1.0, maxBroadcastRows: Long = 50000000L)
-      : Map[Long, (Long, Float, Boolean)] =
-    QualityClassifier.nbScore(docs, positive, negative, k, maxBroadcastRows)
+  private def run(k: Double = 1.0): Map[Long, (Long, Float, Boolean)] =
+    QualityClassifier.nbScore(docs, positive, negative, k)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getFloat(2),
         r.getBoolean(3)))).toMap
@@ -79,7 +78,7 @@ class QualityClassifierSpec extends AnyFunSuite {
   }
 
   test("keyed-join path (broadcast gate off) matches the default") {
-    assert(run(maxBroadcastRows = 0L) == run())
+    assert(SizeGate.forceDistributed(run()) == run())
   }
 
   test("config guard throws") {

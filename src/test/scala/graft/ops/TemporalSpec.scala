@@ -3,7 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.TestSpark
+import graft.{SizeGate, TestSpark}
 
 class TemporalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -165,12 +165,11 @@ class ContaminationSpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def run(n: Int, maxBroadcastRows: Long = 50000000L): Map[Long, (Long, Boolean)] = {
+  private def run(n: Int): Map[Long, (Long, Boolean)] = {
     import spark.implicits._
     val t = trainDocs.toDF("doc_id", "text")
     val b = benchDocs.toDF("doc_id", "text")
-    Contamination.flagContaminated(t, b, shingleN = n,
-        maxBroadcastRows = maxBroadcastRows)
+    Contamination.flagContaminated(t, b, shingleN = n)
       .collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_hits"), r.getAs[Boolean]("contaminated")))
@@ -196,7 +195,7 @@ class ContaminationSpec extends AnyFunSuite {
   }
 
   test("non-broadcast path (gate forced off) gives identical output") {
-    assert(run(4, maxBroadcastRows = 0L) == run(4))
+    assert(SizeGate.forceDistributed(run(4)) == run(4))
   }
 
   test("empty benchmark: every doc clean") {
