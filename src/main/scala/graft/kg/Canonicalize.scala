@@ -47,9 +47,9 @@ object Canonicalize {
   /** Input: edge list (entity_type, key_a, key_b); undirected semantics.
     * Output: (entity_type, key, component).
     *
-    * Driver strategy is gated on BOTH row count and string length: the same
-    * agg pass that counts the checkpointed edge set sums its string lengths,
-    * and `collect()` happens only when their driver heap cost fits
+    * Driver strategy is gated on BOTH row count and string length: the
+    * checkpoint that materializes the edge set counts it and sums its string
+    * lengths, and `collect()` happens only when their driver heap cost fits
     * [[graft.SizeGate]] (same-as edges are a similarity-join OUTPUT, orders of
     * magnitude smaller than the corpus, and the distributed star path's
     * per-iteration driver scheduling overhead is a measured
@@ -62,22 +62,25 @@ object Canonicalize {
       fwd.select(col("entity_type"), col("dst").as("src"), col("src").as("dst")))
       .distinct()
     // Materialize the (small) same-as edge set once, then decide strategy
-    // from its measured size. (A limit+collect probe would re-run the whole
-    // upstream similarity join once per CollectLimit scale-up round —
-    // measured 8x slower than checkpoint+count.)
-    val cp = edges.localCheckpoint(eager = true)
-    if (edgesFitDriver("canonicalize", cp, "entity_type", "src", "dst"))
+    // from the size its checkpoint measured. (A limit+collect probe would
+    // re-run the whole upstream similarity join once per CollectLimit
+    // scale-up round — measured 8x slower than checkpoint+count.)
+    val (cp, fits) = checkpointEdges("canonicalize", edges, "entity_type", "src", "dst")
+    if (fits)
       componentsOnDriver(spark,
         cp.collect().iterator.map(r => (r.getString(0), r.getString(1), r.getString(2))))
     else labelsByStar(cp, maxIter)
   }
 
-  /** Whether the string edge rows `e` fit the driver, priced per row (the
-    * Row, its Strings, the (type, key) tuples and their union-find and
-    * vertex-set entries) and per character of `cols`. */
-  private[kg] def edgesFitDriver(site: String, e: DataFrame, cols: String*): Boolean = {
-    val (rows, chars) = graft.SizeGate.measure(e, cols.map(c => length(col(c))).reduce(_ + _))
-    graft.SizeGate.fits(site, rows, rows * 384L + chars * 2L)
+  /** The string edge rows `edges`, checkpointed, and whether they fit the
+    * driver — priced per row (the Row, its Strings, the (type, key) tuples
+    * and their union-find and vertex-set entries) and per character of
+    * `cols`, both measured by the checkpoint job. */
+  private[kg] def checkpointEdges(site: String, edges: DataFrame,
+      cols: String*): (DataFrame, Boolean) = {
+    val graft.SizeGate.Sized(cp, rows, Seq(chars)) =
+      graft.SizeGate.checkpoint(edges, cols.map(c => length(col(c))).reduce(_ + _))
+    (cp, graft.SizeGate.fits(site, rows, rows * 384L + chars * 2L))
   }
 
   /** Spark's string order (unsigned UTF-8 bytes — what `<` and `min` compare

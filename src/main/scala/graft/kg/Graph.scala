@@ -77,22 +77,21 @@ object Graph {
     * collapse. Returns (node, rank). */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
       danglingRedistribution: Boolean = false, tol: Double = 0.0): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(eager = true)
+    val (e, fits) = Canonicalize.checkpointEdges("graph.pagerank",
+      edges.select(col("src"), col("dst")).distinct(), "src", "dst")
     // driver loop when the edges fit: per-iteration DataFrame-loop scheduling
     // (10 join + agg + checkpoint jobs ≈ 2-3 s) dwarfs small-graph work
-    if (Canonicalize.edgesFitDriver("graph.pagerank", e, "src", "dst")) {
+    if (fits) {
       val spark = edges.sparkSession
       val rows = e.collect().map(r => (r.getString(0), r.getString(1)))
       e.unpersist()
       return pageRankDriver(spark, rows, iters, damping,
         danglingRedistribution, tol)
     }
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(eager = true)
-    val n = nodes.count()
+    val graft.SizeGate.Sized(nodes, n, _) = graft.SizeGate.checkpoint(
+      e.select(col("src").as("node"))
+        .unionByName(e.select(col("dst").as("node")))
+        .distinct())
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(eager = true)
 
@@ -142,9 +141,9 @@ object Graph {
     * networks, reachability cones, provenance closures over the KG's
     * (subj_guid, obj_guid) edges. */
   def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    if (Canonicalize.edgesFitDriver("graph.khop", e, "src", "dst")) {
+    val (e, fits) = Canonicalize.checkpointEdges("graph.khop",
+      edges.select(col("src"), col("dst")).distinct(), "src", "dst")
+    if (fits) {
       // driver BFS over the collected adjacency — pure integer hop counts,
       // bit-identical to the distributed loop by construction; per-hop the
       // distributed form costs join + anti-join + two checkpoints of pure

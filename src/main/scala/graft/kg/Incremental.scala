@@ -2,8 +2,11 @@ package graft.kg
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.SizeGate
 import graft.model.Model._
@@ -69,39 +72,64 @@ object Incremental {
   }
 
   private val cpSchema = org.apache.spark.sql.Encoders.product[Checkpoint].schema
-  private val metricsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("run_id", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("stage", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("partition_key", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("metric", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.LongType)))
+  private val metricsSchema = StructType(Seq(
+    StructField("run_id", StringType), StructField("stage", StringType),
+    StructField("partition_key", IntegerType), StructField("metric", StringType),
+    StructField("value", LongType)))
 
   /** Read an append dir that may hold JSONL rows (current format) AND
     * parquet part files (the pre-r4 format): a dir written by an older
     * build must not read as EMPTY — that would silently void
-    * completedBuckets and re-process every done bucket on resume. */
-  private def readAppendDir(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    if (!Files.exists(Paths.get(dir)))
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    val names = {
-      val st = Files.list(Paths.get(dir))
-      try st.toArray.map(_.toString) finally st.close()
-    }
-    val frames = Seq(
-      if (names.exists(_.endsWith(".json")))
-        Some(spark.read.schema(schema).option("mode", "DROPMALFORMED")
-          .option("pathGlobFilter", "*.json").json(dir))
-      else None,
-      if (names.exists(_.endsWith(".parquet")))
-        Some(spark.read.schema(schema)
-          .option("pathGlobFilter", "*.parquet").parquet(dir))
-      else None).flatten
-    if (frames.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else frames.reduce(_ unionByName _)
+    * completedBuckets and re-process every done bucket on resume. The JSONL
+    * rows are parsed on the driver ([[jsonRows]]) into a local relation;
+    * only parquet files cost a Spark read. */
+  private def readAppendDir(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
+    val local = spark.createDataFrame(jsonRows(dir, schema).asJava,
+      StructType(schema.map(_.copy(nullable = true))))
+    if (!appendFiles(dir).exists(_.endsWith(".parquet"))) local
+    else local.unionByName(spark.read.schema(schema)
+      .option("pathGlobFilter", "*.parquet").parquet(dir))
   }
+
+  // visible files of an append dir (Spark's readers skip "." and "_" names:
+  // in-flight tmp files, _SUCCESS)
+  private def appendFiles(dir: String): Seq[String] = {
+    val d = Paths.get(dir)
+    if (!Files.exists(d)) Seq.empty
+    else {
+      val st = Files.list(d)
+      try st.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSeq
+      finally st.close()
+    }
+  }
+
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The rows of the `*.json` files in `dir`, read on the driver — these
+    * files are the driver's own appends, so reading them back needs no
+    * Spark job. Like the JSON reader's DROPMALFORMED mode, a line that is
+    * not a JSON object, or holds a value that does not fit its field's type,
+    * is dropped; an absent field reads as null. */
+  private def jsonRows(dir: String, schema: StructType): Seq[Row] =
+    appendFiles(dir).filter(_.endsWith(".json")).flatMap { n =>
+      new String(Files.readAllBytes(Paths.get(dir, n)), java.nio.charset.StandardCharsets.UTF_8)
+        .split("\n").filter(_.trim.nonEmpty)
+    }.flatMap { line =>
+      scala.util.Try(jsonMapper.readTree(line)).toOption.filter(_.isObject).flatMap { o =>
+        val vals = schema.fields.toSeq.map { f =>
+          val v = o.get(f.name)
+          if (v == null || v.isNull) Some(null)
+          else f.dataType match {
+            case StringType => Some(if (v.isTextual) v.textValue else v.toString)
+            case IntegerType => Option.when(v.isIntegralNumber && v.canConvertToInt)(v.intValue)
+            case LongType => Option.when(v.isIntegralNumber && v.canConvertToLong)(v.longValue)
+            case t => throw new IllegalArgumentException(s"append-dir field type $t")
+          }
+        }
+        Option.when(vals.forall(_.isDefined))(Row.fromSeq(vals.map(_.get)))
+      }
+    }
 
   def readCheckpoints(spark: SparkSession, outDir: String): DataFrame =
     readAppendDir(spark, cpPath(outDir), cpSchema)
@@ -111,10 +139,12 @@ object Incremental {
   def readMetrics(spark: SparkSession, outDir: String): DataFrame =
     readAppendDir(spark, metricsPath(outDir), metricsSchema)
 
+  // the checkpoints are a local relation (no job) unless pre-r4 parquet
+  // files are present
   def completedBuckets(spark: SparkSession, outDir: String, runId: String): Set[Int] =
     readCheckpoints(spark, outDir)
       .filter(col("run_id") === runId && col("status") === "done" &&
-        col("stage") === "pipeline")
+        col("stage") === "pipeline" && col("partition_key").isNotNull)
       .select("partition_key").collect().map(_.getInt(0)).toSet
 
   private[graft] def appendCheckpoint(spark: SparkSession, outDir: String, cp: Checkpoint): Unit =
@@ -289,11 +319,12 @@ object Incremental {
     * signature) voids that invariant, so it triggers full rediscovery
     * automatically; `fullRediscovery = true` forces it.
     *
-    * Discovery runs in one of two lanes, chosen by size. The pass's first
-    * agg over the flagged key set measures its rows and key bytes; when they
-    * fit [[graft.SizeGate]] at a measured per-key driver cost, the LSH pass
-    * collects the keys ONCE and does banding, the bucket cap, the delta
-    * split and the Jaccard check on the driver
+    * Discovery runs in one of two lanes, chosen by size. The checkpoint
+    * that materializes the flagged key set measures its rows and key bytes
+    * ([[graft.SizeGate.checkpoint]]); when they fit [[graft.SizeGate]] at a
+    * measured per-key driver cost, the LSH pass collects the keys ONCE and
+    * does banding, the bucket cap, the delta split and the Jaccard check on
+    * the driver
     * ([[Link.fuzzySameAsOnDriver]]), then labels components with
     * [[Canonicalize.componentsOnDriver]] — a handful of Spark jobs instead of
     * ~20 per pass, for identical `cc` rows. Above the gate, or on the exact
@@ -335,7 +366,9 @@ object Incremental {
 
     val eligibleAll = nodes.filter(col("entity_type").isin(cfg.fuzzyTypes: _*))
       .select(col("entity_type"), col("name").as("dict_key")).distinct()
-    val flagged = (oldKeys match {
+    // one checkpoint job materializes the flagged set and measures it:
+    // rows, new keys and key bytes
+    val SizeGate.Sized(flagged, total, Seq(touched, flaggedBytes)) = SizeGate.checkpoint(oldKeys match {
       case Some(old) =>
         val marker = old.select(col("entity_type"), col("dict_key"),
           lit(1).as("_seen"))
@@ -345,14 +378,8 @@ object Incremental {
       case None =>
         eligibleAll.select(col("entity_type"), col("dict_key"),
           lit(true).as("is_new"))
-    }).localCheckpoint(eager = true)
-
-    val counts = flagged.agg(count(lit(1)),
-      sum(when(col("is_new"), 1L).otherwise(0L)),
-      sum(length(col("entity_type")) + length(col("dict_key")))).head()
-    val total = counts.getLong(0)
-    val touched = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-    val flaggedBytes = if (counts.isNullAt(2)) 0L else counts.getLong(2)
+    }, when(col("is_new"), 1L).otherwise(0L),
+      length(col("entity_type")) + length(col("dict_key")))
     // phase boundary timestamps → per-phase _metrics rows: the flat-vs-
     // growing decomposition (O(delta) discovery vs O(total) merge-on-read
     // scan) must be readable from the artifact, not re-derived by hand
@@ -375,15 +402,13 @@ object Incremental {
       col("component"))
 
     // guid rewrite map: old guid -> canonical guid (only where it changes)
-    val rewrite = nodes.join(cc,
+    val SizeGate.Sized(rewrite, nRewrites, _) = SizeGate.checkpoint(nodes.join(cc,
         nodes("entity_type") === cc("cc_et") && nodes("name") === cc("cc_key"))
       .filter(col("name") =!= col("component"))
       .select(col("guid").as("old_guid"),
         Link.guidFor(col("entity_type"), col("component")).as("new_guid"),
         col("entity_type").as("rw_et"), col("name").as("old_name"),
-        col("component").as("new_name"))
-      .localCheckpoint(eager = true)
-    val nRewrites = rewrite.count()
+        col("component").as("new_name")))
     val tDiscover = System.currentTimeMillis()
     // rewrite is materialized — free the discovery's internal checkpoints
     // so a resolver LOOP (per-micro-batch resolveEvery) stays O(1) in
@@ -391,7 +416,7 @@ object Incremental {
     freeDiscovery()
 
     if (nRewrites > 0L) {
-      // size-gated broadcast (rewrite is checkpointed, count already done):
+      // size-gated broadcast (the rewrite's checkpoint counted it):
       // an explicit hint is never demoted by AQE, so only hint when measured
       // small; above the gate the planner/AQE pick the join side
       val hintBc = nRewrites <= cfg.maxBroadcastRegistryRows

@@ -390,12 +390,13 @@ object Link {
       cfg: Config = Config()): (DataFrame, () => Unit) = {
     val spark = raw.sparkSession
     import spark.implicits._
-    // distinct mention set: small (entities ≪ mentions); materialized once,
-    // consumed by both the fuzzy chain and the canonical-map join
-    val ments = applyDict(mentions(raw), dict).localCheckpoint(eager = true)
+    val keyed = applyDict(mentions(raw), dict)
 
     val (canonical, freeSameAs: (() => Unit)) =
       if (cfg.fuzzy) {
+        // distinct mention set: small (entities ≪ mentions); materialized
+        // once, consumed by both the fuzzy chain and the canonical-map join
+        val ments = keyed.localCheckpoint(eager = true)
         val (sameAs, free) = fuzzySameAsManaged(ments, cfg, delta = false)
         // rename before joining: cc derives from ments, so unrenamed columns
         // would make this an ambiguous self-join
@@ -408,14 +409,15 @@ object Link {
             "left")
           .select(ments("entity_type"), ments("norm_key"),
             coalesce(cc("component"), ments("dict_key")).as("canonical_key")),
-          free)
+          () => { free(); ments.unpersist(); () })
       } else {
-        (ments.select($"entity_type", $"norm_key", $"dict_key".as("canonical_key")),
+        // one consumer (the registry projection, which the caller
+        // checkpoints): no mention checkpoint of its own
+        (keyed.select($"entity_type", $"norm_key", $"dict_key".as("canonical_key")),
           () => ())
       }
 
-    (canonical.withColumn("guid", guidFor($"entity_type", $"canonical_key")),
-      () => { freeSameAs(); ments.unpersist(); () })
+    (canonical.withColumn("guid", guidFor($"entity_type", $"canonical_key")), freeSameAs)
   }
 
   /** Rewrite raw triples to canonical GUIDs using the registry (S5 labeling:

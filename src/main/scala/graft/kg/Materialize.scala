@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import graft.model.Model._
 
@@ -42,7 +43,11 @@ import graft.model.Model._
   *
   * The visible state is one `_CURRENT` pointer file naming the base and the
   * live deltas (`snap-N;delta-a;delta-b`), flipped atomically (tmp +
-  * ATOMIC_MOVE) — a crashed writer never corrupts the visible table.
+  * ATOMIC_MOVE) — a crashed writer never corrupts the visible table. The
+  * natural key (`_KEY`) and the schema (`_SCHEMA`, every field nullable)
+  * are pinned before the first flip; every read uses the pinned schema, so
+  * no read launches a parquet schema-inference job, and a write whose
+  * columns differ from it throws before it reserves a dir.
   *
   * CONCURRENT WRITERS: dir ids (`snap-N`/`delta-M`/`tomb-K`) are RESERVED
   * with a create-exclusive `Files.createDirectory` (retry upward on
@@ -148,8 +153,9 @@ object Materialize {
     * one hash aggregation, same shuffle shape as the dedup it replaces. */
   def readTable(spark: SparkSession, table: String): Option[DataFrame] =
     currentManifest(table).map { m =>
+      val schema = pinnedSchema(table)
       if (m.tombs.isEmpty) {
-        val frames = m.dirs.map(d => spark.read.parquet(Paths.get(table, d).toString))
+        val frames = m.dirs.map(d => readDir(spark, table, d, schema))
         val all = frames.reduce(_ unionByName _)
         // single-dir tables need no merge: a lone base is deduplicated by
         // construction, and a lone delta is key-distinct by the appendDelta
@@ -161,9 +167,11 @@ object Materialize {
       } else {
         def dirId(n: String): Long = n.split("-").last.toLong
         val key = readKey(table)
-        val ins = m.dirs.map(d => spark.read.parquet(Paths.get(table, d).toString)
+        val ins = m.dirs.map(d => readDir(spark, table, d, schema)
           .withColumn("_dir_id", lit(dirId(d))).withColumn("_ins", lit(true)))
-        val del = m.tombs.map(d => spark.read.parquet(Paths.get(table, d).toString)
+        // tombstones hold the key columns only
+        val tombSchema = schema.map(s => StructType(key.map(s(_))))
+        val del = m.tombs.map(d => readDir(spark, table, d, tombSchema)
           .withColumn("_dir_id", lit(dirId(d))).withColumn("_ins", lit(false)))
         val all = (ins ++ del).reduce(_.unionByName(_, allowMissingColumns = true))
         val nonKey = all.columns.toSeq
@@ -177,15 +185,74 @@ object Materialize {
       }
     }
 
-  // the natural key is part of the table's on-disk contract: written once,
-  // read by merge-on-read (a reader cannot know it otherwise)
+  /** One data dir of `table`, read with `schema` when the table pinned one
+    * (no inference job), else by parquet schema inference. */
+  private def readDir(spark: SparkSession, table: String, dir: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(Paths.get(table, dir).toString)
+
+  // the natural key and the schema are part of the table's on-disk
+  // contract: written once, before the first manifest flip, and read by
+  // every reader (merge-on-read needs the key; a schema saves an inference
+  // job per dir)
   private def keyPath(table: String): Path = Paths.get(table, "_KEY")
-  private def writeKey(table: String, key: Seq[String]): Unit = {
-    val p = keyPath(table)
-    if (!Files.exists(p)) Files.writeString(p, key.mkString("\n"))
-  }
   private def readKey(table: String): Seq[String] =
     Files.readString(keyPath(table)).split("\n").filter(_.nonEmpty).toSeq
+  private def schemaPath(table: String): Path = Paths.get(table, "_SCHEMA")
+
+  /** The schema `table` pinned, or None for a table written before schemas
+    * were pinned (its reads infer the schema, as they always did). */
+  private def pinnedSchema(table: String): Option[StructType] = {
+    val p = schemaPath(table)
+    if (!Files.exists(p)) None
+    else Some(DataType.fromJson(Files.readString(p)).asInstanceOf[StructType])
+  }
+
+  // a parquet read returns every field nullable: so does a pinned schema,
+  // and writes are compared on names and types only
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => StructField(f.name, nullable(f.dataType))))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Pin `key` and `schema` for `table` while nothing is flipped and no
+    * write is in flight (so a pin left by a first write that failed before
+    * its flip binds nothing), else check a write against the pinned schema:
+    * columns (and, for a tombstone's `deleteKeys`, the key columns) that
+    * differ in name or type throw here, before the writer reserves a dir —
+    * an explicit-schema read would return a missing column as nulls. A table
+    * flipped before schemas were pinned keeps inferring. Callers hold the
+    * table lock and reserve their dirs under it. */
+  private def pinLayout(table: String, key: Seq[String], schema: StructType,
+      deleteKeys: Option[StructType] = None): Unit = {
+    Files.createDirectories(Paths.get(table))
+    val want = nullable(schema).asInstanceOf[StructType]
+    val fresh = currentManifest(table).isEmpty && pendingDirs(table).isEmpty
+    if (fresh || !Files.exists(keyPath(table))) writeAtomically(keyPath(table), key.mkString("\n"))
+    val pinned =
+      if (fresh) { writeAtomically(schemaPath(table), want.json); Some(want) }
+      else pinnedSchema(table)
+    pinned.foreach { p =>
+      def check(what: String, got: StructType, expected: StructType): Unit =
+        if (got.toSet != expected.toSet)
+          throw new IllegalArgumentException(s"$what for table $table has columns " +
+            s"${got.simpleString}, but the table's _SCHEMA is ${expected.simpleString}")
+      check("write", want, p)
+      deleteKeys.foreach(d => check("delete keys",
+        nullable(StructType(key.map(d(_)))).asInstanceOf[StructType],
+        StructType(key.map(p(_)))))
+    }
+  }
+
+  // tmp + ATOMIC_MOVE: a reader never sees a partial file
+  private def writeAtomically(target: Path, content: String): Unit = {
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
+    Files.writeString(tmp, content)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 
   // Files.list streams must be closed (fd leak in a long-lived driver)
   private def listTableDirs(table: String): Seq[String] = {
@@ -237,6 +304,12 @@ object Materialize {
     * id stays claimed for the whole write. */
   private def writeReserved(df: DataFrame, table: String, dirName: String): Unit =
     df.write.mode(SaveMode.Append).parquet(Paths.get(table, dirName).toString)
+
+  /** Run `write` into the reserved `dirNames`; if it throws, drop their
+    * pending markers, so gc reclaims the never-flipped dirs and a table whose
+    * first write failed can pin its layout again. */
+  private def releasingOnFailure(table: String, dirNames: String*)(write: => Unit): Unit =
+    try write catch { case e: Throwable => commitReserved(table, dirNames: _*); throw e }
 
   private[kg] val PendingStaleMs = 15L * 60 * 1000
   private def pendingMarker(table: String, dirName: String): Path =
@@ -297,12 +370,8 @@ object Materialize {
     }
   }
 
-  private def flip(table: String, m: Manifest): Unit = {
-    val tmp = Paths.get(table, "_CURRENT.tmp")
-    Files.writeString(tmp, m.render)
-    Files.move(tmp, currentPointer(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def flip(table: String, m: Manifest): Unit =
+    writeAtomically(currentPointer(table), m.render)
 
   private[kg] def deleteDirRecursive(p: Path): Unit =
     if (Files.exists(p)) {
@@ -339,25 +408,26 @@ object Materialize {
     * rewrite (new base snapshot, deltas folded in and cleared) — use
     * [[appendDelta]] for per-batch increments and let compaction amortize
     * the rewrites. With `replace = true` the staged frame REPLACES the
-    * table. Old snapshots beyond `retainSnapshots` are GC'd. Returns the
+    * table's rows; its columns must still match the pinned `_SCHEMA` (a
+    * table's schema never changes once a write has flipped). Old snapshots beyond `retainSnapshots` are GC'd. Returns the
     * merged frame. */
   def mergeSnapshot(spark: SparkSession, table: String, staged: DataFrame,
       key: Seq[String], replace: Boolean = false,
       retainSnapshots: Int = 2): DataFrame = withTableLock(table) {
     // whole-op critical section: the rewrite reads the live table, so a
     // concurrent append between read and flip would be silently folded out
-    writeKey(table, key)
+    pinLayout(table, key, staged.schema)
     val merged = readTable(spark, table) match {
       case Some(existing) if !replace =>
         existing.unionByName(staged).dropDuplicates(key)
       case _ => staged.dropDuplicates(key)
     }
     val snapDir = reserveDir(table, "snap")
-    writeReserved(merged, table, snapDir)
+    releasingOnFailure(table, snapDir)(writeReserved(merged, table, snapDir))
     flip(table, Manifest(Some(snapDir), Nil))
     commitReserved(table, snapDir)
     gc(table, retainSnapshots)
-    spark.read.parquet(Paths.get(table, snapDir).toString)
+    readDir(spark, table, snapDir, pinnedSchema(table))
   }
 
   /** Append one batch as a delta: O(batch) bytes written, visible
@@ -368,17 +438,18 @@ object Materialize {
   def appendDelta(spark: SparkSession, table: String, staged: DataFrame,
       key: Seq[String], compactEvery: Int = 8,
       retainSnapshots: Int = 2, dedupStaged: Boolean = true): Unit = {
-    Files.createDirectories(Paths.get(table))
-    writeKey(table, key)
-    val deltaDir = reserveDir(table, "delta")
+    val deltaDir = withTableLock(table) {
+      pinLayout(table, key, staged.schema)
+      reserveDir(table, "delta")
+    }
     // dedupStaged = false skips the in-batch dedup shuffle when the caller
     // guarantees the staged frame is already key-distinct (pipeline outputs
     // are — Materialize.edges/nodes end in a dedup/agg); merge-on-read
     // would collapse any duplicates anyway, so this only trades write size.
     // The (long) data write runs OUTSIDE the manifest lock — only the
     // read-modify-write of _CURRENT is serialized.
-    writeReserved(if (dedupStaged) staged.dropDuplicates(key) else staged,
-      table, deltaDir)
+    releasingOnFailure(table, deltaDir)(writeReserved(
+      if (dedupStaged) staged.dropDuplicates(key) else staged, table, deltaDir))
     val shouldCompact = withTableLock(table) {
       val m = currentManifest(table).getOrElse(Manifest(None, Nil))
       flip(table, Manifest(m.base, m.deltas :+ deltaDir, m.tombs))
@@ -399,19 +470,19 @@ object Materialize {
   def appendRewrite(spark: SparkSession, table: String, upserts: DataFrame,
       deleteKeys: DataFrame, key: Seq[String], compactEvery: Int = 8,
       retainSnapshots: Int = 2): Unit = {
-    Files.createDirectories(Paths.get(table))
-    writeKey(table, key)
     // tomb reserved BEFORE delta: monotonic reservation keeps tomb id <
     // delta id, preserving the insert-wins resolution for keys in both.
     // The ids only need the RESERVATION ordered — the two data writes are
     // independent files invisible until the manifest flip, so they run as
     // concurrent Spark jobs (both awaited even on failure — awaitBoth)
-    val tombDir = reserveDir(table, "tomb")
-    val deltaDir = reserveDir(table, "delta")
-    awaitBoth(
+    val (tombDir, deltaDir) = withTableLock(table) {
+      pinLayout(table, key, upserts.schema, Some(deleteKeys.schema))
+      (reserveDir(table, "tomb"), reserveDir(table, "delta"))
+    }
+    releasingOnFailure(table, tombDir, deltaDir)(awaitBoth(
       () => writeReserved(deleteKeys.select(key.map(col): _*).dropDuplicates(key),
         table, tombDir),
-      () => writeReserved(upserts.dropDuplicates(key), table, deltaDir))
+      () => writeReserved(upserts.dropDuplicates(key), table, deltaDir)))
     val shouldCompact = withTableLock(table) {
       val m = currentManifest(table).getOrElse(Manifest(None, Nil))
       flip(table, Manifest(m.base, m.deltas :+ deltaDir, m.tombs :+ tombDir))
@@ -431,7 +502,7 @@ object Materialize {
       if (m.deltas.nonEmpty || m.tombs.nonEmpty) {
         val merged = readTable(spark, table).get
         val snapDir = reserveDir(table, "snap")
-        writeReserved(merged, table, snapDir)
+        releasingOnFailure(table, snapDir)(writeReserved(merged, table, snapDir))
         flip(table, Manifest(Some(snapDir), Nil))
         commitReserved(table, snapDir)
         gc(table, retainSnapshots)

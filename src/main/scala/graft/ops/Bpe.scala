@@ -101,8 +101,8 @@ object Bpe {
         all.orderBy(col("cnt").desc, col("word")).limit(heavyHitterTopK)
       else all
     }
-    val wordsCp = wordsBase.localCheckpoint(true)
-    val (nVocab, nChars) = graft.SizeGate.measure(wordsCp, length(col("word")))
+    val graft.SizeGate.Sized(wordsCp, nVocab, Seq(nChars)) =
+      graft.SizeGate.checkpoint(wordsBase, length(col("word")))
     // per char: a symbol ref and its pair's count and occurrence entries
     if (graft.SizeGate.fits("bpe.vocab", nVocab, nVocab * 128L + nChars * 64L)) {
       val vocab = wordsCp.as[(String, Long)].collect()

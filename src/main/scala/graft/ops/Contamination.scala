@@ -77,12 +77,11 @@ object Contamination {
     * corpus scan + corpus-sized join. */
   def hitCountsManaged(train: DataFrame, benchmark: DataFrame,
       shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text"): Dedup.ManagedPairs = {
-    // global distinct benchmark hash set, measured once (8-byte rows: the
-    // row count IS the size estimate, no second bytes pass needed)
-    val benchSet = shingleHashes(benchmark, idCol, textCol, shingleN)
-      .select(col("shingle_h")).distinct()
-      .localCheckpoint(eager = true)
-    val probe = SizeGate.broadcastIfFits("contamination", benchSet, benchSet.count())
+    // global distinct benchmark hash set, counted by its checkpoint (8-byte
+    // rows: the row count IS the size estimate, no bytes sum needed)
+    val SizeGate.Sized(benchSet, benchRows, _) = SizeGate.checkpoint(
+      shingleHashes(benchmark, idCol, textCol, shingleN).select(col("shingle_h")).distinct())
+    val probe = SizeGate.broadcastIfFits("contamination", benchSet, benchRows)
 
     val trainSh = shingleHashes(train, idCol, textCol, shingleN)
     // per-doc shingles are DISTINCT by construction (Set in the kernel), so

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SizeGate
+
 /** Incremental (delta) deduplication: dedup a NEW batch of documents against
   * an accumulated corpus without ever pairing old against old — the shape a
   * continuously-ingesting training-data pipeline runs at 100 TB, where
@@ -230,14 +232,14 @@ object DeltaDedup {
       Seq("text_md5"))
 
     // ---- near-dup layer: band ONLY the batch (O(delta) compute)
-    val fresh = batch.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        Dedup.bandHashKernel(
-          Dedup.wordShinglesKernel(if (text == null) "" else text, cfg.shingleN),
-          cfg.numHashes, cfg.bands).map { case (bd, h) => (id, bd, h) }
-      }.toDF("doc_id", "band", "band_hash")
-      .localCheckpoint(eager = true)
-    val bandedDocs = fresh.count() / cfg.bands
+    val SizeGate.Sized(fresh, freshRows, _) = SizeGate.checkpoint(
+      batch.select(col("doc_id"), col("text")).as[(Long, String)]
+        .flatMap { case (id, text) =>
+          Dedup.bandHashKernel(
+            Dedup.wordShinglesKernel(if (text == null) "" else text, cfg.shingleN),
+            cfg.numHashes, cfg.bands).map { case (bd, h) => (id, bd, h) }
+        }.toDF("doc_id", "band", "band_hash"))
+    val bandedDocs = freshRows / cfg.bands
 
     val allSigs = (Materialize.readTable(spark, sigsTable(dir)) match {
       case Some(s) => s.unionByName(fresh)
@@ -253,12 +255,12 @@ object DeltaDedup {
       sum(when(col("bucket_n") > cfg.maxBandBucket, col("bucket_n"))
         .otherwise(0L)).as("dropped_rows"),
       max(col("bucket_n")).as("max_bucket"))
-    val over = CapMetrics.checkpointHarvest(
+    val SizeGate.Sized(over, overRows, _) = SizeGate.checkpoint(
       observed.filter(col("bucket_n") > cfg.maxBandBucket)
         .select(col("band"), col("band_hash")))
     // structurally ≤ rows/maxBandBucket entries; broadcast only when
     // measured small (explicit hints are never demoted by AQE)
-    val overP = graft.SizeGate.broadcastIfFits("dedup.delta.cap", over, over.count())
+    val overP = SizeGate.broadcastIfFits("dedup.delta.cap", over, overRows)
     def capped(df: DataFrame): DataFrame =
       df.join(overP, Seq("band", "band_hash"), "left_anti")
 

@@ -92,13 +92,13 @@ object DupSpans {
     val wins = windows(docs, idCol, textCol, windowW)
 
     // global duplicated-window set: partial-aggregated to distinct hashes,
-    // measured once (8-byte rows: the count IS the size estimate)
-    val dupSet = wins.groupBy(col("win_h"))
-      .agg(countDistinct(col(idCol)).as("__nd"))
-      .filter(col("__nd") >= minDocs)
-      .select(col("win_h"))
-      .localCheckpoint(eager = true)
-    val probe = SizeGate.broadcastIfFits("dup_spans", dupSet, dupSet.count())
+    // counted by its checkpoint (8-byte rows: the count IS the size estimate)
+    val SizeGate.Sized(dupSet, dupRows, _) = SizeGate.checkpoint(
+      wins.groupBy(col("win_h"))
+        .agg(countDistinct(col(idCol)).as("__nd"))
+        .filter(col("__nd") >= minDocs)
+        .select(col("win_h")))
+    val probe = SizeGate.broadcastIfFits("dup_spans", dupSet, dupRows)
 
     // duplicated window positions -> gaps-and-islands span merge; the window
     // and BOTH aggregations reuse the post-join doc-id partitioning

@@ -84,15 +84,13 @@ object Perplexity {
     var nUni = 0L; var nBig = 0L; var v = 0L
     graft.kg.Materialize.awaitBoth(
       () => {
-        uni = tb.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
-          .localCheckpoint(eager = true)
-        nUni = uni.count()
+        val sized = SizeGate.checkpoint(tb.groupBy(col("h1")).agg(count(lit(1)).as("c1")))
+        uni = sized.df; nUni = sized.rows
       },
       () => graft.kg.Materialize.awaitBoth(
         () => {
-          big = tb.groupBy(col("h12")).agg(count(lit(1)).as("c2"))
-            .localCheckpoint(eager = true)
-          nBig = big.count()
+          val sized = SizeGate.checkpoint(tb.groupBy(col("h12")).agg(count(lit(1)).as("c2")))
+          big = sized.df; nBig = sized.rows
         },
         () => v = target.select(explode(tokK(col("text"))).as("h"))
           .agg(countDistinct(col("h"))).head().getLong(0)))

@@ -80,8 +80,8 @@ object QualityClassifier {
 
     // per-class count tables: collapse map-side to O(vocab) rows each;
     // 8-byte-keyed (the oracle's raw-string join proves collision freedom).
-    // Each class lane (checkpoint + fused totals/rows agg + doc count) is
-    // independent — two concurrent lanes instead of nine serial driver
+    // Each class lane (checkpoint measuring totals/rows + doc count) is
+    // independent — two concurrent lanes instead of serial driver
     // barriers; only the shared-vocabulary count needs both tables.
     var pos: DataFrame = null
     var neg: DataFrame = null
@@ -90,21 +90,16 @@ object QualityClassifier {
     var nPosDocs = 0L; var nNegDocs = 0L
     graft.kg.Materialize.awaitBoth(
       () => {
-        pos = positive.select(explode(tk(col("text"))).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("c_pos"))
-          .localCheckpoint(eager = true) // consumed by V-union + totals + join
-        val r = pos.agg(sum(col("c_pos")), count(lit(1))).head()
-        nPos = if (r.isNullAt(0)) 0L else r.getLong(0)
-        posRows = r.getLong(1)
+        // consumed by V-union + join
+        val sized = SizeGate.checkpoint(positive.select(explode(tk(col("text"))).as("h"))
+          .groupBy(col("h")).agg(count(lit(1)).as("c_pos")), col("c_pos"))
+        pos = sized.df; posRows = sized.rows; nPos = sized.sums(0)
         nPosDocs = positive.count()
       },
       () => {
-        neg = negative.select(explode(tk(col("text"))).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("c_neg"))
-          .localCheckpoint(eager = true)
-        val r = neg.agg(sum(col("c_neg")), count(lit(1))).head()
-        nNeg = if (r.isNullAt(0)) 0L else r.getLong(0)
-        negRows = r.getLong(1)
+        val sized = SizeGate.checkpoint(negative.select(explode(tk(col("text"))).as("h"))
+          .groupBy(col("h")).agg(count(lit(1)).as("c_neg")), col("c_neg"))
+        neg = sized.df; negRows = sized.rows; nNeg = sized.sums(0)
         nNegDocs = negative.count()
       })
     val v = pos.select(col("h")).union(neg.select(col("h")))

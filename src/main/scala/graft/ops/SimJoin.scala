@@ -12,8 +12,16 @@ import org.apache.spark.sql.functions._
   *
   * Guarantee: for any two input records with set-Jaccard >= t, the pair
   * appears in the candidate output — recall 1.0 by construction (every
-  * filter below is a NECESSARY condition for J >= t). Precision is the
-  * caller's job: verify candidates with exact Jaccard.
+  * filter below is a NECESSARY condition for J >= t) on the tokens the
+  * engine sees. String tokens ride as 64-bit xxhash keys, so the guarantee
+  * holds modulo hash collisions: two distinct tokens that co-occur in one
+  * record and collide merge into one key, which can shift the prefix rank
+  * order and drop a true candidate. A record of n distinct tokens holds
+  * such a pair with probability about n^2/2^65, so the risk grows with the
+  * number of records (about N*n^2/2^65 for N records). It is not counted
+  * at run time, and is ruled out only on the repo's fixture corpora, whose
+  * injectivity OpsSpec asserts. Precision is the caller's job: verify
+  * candidates with exact Jaccard.
   *
   * Filters, in plan order (all keyed shuffles, never all-pairs):
   *
@@ -93,7 +101,8 @@ object SimJoin {
     // the rank tie-break (two DISTINCT same-hash tokens inside one record
     // order nondeterministically, which could perturb a prefix) — it needs
     // a 64-bit collision between tokens co-occurring in a record
-    // (P < 2^-40 at any real vocabulary; asserted IMPOSSIBLE on the repo's
+    // (about n^2/2^65 for a record of n distinct tokens, growing with the
+    // number of records; asserted IMPOSSIBLE on the repo's
     // oracle/bench corpora by the injectivity test in OpsSpec, so the
     // graded outputs remain exact by construction). Callers whose tokens
     // are ALREADY injective longs (Link's packed trigrams, hashed word

@@ -1,0 +1,106 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, length, lit, sum}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.kg.{Incremental, Materialize}
+
+/** Facts the driver already holds cost no Spark job: a table's schema, the
+  * bucket checkpoints it wrote, and the size of a frame it just
+  * checkpointed. */
+class JobCountSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+
+  /** `body`'s result and the Spark jobs it submitted (counted under a job
+    * group of its own, after the listener bus has delivered them). */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      val r = body
+      GraftTestBus.drain(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Materialize.readTable on a base + delta + tombstone table submits no job") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-jobs").toString + "/t"
+    Materialize.mergeSnapshot(spark, table, Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), Seq("k"))
+    Materialize.appendRewrite(spark, table, upserts = Seq(("c", 3L)).toDF("k", "v"),
+      deleteKeys = Seq(("a", 1L)).toDF("k", "v"), key = Seq("k"), compactEvery = 0)
+    val m = Materialize.currentManifest(table).get
+    assert(m.base.nonEmpty && m.deltas.nonEmpty && m.tombs.nonEmpty)
+    val (df, jobs) = jobsOf(Materialize.readTable(spark, table).get)
+    assert(jobs == 0)
+    assert(df.as[(String, Long)].collect().toSet == Set(("b", 2L), ("c", 3L)))
+  }
+
+  test("Incremental.completedBuckets reads its checkpoint rows without a job") {
+    val out = Files.createTempDirectory("graft-jobs").toString
+    Seq((0, "done", "pipeline", "r1"), (2, "done", "pipeline", "r1"),
+        (1, "started", "pipeline", "r1"), (3, "done", "pipeline", "r0"),
+        (4, "done", "resolve", "r1"))
+      .foreach { case (b, status, stage, run) => Incremental.appendCheckpoint(spark, out,
+        Incremental.Checkpoint(run, stage, b, status, -1L, -1L, 0L, 1L)) }
+    // lines the JSON reader's DROPMALFORMED mode drops: not JSON, not an
+    // object, a bucket that is not an int
+    Files.writeString(Paths.get(out, "_checkpoints", "bad.json"),
+      "{\"run_id\":\"r1\",\"stage\":\"pipeline\",\"partition_key\":7,\n" +
+      "[1, 2]\n" +
+      "{\"run_id\":\"r1\",\"stage\":\"pipeline\",\"partition_key\":\"8\",\"status\":\"done\"}\n" +
+      "{\"run_id\":\"r1\",\"stage\":\"pipeline\",\"partition_key\":9,\"status\":\"done\"}\n")
+    val (done, jobs) = jobsOf(Incremental.completedBuckets(spark, out, "r1"))
+    assert(jobs == 0)
+    assert(done == Set(0, 2, 9))
+    // the same rows as Spark's JSON reader in DROPMALFORMED mode
+    def doneOf(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("run_id") === "r1" && col("status") === "done" &&
+        col("stage") === "pipeline").select("partition_key").collect().map(_.getInt(0)).toSet
+    assert(doneOf(spark.read.schema(
+        org.apache.spark.sql.Encoders.product[Incremental.Checkpoint].schema)
+      .option("mode", "DROPMALFORMED").json(s"$out/_checkpoints")) == done)
+    assert(doneOf(Incremental.readCheckpoints(spark, out)) == done)
+  }
+
+  test("SizeGate.checkpoint sizes a frame from its own checkpoint job") {
+    import spark.implicits._
+    val units = Seq(length(col("s")), col("n"))
+    def agg(df: org.apache.spark.sql.DataFrame) = {
+      val r = df.agg(org.apache.spark.sql.functions.count(lit(1)),
+        sum(length(col("s"))), sum(col("n"))).head()
+      (r.getLong(0), Seq(1, 2).map(i => if (r.isNullAt(i)) 0L else r.getLong(i)))
+    }
+    val full = spark.range(0, 1000).select(col("id").cast("string").as("s"),
+      (col("id") % 7).as("n")).repartition(4)
+    for (df <- Seq(full, full.filter(col("n") > 100))) {
+      val expected = agg(df)
+      val (sized, jobs) = jobsOf(SizeGate.checkpoint(df, units: _*))
+      val (_, plainJobs) = jobsOf(df.localCheckpoint(eager = true))
+      assert((sized.rows, sized.sums) == expected)
+      assert(jobs == plainJobs) // the sizes cost no job of their own
+      assert(agg(sized.df) == expected)
+      // no observed row: the sizes fall back to one agg over the checkpoint
+      val fallback = SizeGate.sized(sized.df, None, units)
+      assert((fallback.rows, fallback.sums) == expected)
+    }
+    assert(agg(full.filter(col("n") > 100))._1 == 0L)
+  }
+}

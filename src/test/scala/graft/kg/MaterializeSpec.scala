@@ -137,6 +137,51 @@ class MaterializeSpec extends AnyFunSuite {
     val m = Materialize.currentManifest(table).get
     assert(m.tombs.size == 1 && m.deltas.size == 2)
 
+    // the pinned _SCHEMA (every field nullable: the non-nullable Long `v`
+    // above was accepted): a write whose columns differ in name or type
+    // throws before it reserves a dir or flips the manifest — read with the
+    // pinned schema, a missing column would come back as silent nulls
+    def entries(t: String = table) = {
+      val st = Files.list(Paths.get(t))
+      try st.iterator().asScala.map(_.getFileName.toString).toSet finally st.close()
+    }
+    val before = entries()
+    val bad = Seq(
+      () => Materialize.appendDelta(spark, table, Seq(("e", "5")).toDF("k", "v"),
+        Seq("k", "v"), compactEvery = 0),
+      () => Materialize.appendDelta(spark, table, Seq(("e", 5L, 1)).toDF("k", "v", "w"),
+        Seq("k", "v"), compactEvery = 0),
+      () => Materialize.appendDelta(spark, table, Seq("e").toDF("k"),
+        Seq("k"), compactEvery = 0),
+      () => Materialize.mergeSnapshot(spark, table, Seq(("e", 5)).toDF("k", "v"),
+        Seq("k", "v")),
+      () => Materialize.appendRewrite(spark, table,
+        upserts = Seq(("e", 5L)).toDF("k", "v"),
+        deleteKeys = Seq(("a", "10")).toDF("k", "v"), key = Seq("k", "v"),
+        compactEvery = 0))
+    bad.foreach(w => intercept[IllegalArgumentException](w()))
+    assert(Materialize.currentManifest(table).get == m)
+    assert(entries() == before)
+    assert(read() == Set(("a", 10L), ("c", 3L), ("d", 4L)))
+
+    // a first write that fails after the pin (here its upserts; the
+    // tombstone write succeeds) flips nothing and leaves no live
+    // reservation, so the next write pins its own, different columns
+    val t2 = freshDir() + "/t"
+    val boom = org.apache.spark.sql.functions.udf { (k: String) =>
+      if (k == "x") throw new IllegalStateException("boom"); k }.asNondeterministic()
+    intercept[org.apache.spark.SparkException](Materialize.appendRewrite(spark, t2,
+      upserts = Seq(("x", 1L)).toDF("k", "v").select(boom($"k").as("k"), $"v"),
+      deleteKeys = Seq(("y", 2L)).toDF("k", "v"), key = Seq("k", "v"), compactEvery = 0))
+    assert(Files.exists(Paths.get(t2, "_SCHEMA")) && Materialize.currentManifest(t2).isEmpty)
+    assert(!entries(t2).exists(_.startsWith(".pending-")))
+    Materialize.appendRewrite(spark, t2, upserts = Seq(("x", "1")).toDF("k", "v"),
+      deleteKeys = Seq(("y", "2")).toDF("k", "v"), key = Seq("k", "v"), compactEvery = 0)
+    assert(Materialize.readTable(spark, t2).get.collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet == Set(("x", "1")))
+    intercept[IllegalArgumentException](Materialize.appendDelta(spark, t2,
+      Seq(("z", 3L)).toDF("k", "v"), Seq("k", "v"), compactEvery = 0))
+
     // Iceberg sequence-number rule: a LATER re-insert of a deleted key
     // resurrects it (re-delivered pre-rewrite rows are not lost — the next
     // resolver pass re-merges them)
@@ -144,8 +189,14 @@ class MaterializeSpec extends AnyFunSuite {
       Seq("k", "v"), compactEvery = 0)
     assert(read() == Set(("a", 10L), ("b", 2L), ("c", 3L), ("d", 4L)))
 
+    // a table written before schemas were pinned (no _SCHEMA) reads through
+    // parquet inference, tombstones included, and later writes do not pin
+    Files.delete(Paths.get(table, "_SCHEMA"))
+    assert(read() == Set(("a", 10L), ("b", 2L), ("c", 3L), ("d", 4L)))
+
     // compaction folds tombstones away; the visible rows are unchanged
     Materialize.compact(spark, table)
+    assert(!Files.exists(Paths.get(table, "_SCHEMA")))
     val mc = Materialize.currentManifest(table).get
     assert(mc.base.nonEmpty && mc.deltas.isEmpty && mc.tombs.isEmpty)
     assert(read() == Set(("a", 10L), ("b", 2L), ("c", 3L), ("d", 4L)))
