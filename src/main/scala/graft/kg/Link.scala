@@ -293,21 +293,11 @@ object Link {
       bandSignature(key, cfg.numHashes, cfg.bands).map { case (b, h) => (et, key, isNew, b, h) }
     }.toDF("entity_type", "key", "is_new", "band", "band_hash")
 
-    // Bucket-size cap: count-over-window reuses the join's shuffle key, so
-    // the cap costs no extra exchange. Oversized buckets (k^2/2 pair blowup)
-    // are excluded from candidate generation entirely; dropped rows observed
-    // under CapMetrics site `link.lsh` (no silent caps).
-    val bucketW = org.apache.spark.sql.expressions.Window
-      .partitionBy($"entity_type", $"band", $"band_hash")
-    val withN = graft.ops.CapMetrics.observed(
-      banded.withColumn("bucket_n", count(lit(1)).over(bucketW)),
-      "link.lsh",
-      sum(when($"bucket_n" > cfg.maxBandBucket, 1L).otherwise(0L)).as("dropped_rows"),
-      max($"bucket_n").as("max_bucket"))
-    // observed + checkpointed: the drop count cannot be silently pruned, and
-    // both self-join sides share one window pass (banded freed afterwards)
-    val capped = graft.ops.CapMetrics.checkpointHarvest(
-      withN.filter($"bucket_n" <= cfg.maxBandBucket).drop("bucket_n"))
+    // Bucket-size cap: oversized buckets (k^2/2 pair blowup) are excluded
+    // from candidate generation entirely; dropped rows observed under
+    // CapMetrics site `link.lsh` (no silent caps).
+    val capped = graft.ops.CapMetrics.capBuckets(banded, "link.lsh", cfg.maxBandBucket,
+      $"entity_type", $"band", $"band_hash")
 
     val cond = $"a.entity_type" === $"b.entity_type" && $"a.band" === $"b.band" &&
       $"a.band_hash" === $"b.band_hash" && $"a.key" < $"b.key"

@@ -4,6 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, count, lit, max, sum, when}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** "No silent caps": always-on observability for every recall-trading cap
@@ -71,7 +73,8 @@ object CapMetrics {
     * positive. Metrics are recorded when the consuming action runs — BUT a
     * lazy observe can be lost when AQE empty-relation propagation cancels
     * the subtree's stage (e.g. every row capped away empties a join side);
-    * cap sites that must never be silent use [[observedCheckpoint]]. */
+    * cap sites that must never be silent use [[checkpointHarvest]] (bucket
+    * caps: [[capBuckets]]). */
   def observed(df: DataFrame, site: String, cols: Column*): DataFrame = {
     ensureListener(df.sparkSession)
     df.observe(s"graft.cap.$site#${seq.incrementAndGet()}", cols.head, cols.tail: _*)
@@ -83,11 +86,49 @@ object CapMetrics {
     * returned frame is materialized — callers reuse it across self-join
     * sides, deleting the duplicate upstream pass the two sides would
     * otherwise each pay. (Direct harvest because QueryExecutionListener
-    * does not fire for checkpoint jobs.) */
+    * does not fire for checkpoint jobs.) The job is named after the
+    * first caller outside this object and [[graft.SizeGate]], so event
+    * logs and the UI show the gate or cap site that checkpointed. */
   def checkpointHarvest(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(eager = true)
+    val sc = df.sparkSession.sparkContext
+    // local properties are per thread: concurrent jobs keep their own names
+    val prev = sc.getLocalProperty(ShortCallSite)
+    sc.setCallSite(callerSite())
+    val cp = try df.localCheckpoint(eager = true)
+      finally sc.setLocalProperty(ShortCallSite, prev)
     df.queryExecution.observedMetrics.foreach { case (n, row) => harvest(n, row) }
     cp
+  }
+
+  // the local property behind SparkContext.setCallSite(String)
+  private val ShortCallSite = "callSite.short"
+  private val Helpers = Set("graft.SizeGate", "graft.ops.CapMetrics")
+  private val walker = StackWalker.getInstance()
+
+  /** `localCheckpoint at File.scala:line` of the first stack frame outside
+    * the checkpoint helpers — Spark's short call-site format. The walk
+    * stops at that frame. */
+  private def callerSite(): String =
+    walker.walk(frames => frames
+      .filter(f => !Helpers(f.getClassName.takeWhile(_ != '$')))
+      .findFirst()
+      .map(f => s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}")
+      .orElse("localCheckpoint"))
+
+  /** Block purging: drops every row of a bucket (rows sharing `keys`)
+    * holding more than `maxBucket` rows, so no over-cap bucket reaches the
+    * quadratic self-join behind it. The count is a window over the keys the
+    * join shuffles on (no extra exchange). Drops are observed under `site`
+    * (`dropped_rows`, `max_bucket`) and the capped frame is checkpointed
+    * through [[checkpointHarvest]], so the counts cannot be pruned away and
+    * both join sides share one window pass. */
+  def capBuckets(df: DataFrame, site: String, maxBucket: Int, keys: Column*): DataFrame = {
+    val withN = observed(
+      df.withColumn("bucket_n", count(lit(1)).over(Window.partitionBy(keys: _*))),
+      site,
+      sum(when(col("bucket_n") > maxBucket, 1L).otherwise(0L)).as("dropped_rows"),
+      max(col("bucket_n")).as("max_bucket"))
+    checkpointHarvest(withN.filter(col("bucket_n") <= maxBucket).drop("bucket_n"))
   }
 
   /** Latest harvested metrics for a site ("" map if never fired). Listener

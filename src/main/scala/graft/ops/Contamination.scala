@@ -50,12 +50,8 @@ object Contamination {
     * own row, with hit counts attributed to all of them).
     */
   def flagContaminated(train: DataFrame, benchmark: DataFrame,
-      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val m = flagContaminatedManaged(train, benchmark, shingleN, idCol, textCol)
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
-  }
+      shingleN: Int = 6, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    flagContaminatedManaged(train, benchmark, shingleN, idCol, textCol).seal()
 
   /** Lazy variant of [[flagContaminated]]: the returned frame references an
     * internal eager checkpoint (the measured benchmark hash set) — call

@@ -132,10 +132,8 @@ object Curate {
       },
       () => {
         // sparse benchmark hit counts (only docs with hits carry a row)
-        val contam = Contamination.hitCountsManaged(docs, benchmark,
-          cfg.contamShingleN)
-        hits = contam.pairs.localCheckpoint(eager = true)
-        contam.free()
+        hits = Contamination.hitCountsManaged(docs, benchmark,
+          cfg.contamShingleN).seal()
       })
 
     val keepNeardup = col("group_rep").isNull || col("group_rep") === col("doc_id")

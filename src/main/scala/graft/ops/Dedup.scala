@@ -39,12 +39,12 @@ object Dedup {
     * free the internals immediately), so looped callers — bench min-of-N
     * reps, long-lived sessions — retain only O(pairs) block-manager state
     * per call instead of one corpus-sized checkpoint per invocation. */
-  final case class ManagedPairs(pairs: DataFrame, free: () => Unit)
+  final case class ManagedPairs(pairs: DataFrame, free: () => Unit) {
 
-  private def seal(m: ManagedPairs): DataFrame = {
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
+    /** `pairs` eagerly checkpointed, with the internals freed whether or
+      * not the checkpoint succeeds — the body of every plain wrapper over a
+      * `...Managed` op. */
+    def seal(): DataFrame = try pairs.localCheckpoint(eager = true) finally free()
   }
 
   // ---- kernels ---------------------------------------------------------------
@@ -215,7 +215,7 @@ object Dedup {
     * distinct candidate pairs (tiny) → join back to text → exact verify.
     */
   def minhashPairs(docs: DataFrame, cfg: MinHashConfig = MinHashConfig()): DataFrame =
-    seal(minhashPairsManaged(docs, cfg))
+    minhashPairsManaged(docs, cfg).seal()
 
   /** [[minhashPairs]] as a [[ManagedPairs]] (lazy plan + explicit free). */
   def minhashPairsManaged(docs: DataFrame,
@@ -232,21 +232,9 @@ object Dedup {
       }
       .toDF("doc_id", "band", "band_hash")
 
-    // bucket cap: count-over-window shares the join's shuffle key (no extra
-    // exchange); oversized buckets are dropped before the quadratic
-    // self-join. The capped frame is observed+checkpointed (drop counts can
-    // never be silently pruned; both join sides share ONE window pass) and
-    // the upstream signature checkpoint is freed — net block-manager
-    // footprint unchanged.
-    val bucketW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("band_hash"))
-    val withN = CapMetrics.observed(
-      sigs.withColumn("bucket_n", count(lit(1)).over(bucketW)),
-      "dedup.minhash",
-      sum(when(col("bucket_n") > cfg.maxBandBucket, 1L).otherwise(0L)).as("dropped_rows"),
-      max(col("bucket_n")).as("max_bucket"))
-    val capped = CapMetrics.checkpointHarvest(
-      withN.filter(col("bucket_n") <= cfg.maxBandBucket).drop("bucket_n"))
+    // oversized buckets are dropped before the quadratic self-join
+    val capped = CapMetrics.capBuckets(sigs, "dedup.minhash", cfg.maxBandBucket,
+      col("band"), col("band_hash"))
 
     val a = capped.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
     val b = capped.select(col("doc_id").as("doc_b"), col("band"), col("band_hash"))
@@ -288,7 +276,7 @@ object Dedup {
     * curation sweep sub-quadratic at corpus scale). */
   def ngramJaccardPairs(docs: DataFrame, shingleN: Int = 3,
       minJaccard: Double = 0.5): DataFrame =
-    seal(ngramJaccardPairsManaged(docs, shingleN, minJaccard))
+    ngramJaccardPairsManaged(docs, shingleN, minJaccard).seal()
 
   /** [[ngramJaccardPairs]] as a [[ManagedPairs]] (lazy plan + explicit
     * free of the PPJoin candidate checkpoint). */
@@ -328,7 +316,7 @@ object Dedup {
     * dropped rows are observed under CapMetrics site `dedup.simhash`. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3, blocks: Int = 8,
       comboSize: Int = 2, maxBucket: Int = 10000): DataFrame =
-    seal(simhashPairsManaged(docs, maxHamming, blocks, comboSize, maxBucket))
+    simhashPairsManaged(docs, maxHamming, blocks, comboSize, maxBucket).seal()
 
   /** [[simhashPairs]] as a [[ManagedPairs]] (lazy plan + explicit free). */
   def simhashPairsManaged(docs: DataFrame, maxHamming: Int = 3, blocks: Int = 8,
@@ -352,17 +340,8 @@ object Dedup {
         }: _*)).as("c"))
       .select(col("doc_id"), col("simhash"),
         col("c.combo_idx").as("combo_idx"), col("c.combo_key").as("combo_key"))
-    val bucketW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("combo_idx"), col("combo_key"))
-    val withN = CapMetrics.observed(
-      keyed.withColumn("bucket_n", count(lit(1)).over(bucketW)),
-      "dedup.simhash",
-      sum(when(col("bucket_n") > maxBucket, 1L).otherwise(0L)).as("dropped_rows"),
-      max(col("bucket_n")).as("max_bucket"))
-    // observed + checkpointed: drop counts can't be pruned away, and both
-    // self-join sides share one window/explode pass (sh freed afterwards)
-    val capped = CapMetrics.checkpointHarvest(
-      withN.filter(col("bucket_n") <= maxBucket).drop("bucket_n"))
+    val capped = CapMetrics.capBuckets(keyed, "dedup.simhash", maxBucket,
+      col("combo_idx"), col("combo_key"))
     val a = capped.select(col("doc_id").as("doc_a"), col("simhash").as("h_a"),
       col("combo_idx"), col("combo_key"))
     val b = capped.select(col("doc_id").as("doc_b"), col("simhash").as("h_b"),

@@ -70,12 +70,8 @@ object DeltaDedup {
     * `dedup.delta`), but the probe side of the candidate join is batch-only
     * — old×old buckets contribute no pairs and no join work. */
   def minhashPairsDelta(batch: DataFrame, corpus: DataFrame,
-      cfg: Dedup.MinHashConfig = Dedup.MinHashConfig()): DataFrame = {
-    val m = minhashPairsDeltaManaged(batch, corpus, cfg)
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
-  }
+      cfg: Dedup.MinHashConfig = Dedup.MinHashConfig()): DataFrame =
+    minhashPairsDeltaManaged(batch, corpus, cfg).seal()
 
   /** [[minhashPairsDelta]] as a [[Dedup.ManagedPairs]] (lazy plan +
     * explicit free of the corpus-scale signature checkpoint). */
@@ -94,17 +90,9 @@ object DeltaDedup {
           cfg.numHashes, cfg.bands).map { case (b, h) => (id, isNew, b, h) }
       }.toDF("doc_id", "is_new", "band", "band_hash")
 
-    // bucket cap over the COMBINED frame (same key space as the full op);
-    // drops observed, frame checkpointed so both join sides share one pass
-    val bucketW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("band_hash"))
-    val withN = CapMetrics.observed(
-      sigs.withColumn("bucket_n", count(lit(1)).over(bucketW)),
-      "dedup.delta",
-      sum(when(col("bucket_n") > cfg.maxBandBucket, 1L).otherwise(0L)).as("dropped_rows"),
-      max(col("bucket_n")).as("max_bucket"))
-    val capped = CapMetrics.checkpointHarvest(
-      withN.filter(col("bucket_n") <= cfg.maxBandBucket).drop("bucket_n"))
+    // bucket cap over the COMBINED frame (same key space as the full op)
+    val capped = CapMetrics.capBuckets(sigs, "dedup.delta", cfg.maxBandBucket,
+      col("band"), col("band_hash"))
 
     // probe side: batch only — old×old never meets
     val a = capped.filter(col("is_new"))

@@ -73,12 +73,8 @@ object DupSpans {
   /** Sealing variant of [[dupSpanStatsManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal duplicated-set checkpoint. */
   def dupSpanStats(docs: DataFrame, windowW: Int = 8, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val m = dupSpanStatsManaged(docs, windowW, minDocs, idCol, textCol)
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    dupSpanStatsManaged(docs, windowW, minDocs, idCol, textCol).seal()
 
   /** Merged duplicated spans per doc (`idCol, __isl, __mn, __mx, __nw`):
     * the gaps-and-islands core shared by the stats and removal ops.
@@ -176,12 +172,8 @@ object DupSpans {
     * strictly smaller than the text already on the row; the collect +
     * removal join reuses the doc-id partitioning from the span merge. */
   def removeDupSpans(docs: DataFrame, windowW: Int = 8, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val m = removeDupSpansManaged(docs, windowW, minDocs, idCol, textCol)
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    removeDupSpansManaged(docs, windowW, minDocs, idCol, textCol).seal()
 
   /** [[removeDupSpans]] as a [[Dedup.ManagedPairs]] (lazy plan + explicit
     * free of the duplicated-window-set checkpoint). */

@@ -41,11 +41,8 @@ object Mixing {
     * auditability (every kept row satisfies `cum_before < budget`). */
   def mixByBudget(df: DataFrame, budgets: Map[String, Long],
       sourceCol: String = "source", idCol: String = "doc_id",
-      weightCol: String = "n_chars", salt: String = "mix"): DataFrame = {
-    val m = mixByBudgetManaged(df, budgets, sourceCol, idCol, weightCol, salt)
-    try m.pairs.localCheckpoint(eager = true)
-    finally m.free()
-  }
+      weightCol: String = "n_chars", salt: String = "mix"): DataFrame =
+    mixByBudgetManaged(df, budgets, sourceCol, idCol, weightCol, salt).seal()
 
   /** Lazy variant of [[mixByBudget]] (the [[Dedup.ManagedPairs]]
     * contract: materialize, then `free()`). */

@@ -44,11 +44,8 @@ object Percentile {
     * (order would be engine-dependent); filter or impute first. Sealing
     * variant — lazy plan + free thunk is [[rankBucketsManaged]]. */
   def rankBuckets(df: DataFrame, k: Int, scoreCol: String = "score",
-      idCol: String = "doc_id"): DataFrame = {
-    val m = rankBucketsManaged(df, k, scoreCol, idCol)
-    try m.pairs.localCheckpoint(eager = true)
-    finally m.free()
-  }
+      idCol: String = "doc_id"): DataFrame =
+    rankBucketsManaged(df, k, scoreCol, idCol).seal()
 
   /** Lazy variant: the returned frame references the sorted-input eager
     * checkpoint — call `free()` only after materializing. */
@@ -112,11 +109,8 @@ object Percentile {
     * partitions+groups-bounded, never partitions×groups. Null group keys
     * are rejected per row (they would silently drop in the equi-join). */
   def rankBucketsBy(df: DataFrame, k: Int, scoreCol: String = "score",
-      idCol: String = "doc_id", byCol: String = "lang"): DataFrame = {
-    val m = rankBucketsByManaged(df, k, scoreCol, idCol, byCol)
-    try m.pairs.localCheckpoint(eager = true)
-    finally m.free()
-  }
+      idCol: String = "doc_id", byCol: String = "lang"): DataFrame =
+    rankBucketsByManaged(df, k, scoreCol, idCol, byCol).seal()
 
   /** Lazy variant of [[rankBucketsBy]] (the [[Dedup.ManagedPairs]]
     * contract). */

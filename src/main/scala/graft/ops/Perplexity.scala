@@ -51,12 +51,8 @@ object Perplexity {
 
   /** Sealing variant of [[lmScoreManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal count-table checkpoints. */
-  def lmScore(docs: DataFrame, target: DataFrame, addK: Double = 1.0): DataFrame = {
-    val m = lmScoreManaged(docs, target, addK)
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
-  }
+  def lmScore(docs: DataFrame, target: DataFrame, addK: Double = 1.0): DataFrame =
+    lmScoreManaged(docs, target, addK).seal()
 
   /** Lazy variant: the returned frame references the internal eager
     * checkpoints of the measured count tables — call `free()` only after

@@ -61,12 +61,8 @@ object QualityClassifier {
   /** Sealing variant of [[nbScoreManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal count-table checkpoints. */
   def nbScore(docs: DataFrame, positive: DataFrame, negative: DataFrame,
-      addK: Double = 1.0): DataFrame = {
-    val m = nbScoreManaged(docs, positive, negative, addK)
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
-  }
+      addK: Double = 1.0): DataFrame =
+    nbScoreManaged(docs, positive, negative, addK).seal()
 
   /** Lazy variant: the returned frame references the internal eager
     * checkpoints of the measured count tables — call `free()` only after

@@ -144,15 +144,6 @@ object Quantize {
   private val Q8MetaRe =
     """\{"fingerprint":(-?\d+),"count":(\d+),"dim":(\d+)\}\n?""".r
 
-  /** Order-independent corpus fingerprint (xor of per-row hashes + count)
-    * — same guard as the persisted IVF index. */
-  private def corpusFingerprint(corpus: DataFrame, idCol: String,
-      embCol: String): (Long, Long) = {
-    val row = corpus.agg(
-      bit_xor(xxhash64(col(idCol), col(embCol))), count(lit(1))).head()
-    (if (row.isNullAt(0)) 0L else row.getLong(0), row.getLong(1))
-  }
-
   /** Fit + encode ONCE and persist under `dir`: `params.parquet`
     * (pos, mn, mx — O(dim) rows), `codes.parquet` (4x smaller than the
     * float corpus) and `_META.json` with the corpus fingerprint. Repeated
@@ -162,7 +153,7 @@ object Quantize {
       embCol: String = "embedding"): Params = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (fp, n) = corpusFingerprint(corpus, idCol, embCol)
+    val (fp, n) = Similarity.corpusFingerprint(corpus, idCol, embCol)
     val p = fit(corpus, embCol)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     p.mins.indices.map(i => (i, p.mins(i), p.maxes(i))).toDF("pos", "mn", "mx")
@@ -197,7 +188,7 @@ object Quantize {
       embCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     val meta = java.nio.file.Files.readString(q8MetaPath(dir))
-    val (fp, n) = corpusFingerprint(corpus, idCol, embCol)
+    val (fp, n) = Similarity.corpusFingerprint(corpus, idCol, embCol)
     val dim = meta match {
       case Q8MetaRe(_, _, d) => d.toInt
       case _ => throw new IllegalArgumentException(

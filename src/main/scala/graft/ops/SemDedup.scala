@@ -65,12 +65,8 @@ object SemDedup {
     * multi-assignment. SEALED result (eager checkpoint of the small pair
     * set; the corpus-scale assignment checkpoint is freed before
     * returning — the [[Dedup.ManagedPairs]] posture). */
-  def pairs(corpus: DataFrame, cfg: Config = Config()): DataFrame = {
-    val m = pairsManaged(corpus, cfg)
-    val out = m.pairs.localCheckpoint(eager = true)
-    m.free()
-    out
-  }
+  def pairs(corpus: DataFrame, cfg: Config = Config()): DataFrame =
+    pairsManaged(corpus, cfg).seal()
 
   /** [[pairs]] as a [[Dedup.ManagedPairs]] (lazy plan + explicit free of
     * the corpus-scale assignment checkpoint backing it). */
@@ -97,9 +93,8 @@ object SemDedup {
         it.flatMap { case (id, vSeq) =>
           // primitive-array view first: the typed-encoder Seq is not
           // guaranteed indexed and the centroid scoring touches every
-          // element nLists times (identical arithmetic either way)
-          val v = vSeq.toArray.toSeq
-          val cls = Similarity.nearestCentroids(v, cs, nAssign).sorted
+          // element nLists times
+          val cls = Similarity.nearestCentroidsArr(vSeq.toArray, cs, nAssign).sorted
           cls.map(cl => (cl, id, vSeq, cls))
         }
       }
@@ -132,17 +127,12 @@ object SemDedup {
         // hoist per-row work out of the O(k^2) loop: unbox the embedding to
         // a primitive array ONCE and cache its norm — the cosine inside the
         // pair loop is then a single primitive-array dot. Arithmetic is
-        // identical to Similarity.cosineKernel (same double accumulation
-        // order, norms just cached), so results are bit-equal; the boxed
-        // 3-pass formulation measured ~40 s at 2k vectors x dim 64.
+        // Similarity.cosineKernel's (the same dotArr, norms just cached), so
+        // results are bit-equal; the boxed 3-pass formulation measured
+        // ~40 s at 2k vectors x dim 64.
         val m = it.map { case (_, id, v, cls) =>
-          val arr = new Array[Float](v.length)
-          var d = 0
-          while (d < arr.length) { arr(d) = v(d); d += 1 }
-          var nsq = 0.0
-          d = 0
-          while (d < arr.length) { nsq += arr(d).toDouble * arr(d); d += 1 }
-          (id, arr, math.sqrt(nsq), cls)
+          val arr = v.toArray
+          (id, arr, math.sqrt(Similarity.dotArr(arr, arr)), cls)
         }.toArray
         val buf = Vector.newBuilder[(Long, Long, Double)]
         var i = 0
@@ -152,11 +142,7 @@ object SemDedup {
             val (idA, vA, nA, clsA) = m(i)
             val (idB, vB, nB, clsB) = m(j)
             if (idA != idB && firstCommon(clsA, clsB) == cl) {
-              var dot = 0.0
-              var d = 0
-              val n = math.min(vA.length, vB.length)
-              while (d < n) { dot += vA(d).toDouble * vB(d).toDouble; d += 1 }
-              val cos = dot / (nA * nB)
+              val cos = Similarity.dotArr(vA, vB) / (nA * nB)
               if (cos >= threshold)
                 buf += (if (idA < idB) (idA, idB, cos) else (idB, idA, cos))
             }

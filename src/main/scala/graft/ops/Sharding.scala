@@ -36,11 +36,8 @@ object Sharding {
     * one row per input row. Sealing variant — the lazy pass-2 plan plus the
     * free thunk for its internal checkpoint is [[packByBudgetManaged]]. */
   def packByBudget(df: DataFrame, budget: Long, idCol: String = "doc_id",
-      weightCol: String = "n_chars"): DataFrame = {
-    val m = packByBudgetManaged(df, budget, idCol, weightCol)
-    try m.pairs.localCheckpoint(eager = true)
-    finally m.free()
-  }
+      weightCol: String = "n_chars"): DataFrame =
+    packByBudgetManaged(df, budget, idCol, weightCol).seal()
 
   /** Lazy variant: the returned frame references the sorted-input eager
     * checkpoint — call `free()` only after materializing. */

@@ -29,8 +29,13 @@ object Similarity {
   // ---- kernels ---------------------------------------------------------------
 
   /** dot(a,b), double accumulation, index order (matches DuckDB's
-    * list_cosine_similarity numerics — verified exact in the q_knn oracle). */
-  def dotKernel(a: Seq[Float], b: Seq[Float]): Double = {
+    * list_cosine_similarity numerics — verified exact in the q_knn oracle).
+    * Primitive arrays: UDFs declared over `Array[Float]` receive the row's
+    * ArrayData via one `toFloatArray()` copy and then run this loop; a
+    * `Seq[Float]` loop pays a boxed `apply` per ELEMENT per call instead —
+    * measured the dominant verify cost at the near-exhaustive
+    * q_embed_neardup config. */
+  def dotArr(a: Array[Float], b: Array[Float]): Double = {
     var acc = 0.0
     var i = 0
     val n = math.min(a.length, b.length)
@@ -38,21 +43,9 @@ object Similarity {
     acc
   }
 
-  def cosineKernel(a: Seq[Float], b: Seq[Float]): Double =
-    dotKernel(a, b) / (math.sqrt(dotKernel(a, a)) * math.sqrt(dotKernel(b, b)))
-
-  /** [[dotKernel]] over primitive arrays — the identical IEEE accumulation
-    * (same index order, same double widening), O(1) unboxed access. UDFs
-    * declared over `Array[Float]` receive the row's ArrayData via one
-    * `toFloatArray()` copy and then run this loop; the `Seq[Float]` form
-    * pays a boxed `apply` per ELEMENT per call instead — measured the
-    * dominant verify cost at the near-exhaustive q_embed_neardup config. */
-  def dotArr(a: Array[Float], b: Array[Float]): Double = {
-    var acc = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
+  def cosineKernel(a: Seq[Float], b: Seq[Float]): Double = {
+    val (x, y) = (a.toArray, b.toArray)
+    dotArr(x, y) / (math.sqrt(dotArr(x, x)) * math.sqrt(dotArr(y, y)))
   }
 
   private def splitmix64(x0: Long): Long = {
@@ -62,29 +55,9 @@ object Similarity {
     x ^ (x >>> 31)
   }
 
-  /** [[bucketKernel]] over a primitive array — identical hyperplane signs
-    * (same splitmix64 draws, same accumulation order), unboxed access. */
-  private def bucketKernelArr(vec: Array[Float], seed: Int, table: Int, bits: Int): Long = {
-    var out = 0L
-    var b = 0
-    while (b < bits) {
-      var acc = 0.0
-      var d = 0
-      val n = vec.length
-      while (d < n) {
-        val h = splitmix64((seed.toLong << 40) ^ (table.toLong << 24) ^ (b.toLong << 12) ^ d.toLong)
-        acc += (if ((h & 1L) == 0L) vec(d).toDouble else -vec(d).toDouble)
-        d += 1
-      }
-      if (acc >= 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
   /** Sign-LSH bucket for one table: `bits` sign bits of projections onto
     * deterministic ±1 hyperplanes. */
-  def bucketKernel(vec: Seq[Float], seed: Int, table: Int, bits: Int): Long = {
+  private def bucketKernelArr(vec: Array[Float], seed: Int, table: Int, bits: Int): Long = {
     var out = 0L
     var b = 0
     while (b < bits) {
@@ -132,6 +105,43 @@ object Similarity {
     else df
   }
 
+  /** One query's bounded top-k under the strict total order (cos desc,
+    * vec_id asc): the first k pushes fill the slots, every later push
+    * replaces the worst slot when it is better. A local top-k under a strict
+    * total order always contains every global top-k member, so the per-
+    * partition heaps feeding one global rank window change no rank, value
+    * or tie-break. */
+  private final class TopK(k: Int) {
+    private val cs = new Array[Double](k)
+    private val ids = new Array[Long](k)
+    private var n = 0
+    private var worst = 0
+
+    private def worseThan(c1: Double, i1: Long, c2: Double, i2: Long): Boolean =
+      c1 < c2 || (c1 == c2 && i1 > i2)
+
+    private def rescanWorst(): Unit = {
+      var w = 0; var j = 1
+      while (j < k) {
+        if (worseThan(cs(j), ids(j), cs(w), ids(w))) w = j
+        j += 1
+      }
+      worst = w
+    }
+
+    def push(c: Double, id: Long): Unit =
+      if (n < k) {
+        cs(n) = c; ids(n) = id; n += 1
+        if (n == k) rescanWorst()
+      } else if (worseThan(cs(worst), ids(worst), c, id)) {
+        cs(worst) = c; ids(worst) = id; rescanWorst()
+      }
+
+    /** The kept entries as `(qid, vec_id, cos)` rows. */
+    def rows(qid: Long): Iterator[(Long, Long, Double)] =
+      Iterator.range(0, n).map(j => (qid, ids(j), cs(j)))
+  }
+
   /** Exact top-k neighbors for each query row.
     * `queries` must have (query_id, q_embedding).
     *
@@ -166,56 +176,21 @@ object Similarity {
         .mapPartitions { it =>
           val q = bc.value
           val nq = q.length
-          // array-specialized dot, same accumulation order as dotKernel —
-          // with the norms PRECOMPUTED (once per query, once per corpus
-          // row) the cosine is the identical IEEE expression
+          // norms PRECOMPUTED (once per query, once per corpus row): the
+          // cosine is the identical IEEE expression
           // dot/(sqrt(aa)*sqrt(bb)) at a third of the multiplies
-          def dotA(a: Array[Float], b: Array[Float]): Double = {
-            var acc = 0.0; var i = 0; val n = math.min(a.length, b.length)
-            while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-            acc
-          }
-          val qn = q.map(p => math.sqrt(dotA(p._2, p._2)))
-          val hc = Array.fill(nq)(new Array[Double](k))
-          val hi = Array.fill(nq)(new Array[Long](k))
-          val hn = new Array[Int](nq)
-          val worst = new Array[Int](nq)
-          // strict total order: better = higher cos, ties to smaller vec_id
-          def worseThan(c1: Double, i1: Long, c2: Double, i2: Long): Boolean =
-            c1 < c2 || (c1 == c2 && i1 > i2)
-          def rescanWorst(qi: Int): Unit = {
-            var w = 0; var j = 1
-            while (j < k) {
-              if (worseThan(hc(qi)(j), hi(qi)(j), hc(qi)(w), hi(qi)(w))) w = j
-              j += 1
-            }
-            worst(qi) = w
-          }
+          val qn = q.map(p => math.sqrt(dotArr(p._2, p._2)))
+          val heaps = Array.fill(nq)(new TopK(k))
           it.foreach { case (vid, vecSeq) =>
             val vec = vecSeq.toArray[Float]
-            val vn = math.sqrt(dotA(vec, vec))
+            val vn = math.sqrt(dotArr(vec, vec))
             var qi = 0
             while (qi < nq) {
-              val qid = q(qi)._1
-              if (qid != vid) {
-                val c = dotA(q(qi)._2, vec) / (qn(qi) * vn)
-                val n = hn(qi)
-                if (n < k) {
-                  hc(qi)(n) = c; hi(qi)(n) = vid; hn(qi) = n + 1
-                  if (n + 1 == k) rescanWorst(qi)
-                } else {
-                  val w = worst(qi)
-                  if (worseThan(hc(qi)(w), hi(qi)(w), c, vid)) {
-                    hc(qi)(w) = c; hi(qi)(w) = vid; rescanWorst(qi)
-                  }
-                }
-              }
+              if (q(qi)._1 != vid) heaps(qi).push(dotArr(q(qi)._2, vec) / (qn(qi) * vn), vid)
               qi += 1
             }
           }
-          (0 until nq).iterator.flatMap { qi =>
-            (0 until hn(qi)).iterator.map(j => (q(qi)._1, hi(qi)(j), hc(qi)(j)))
-          }
+          Iterator.range(0, nq).flatMap(qi => heaps(qi).rows(q(qi)._1))
         }.toDF("query_id", "vec_id", "cos")
     } else {
       corpus.crossJoin(queries)
@@ -244,41 +219,9 @@ object Similarity {
         col("cos"))
       .as[(Long, Long, Double)]
       .mapPartitions { it =>
-        val heaps = scala.collection.mutable.LongMap
-          .empty[(Array[Double], Array[Long], Array[Int])]
-        // better = higher cos, ties to smaller vec_id
-        def worseThan(c1: Double, i1: Long, c2: Double, i2: Long): Boolean =
-          c1 < c2 || (c1 == c2 && i1 > i2)
-        it.foreach { case (qid, vid, c) =>
-          val (hc, hi, st) = heaps.getOrElseUpdate(qid,
-            (new Array[Double](k), new Array[Long](k), new Array[Int](2)))
-          val n = st(0)
-          if (n < k) {
-            hc(n) = c; hi(n) = vid; st(0) = n + 1
-            if (n + 1 == k) { // full: locate the worst entry
-              var w = 0; var j = 1
-              while (j < k) {
-                if (worseThan(hc(j), hi(j), hc(w), hi(w))) w = j
-                j += 1
-              }
-              st(1) = w
-            }
-          } else {
-            val w = st(1)
-            if (worseThan(hc(w), hi(w), c, vid)) {
-              hc(w) = c; hi(w) = vid
-              var w2 = 0; var j = 1
-              while (j < k) {
-                if (worseThan(hc(j), hi(j), hc(w2), hi(w2))) w2 = j
-                j += 1
-              }
-              st(1) = w2
-            }
-          }
-        }
-        heaps.iterator.flatMap { case (qid, (hc, hi, st)) =>
-          (0 until st(0)).iterator.map(j => (qid, hi(j), hc(j)))
-        }
+        val heaps = scala.collection.mutable.LongMap.empty[TopK]
+        it.foreach { case (qid, vid, c) => heaps.getOrElseUpdate(qid, new TopK(k)).push(c, vid) }
+        heaps.iterator.flatMap { case (qid, h) => h.rows(qid) }
       }.toDF("query_id", "vec_id", "cos")
   }
 
@@ -286,10 +229,14 @@ object Similarity {
     * per-partition heaps ([[localTopK]]) then ONE window over the tiny
     * candidate union. Output matches the naive
     * `row_number().over(query window)` plan exactly. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    rankWindow(localTopK(scored, k), k)
+
+  /** The global rank window over per-partition top-k candidates. */
+  private def rankWindow(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
-    localTopK(scored, k)
+    candidates
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
@@ -363,16 +310,16 @@ object Similarity {
 
   final case class IvfConfig(nLists: Int = 64, kmeansIters: Int = 5, nProbe: Int = 8)
 
+  /** Training-run counter — observability that [[ivfTopKIndexed]] really
+    * skips the quantizer (asserted in tests; cheap, process-wide). */
+  private[ops] val kmeansRuns = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Deterministic Lloyd k-means coarse quantizer: centroids initialized
     * from the `nLists` smallest ids (pure function of the corpus — no RNG),
     * `iters` assignment/update rounds. Centroids are nLists x dim floats —
     * the ONE thing small enough to legitimately live on the driver (mllib's
     * KMeans does the same); assignments stay distributed. Empty clusters
     * keep their previous centroid. */
-  /** Training-run counter — observability that [[ivfTopKIndexed]] really
-    * skips the quantizer (asserted in tests; cheap, process-wide). */
-  private[ops] val kmeansRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
   def kmeansCentroids(corpus: DataFrame, cfg: IvfConfig): Array[Array[Double]] = {
     kmeansRuns.incrementAndGet()
     val spark = corpus.sparkSession
@@ -421,39 +368,11 @@ object Similarity {
       // accumulators in a tight kernel (one pass, primitive arrays — the
       // per-dim explode+UDF formulation cost ~18 s/iteration at 20k x 64;
       // this runs in ~0.2 s), combined on the driver (nLists x partitions
-      // rows — tiny)
-      val partials = vecs.mapPartitions { it =>
-        val cs = bc.value
-        val dim = if (cs.nonEmpty) cs(0).length else 0
-        val sums = Array.ofDim[Double](cs.length, dim)
-        val counts = new Array[Long](cs.length)
-        it.foreach { case (_, vSeq) =>
-          // primitive-array view first: the typed-encoder Seq is not
-          // guaranteed indexed, and the distance loop touches every
-          // element nLists times (same arithmetic, same order)
-          val v = vSeq.toArray
-          val cl = nearestCentroidArr(v, cs)
-          counts(cl) += 1
-          var d = 0
-          val n = math.min(dim, v.length)
-          while (d < n) { sums(cl)(d) += v(d); d += 1 }
-        }
-        Iterator.tabulate(cs.length)(c => (c, counts(c), sums(c).toSeq))
-      }.collect()
-      val next = centroids.map(_.clone())
-      partials.groupBy(_._1).foreach { case (cl, rows) =>
-        val cnt = rows.map(_._2).sum
-        if (cnt > 0) { // empty cluster keeps its previous centroid
-          val dim = centroids(cl).length
-          val s = new Array[Double](dim)
-          rows.foreach { case (_, _, ps) =>
-            var d = 0
-            while (d < dim) { s(d) += ps(d); d += 1 }
-          }
-          next(cl) = s.map(_ / cnt)
-        }
-      }
-      centroids = next
+      // rows — tiny). The typed-encoder Seq is not guaranteed indexed, so
+      // each row is viewed as a primitive array first.
+      val partials = vecs.mapPartitions(it =>
+        lloydPartials(it.map(_._2.toArray), bc.value)).collect()
+      centroids = lloydCombine(centroids, partials)
       bc.destroy()
     }
     vecs.unpersist()
@@ -462,11 +381,11 @@ object Similarity {
 
   /** Driver-side Lloyd over partition-tagged rows, mirroring the
     * distributed update EXACTLY: initial centroids are the `nLists`
-    * smallest ids; each iteration accumulates (sum, count) per cluster
-    * WITHIN each partition in row order, then combines partials per
-    * cluster in partition order — the same IEEE addition tree as the
-    * mapPartitions + collect path, so the returned centroids are
-    * bit-identical (asserted in OpsSpec's indexed-vs-fresh equality). */
+    * smallest ids; each iteration runs [[lloydPartials]] over each
+    * partition's rows in row order and [[lloydCombine]] over the partials
+    * in partition order — the same functions, so the same IEEE addition
+    * tree as the mapPartitions + collect path, and bit-identical centroids
+    * (asserted in OpsSpec). */
   private def kmeansCentroidsDriver(byPart: Array[(Int, Long, Array[Float])],
       cfg: IvfConfig): Array[Array[Double]] = {
     var centroids: Array[Array[Double]] = byPart.sortBy(_._2).take(cfg.nLists)
@@ -477,116 +396,82 @@ object Similarity {
     val slices = pids.map(pid => byPart.filter(_._1 == pid))
     for (_ <- 1 to cfg.kmeansIters) {
       val cs = centroids
-      val dim = if (cs.nonEmpty) cs(0).length else 0
-      // partials in (partition, cluster) order — exactly the distributed
-      // collect order
-      val partials = slices.flatMap { slice =>
-        val sums = Array.ofDim[Double](cs.length, dim)
-        val counts = new Array[Long](cs.length)
-        slice.foreach { case (_, _, v) =>
-          val cl = nearestCentroidArr(v, cs)
-          counts(cl) += 1
-          var d = 0
-          val n = math.min(dim, v.length)
-          while (d < n) { sums(cl)(d) += v(d); d += 1 }
-        }
-        Iterator.tabulate(cs.length)(c => (c, counts(c), sums(c).toSeq))
-      }
-      val next = centroids.map(_.clone())
-      partials.groupBy(_._1).foreach { case (cl, rows) =>
-        val cnt = rows.map(_._2).sum
-        if (cnt > 0) {
-          val dimL = centroids(cl).length
-          val s = new Array[Double](dimL)
-          rows.foreach { case (_, _, ps) =>
-            var d = 0
-            while (d < dimL) { s(d) += ps(d); d += 1 }
-          }
-          next(cl) = s.map(_ / cnt)
-        }
-      }
-      centroids = next
+      centroids = lloydCombine(cs,
+        slices.flatMap(slice => lloydPartials(slice.iterator.map(_._3), cs)))
     }
     centroids
   }
 
-  /** Index of the max-cosine centroid (ties to the lower index). */
-  private[ops] def nearestCentroid(v: Seq[Float], cs: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestCos = Double.MinValue
-    var i = 0
-    while (i < cs.length) {
-      val c = cs(i)
-      var dot = 0.0; var nc = 0.0; var nv = 0.0
+  /** One partition's Lloyd partials: `(cluster, count, sums)` for every
+    * centroid, accumulated over `rows` in row order. */
+  private def lloydPartials(rows: Iterator[Array[Float]],
+      cs: Array[Array[Double]]): Iterator[(Int, Long, Array[Double])] = {
+    val dim = if (cs.nonEmpty) cs(0).length else 0
+    val sums = Array.ofDim[Double](cs.length, dim)
+    val counts = new Array[Long](cs.length)
+    rows.foreach { v =>
+      val cl = nearestCentroidArr(v, cs)
+      counts(cl) += 1
       var d = 0
-      val n = math.min(v.length, c.length)
-      while (d < n) {
-        dot += v(d).toDouble * c(d); nc += c(d) * c(d)
-        nv += v(d).toDouble * v(d); d += 1
-      }
-      val cos = if (nc == 0 || nv == 0) -2.0 else dot / math.sqrt(nc * nv)
-      if (cos > bestCos) { bestCos = cos; best = i }
-      i += 1
+      val n = math.min(dim, v.length)
+      while (d < n) { sums(cl)(d) += v(d); d += 1 }
     }
-    best
+    Iterator.tabulate(cs.length)(c => (c, counts(c), sums(c)))
   }
 
-  /** [[nearestCentroid]] over a primitive array — the identical IEEE
-    * expression sequence (same loop order, same ops), O(1) unboxed element
-    * access for the driver Lloyd loop. */
+  /** The next centroids from partials in (partition, cluster) order: each
+    * cluster's sums add in that order and divide by its count; an empty
+    * cluster keeps its previous centroid. */
+  private def lloydCombine(centroids: Array[Array[Double]],
+      partials: Array[(Int, Long, Array[Double])]): Array[Array[Double]] = {
+    val next = centroids.map(_.clone())
+    partials.groupBy(_._1).foreach { case (cl, rows) =>
+      val cnt = rows.map(_._2).sum
+      if (cnt > 0) {
+        val dim = centroids(cl).length
+        val s = new Array[Double](dim)
+        rows.foreach { case (_, _, ps) =>
+          var d = 0
+          while (d < dim) { s(d) += ps(d); d += 1 }
+        }
+        next(cl) = s.map(_ / cnt)
+      }
+    }
+    next
+  }
+
+  /** Cosine of `v` to centroid `c`; -2 (below every real cosine) when
+    * either norm is zero. */
+  private def centroidCos(v: Array[Float], c: Array[Double]): Double = {
+    var dot = 0.0; var nc = 0.0; var nv = 0.0
+    var d = 0
+    val n = math.min(v.length, c.length)
+    while (d < n) {
+      dot += v(d).toDouble * c(d); nc += c(d) * c(d)
+      nv += v(d).toDouble * v(d); d += 1
+    }
+    if (nc == 0 || nv == 0) -2.0 else dot / math.sqrt(nc * nv)
+  }
+
+  /** Index of the max-cosine centroid (ties to the lower index). */
   private def nearestCentroidArr(v: Array[Float], cs: Array[Array[Double]]): Int = {
     var best = 0
     var bestCos = Double.MinValue
     var i = 0
     while (i < cs.length) {
-      val c = cs(i)
-      var dot = 0.0; var nc = 0.0; var nv = 0.0
-      var d = 0
-      val n = math.min(v.length, c.length)
-      while (d < n) {
-        dot += v(d).toDouble * c(d); nc += c(d) * c(d)
-        nv += v(d).toDouble * v(d); d += 1
-      }
-      val cos = if (nc == 0 || nv == 0) -2.0 else dot / math.sqrt(nc * nv)
+      val cos = centroidCos(v, cs(i))
       if (cos > bestCos) { bestCos = cos; best = i }
       i += 1
     }
     best
   }
 
-  private[ops] def nearestCentroids(v: Seq[Float], cs: Array[Array[Double]],
-      nProbe: Int): Seq[Int] = {
-    val scored = cs.indices.map { i =>
-      val c = cs(i)
-      var dot = 0.0; var nc = 0.0; var nv = 0.0
-      var d = 0
-      val n = math.min(v.length, c.length)
-      while (d < n) {
-        dot += v(d).toDouble * c(d); nc += c(d) * c(d)
-        nv += v(d).toDouble * v(d); d += 1
-      }
-      (i, if (nc == 0 || nv == 0) -2.0 else dot / math.sqrt(nc * nv))
-    }
-    scored.sortBy { case (i, cos) => (-cos, i) }.take(nProbe).map(_._1)
-  }
-
-  /** [[nearestCentroids]] over a primitive array — identical scores
-    * (same loop order), identical (-cos, i) sort, unboxed access. */
-  private def nearestCentroidsArr(v: Array[Float], cs: Array[Array[Double]],
-      nProbe: Int): Seq[Int] = {
-    val scored = cs.indices.map { i =>
-      val c = cs(i)
-      var dot = 0.0; var nc = 0.0; var nv = 0.0
-      var d = 0
-      val n = math.min(v.length, c.length)
-      while (d < n) {
-        dot += v(d).toDouble * c(d); nc += c(d) * c(d)
-        nv += v(d).toDouble * v(d); d += 1
-      }
-      (i, if (nc == 0 || nv == 0) -2.0 else dot / math.sqrt(nc * nv))
-    }
-    scored.sortBy { case (i, cos) => (-cos, i) }.take(nProbe).map(_._1)
-  }
+  /** The `nProbe` max-cosine centroids, best first (ties to the lower
+    * index). */
+  private[ops] def nearestCentroidsArr(v: Array[Float], cs: Array[Array[Double]],
+      nProbe: Int): Seq[Int] =
+    cs.indices.map(i => (i, centroidCos(v, cs(i))))
+      .sortBy { case (i, cos) => (-cos, i) }.take(nProbe).map(_._1)
 
   /** The probed-scoring stage shared by [[ivfTopK]] and
     * [[ivfTopKIndexed]]: per-LIST query packs (query id, primitive vector,
@@ -600,8 +485,8 @@ object Similarity {
     * conversion (two boxed Seq[Float] per row) 60 s — the kernel converts
     * each embedding ONCE per corpus row instead of once per scored row.
     * cos = dot(q,v)/(nq·nv) with the identical operand order and
-    * accumulation as [[cosineWithNorms]], and the local heaps use the same
-    * strict total order as [[localTopK]] — output (values, ranks,
+    * accumulation as [[cosineWithNorms]], and the local heaps are
+    * [[localTopK]]'s [[TopK]] — output (values, ranks,
     * tie-breaks) is byte-identical to the join plan, which remains as the
     * over-gate fallback for query sets too large to ship. `listed` needs
     * (vec_id, embedding, lst). */
@@ -618,18 +503,13 @@ object Similarity {
     if (SizeGate.fits("ivf.probe", probeRows, probeBytes)) {
       val qs = queries.select(col("query_id").cast("long"), col("q_embedding"))
         .as[(Long, Seq[Float])].collect()
-      def dotA(a: Array[Float], b: Array[Float]): Double = {
-        var acc = 0.0; var i = 0; val n = math.min(a.length, b.length)
-        while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-        acc
-      }
       // per-list packs: (qid, qvec, qnorm) for every query probing the list
       val packs = Array.fill(centroids.length)(
         Vector.newBuilder[(Long, Array[Float], Double)])
       qs.foreach { case (qid, qv) =>
         val q = qv.toArray
-        val nq = math.sqrt(dotA(q, q))
-        nearestCentroids(qv, centroids, cfg.nProbe).foreach { lst =>
+        val nq = math.sqrt(dotArr(q, q))
+        nearestCentroidsArr(q, centroids, cfg.nProbe).foreach { lst =>
           packs(lst) += ((qid, q, nq))
         }
       }
@@ -641,60 +521,24 @@ object Similarity {
         .as[(Long, Seq[Float], Int)]
         .mapPartitions { it =>
           val pk = bcPacks.value
-          val heaps = scala.collection.mutable.LongMap
-            .empty[(Array[Double], Array[Long], Array[Int])]
-          def worseThan(c1: Double, i1: Long, c2: Double, i2: Long): Boolean =
-            c1 < c2 || (c1 == c2 && i1 > i2)
-          def push(qid: Long, vid: Long, c: Double): Unit = {
-            val (hc, hi, st) = heaps.getOrElseUpdate(qid,
-              (new Array[Double](k), new Array[Long](k), new Array[Int](2)))
-            val n = st(0)
-            if (n < k) {
-              hc(n) = c; hi(n) = vid; st(0) = n + 1
-              if (n + 1 == k) {
-                var w = 0; var j = 1
-                while (j < k) {
-                  if (worseThan(hc(j), hi(j), hc(w), hi(w))) w = j
-                  j += 1
-                }
-                st(1) = w
-              }
-            } else {
-              val w = st(1)
-              if (worseThan(hc(w), hi(w), c, vid)) {
-                hc(w) = c; hi(w) = vid
-                var w2 = 0; var j = 1
-                while (j < k) {
-                  if (worseThan(hc(j), hi(j), hc(w2), hi(w2))) w2 = j
-                  j += 1
-                }
-                st(1) = w2
-              }
-            }
-          }
+          val heaps = scala.collection.mutable.LongMap.empty[TopK]
           it.foreach { case (vid, vSeq, lst) =>
             val qsOfList = pk(lst)
             if (qsOfList.nonEmpty) {
               val v = vSeq.toArray
-              val nv = math.sqrt(dotA(v, v))
+              val nv = math.sqrt(dotArr(v, v))
               var i = 0
               while (i < qsOfList.length) {
                 val (qid, q, nq) = qsOfList(i)
-                if (qid != vid) push(qid, vid, dotA(q, v) / (nq * nv))
+                if (qid != vid)
+                  heaps.getOrElseUpdate(qid, new TopK(k)).push(dotArr(q, v) / (nq * nv), vid)
                 i += 1
               }
             }
           }
-          heaps.iterator.flatMap { case (qid, (hc, hi, st)) =>
-            (0 until st(0)).iterator.map(j => (qid, hi(j), hc(j)))
-          }
+          heaps.iterator.flatMap { case (qid, h) => h.rows(qid) }
         }.toDF("query_id", "vec_id", "cos")
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
-          col("cos"))
+      rankWindow(scored, k)
     } else {
       // over-gate fallback: the keyed scoring join (queries too large to
       // ship whole) — norms precomputed per side, local-heap pre-reduction
@@ -734,11 +578,12 @@ object Similarity {
 
   /** Deterministic corpus fingerprint (order-independent: xor of per-row
     * hashes + row count) — one linear agg pass, used to validate that a
-    * persisted index still matches the corpus. */
-  private def corpusFingerprint(corpus: DataFrame): (Long, Long) = {
+    * persisted index (IVF here, int8 in [[Quantize]]) still matches the
+    * corpus. */
+  private[ops] def corpusFingerprint(corpus: DataFrame, idCol: String = "vec_id",
+      embCol: String = "embedding"): (Long, Long) = {
     val row = corpus.agg(
-      bit_xor(xxhash64(col("vec_id"), col("embedding"))),
-      count(lit(1))).head()
+      bit_xor(xxhash64(col(idCol), col(embCol))), count(lit(1))).head()
     (if (row.isNullAt(0)) 0L else row.getLong(0), row.getLong(1))
   }
 
@@ -916,17 +761,8 @@ object Similarity {
     // observed maxBucket cap.
     val keyed = bucketArrays(corpus, "embedding", "vec_id", cfg)
       .select(posexplode(col("bkts")).as(Seq("tbl", "bkt")), col("vec_id"), col("bkts"))
-    val bucketW = Window.partitionBy(col("tbl"), col("bkt"))
-    val withN = CapMetrics.observed(
-      keyed.withColumn("bucket_n", count(lit(1)).over(bucketW)),
-      "similarity.neardup",
-      sum(when(col("bucket_n") > maxBucket, 1L).otherwise(0L)).as("dropped_rows"),
-      max(col("bucket_n")).as("max_bucket"))
-    // observed + checkpointed so drop counts survive AQE empty-relation
-    // pruning (the CapMetrics.checkpointHarvest contract)
-    val capped = CapMetrics.checkpointHarvest(
-      withN.filter(col("bucket_n") <= maxBucket).drop("bucket_n"))
-    val pairs = capped
+    val pairs = CapMetrics.capBuckets(keyed, "similarity.neardup", maxBucket,
+        col("tbl"), col("bkt"))
       .as[(Int, Long, Long, Seq[Long])]
       .groupByKey(r => (r._1, r._2))
       .flatMapGroups { (key: (Int, Long), it: Iterator[(Int, Long, Long, Seq[Long])]) =>
@@ -973,16 +809,13 @@ object Similarity {
     // sqrt, same multiply/divide order), at a third of the verify flops —
     // the verify kernel runs once per CANDIDATE (near-exhaustive fixture
     // config: ~N^2/2 pairs), the norm once per vector
-    val normUdf = udf((v: Array[Float]) => math.sqrt(dotArr(v, v)))
-    val cosPre = udf((a: Array[Float], b: Array[Float], na: Double, nb: Double) =>
-      dotArr(a, b) / (na * nb))
     val ea = corpus.select(col("vec_id").as("vec_a"), col("embedding").as("e_a"),
-      normUdf(col("embedding")).as("n_a"))
+      vecNorm(col("embedding")).as("n_a"))
     val eb = corpus.select(col("vec_id").as("vec_b"), col("embedding").as("e_b"),
-      normUdf(col("embedding")).as("n_b"))
+      vecNorm(col("embedding")).as("n_b"))
     pairs.join(ea, Seq("vec_a")).join(eb, Seq("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        cosPre(col("e_a"), col("e_b"), col("n_a"), col("n_b")).as("cos"))
+        cosineWithNorms(col("e_a"), col("e_b"), col("n_a"), col("n_b")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 }

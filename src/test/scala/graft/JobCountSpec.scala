@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -20,20 +22,27 @@ class JobCountSpec extends AnyFunSuite {
   /** `body`'s result and the Spark jobs it submitted (counted under a job
     * group of its own, after the listener bus has delivered them). */
   private def jobsOf[T](body: => T): (T, Int) = {
+    val (r, names) = jobNamesOf(body)
+    (r, names.size)
+  }
+
+  /** `body`'s result and the names (the short call sites) of the Spark jobs
+    * it submitted. */
+  private def jobNamesOf[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger(0)
+    val names = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
+          names.add(e.stageInfos.maxBy(_.stageId).name) // the result stage
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "job count")
     try {
       val r = body
       GraftTestBus.drain(sc)
-      (r, n.get)
+      (r, names.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -102,5 +111,11 @@ class JobCountSpec extends AnyFunSuite {
       assert((fallback.rows, fallback.sums) == expected)
     }
     assert(agg(full.filter(col("n") > 100))._1 == 0L)
+    // the checkpoint job is named after the gate's caller, not the helper
+    // that runs it, and the caller's own call site comes back afterwards
+    val (_, names) = jobNamesOf(SizeGate.checkpoint(full, units: _*))
+    assert(names.nonEmpty)
+    names.foreach(n => assert(n.startsWith("localCheckpoint at JobCountSpec.scala:"), n))
+    assert(spark.sparkContext.getLocalProperty("callSite.short") == null)
   }
 }

@@ -61,6 +61,23 @@ class DeltaDedupSpec extends AnyFunSuite {
     assert(full.nonEmpty) // fixture sanity: cross AND new×new pairs exist
     assert(full.exists(p => p._1 == 200L && p._2 == 201L))
     assert(delta == full)
+
+    // a 60-doc clone cluster, half old and half new, over a cap of 50: its
+    // buckets are dropped on both sides of the contract, and the drop is
+    // observed
+    val clone = "the same exact duplicated text appears many many times here"
+    val cappedCfg = cfg.copy(maxBandBucket = 50)
+    val corpusC = corpus.unionByName(docs((0 until 30).map(i => (1000L + i) -> clone): _*))
+    val batchC = batch.unionByName(docs((0 until 30).map(i => (2000L + i) -> clone): _*))
+    val fullC = pairSet(Dedup.minhashPairs(corpusC.unionByName(batchC), cappedCfg))
+      .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2) ||
+        p._1 >= 2000L || p._2 >= 2000L)
+    val deltaC = pairSet(DeltaDedup.minhashPairsDelta(batchC, corpusC, cappedCfg))
+    assert(CapMetrics.await("dedup.delta")(m =>
+      m.getOrElse("dropped_rows", 0L) > 0L && m.getOrElse("max_bucket", 0L) == 60L),
+      s"cap metrics never fired: ${CapMetrics.latest("dedup.delta")}")
+    assert(deltaC == full)
+    assert(fullC == full)
   }
 
   test("ingest over sequential batches == stateless ops vs the accumulated union") {

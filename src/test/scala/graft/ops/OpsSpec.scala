@@ -174,6 +174,11 @@ class DedupSpec extends AnyFunSuite {
     val capped = Dedup.simhashPairs(docs, maxHamming = 3, blocks = 8,
       comboSize = 2, maxBucket = 100).count()
     assert(capped < 1000)
+    // the drop is observed, not silent: the clone cluster fills one bucket
+    // per combination
+    assert(CapMetrics.await("dedup.simhash")(m =>
+      m.getOrElse("dropped_rows", 0L) > 0L && m.getOrElse("max_bucket", 0L) == 500L),
+      s"cap metrics never fired: ${CapMetrics.latest("dedup.simhash")}")
   }
 
   test("minhash band-bucket cap drops oversized buckets — and the drop is observed, not silent") {
@@ -572,12 +577,24 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("embedding near-dup pairs stay within clusters") {
-    val pairs = Similarity.cosineNearDupPairs(corpus, 0.95,
-      Similarity.LshConfig(tables = 8, bits = 4)).collect()
+    val lsh = Similarity.LshConfig(tables = 8, bits = 4)
+    val pairs = Similarity.cosineNearDupPairs(corpus, 0.95, lsh).collect()
     assert(pairs.nonEmpty)
     pairs.foreach { r =>
       assert(r.getLong(0) % 3 == r.getLong(1) % 3)
     }
+    val uncapped = CapMetrics.latest("similarity.neardup")
+    assert(uncapped.get("dropped_rows").contains(0L))
+    val maxBucket = uncapped("max_bucket")
+    assert(maxBucket > 1L)
+    // capped one below the largest bucket: that bucket's rows are dropped
+    // and observed, and no pair appears that the uncapped run lacks
+    val capped = Similarity.cosineNearDupPairs(corpus, 0.95, lsh,
+      maxBucket = (maxBucket - 1).toInt).collect()
+    assert(CapMetrics.await("similarity.neardup")(m =>
+      m.getOrElse("dropped_rows", 0L) > 0L && m.get("max_bucket").contains(maxBucket)),
+      s"cap metrics never fired: ${CapMetrics.latest("similarity.neardup")}")
+    assert(capped.toSet.subsetOf(pairs.toSet))
   }
 }
 
