@@ -131,9 +131,7 @@ object Main {
           .withColumn("turn_idx", lit(0))
           .drop("subgraph_id")
         val r = Pipeline.runFromTriples(triples, dict, linkCfg)
-        Materialize.mergeSnapshot(spark, s"$out/edges", r.edges, Materialize.edgeKey)
-        Materialize.mergeSnapshot(spark, s"$out/nodes", r.nodes,
-          Seq("guid", "entity_type"))
+        Materialize.mergeGraph(spark, out, r.edges, r.nodes)
         r.close()
     }
 

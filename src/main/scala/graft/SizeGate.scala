@@ -18,7 +18,7 @@ object SizeGate {
   // bytes: the collected row, its relation slot and the serialized copy
   private val BroadcastRowBytes = 128L
 
-  // process-wide, not thread-local: gates also run on awaitBoth pool threads
+  // process-wide, not thread-local: gates also run on Fanout pool threads
   private val forced = new AtomicInteger(0)
 
   /** The heap bytes one gated frame may use on the driver. */

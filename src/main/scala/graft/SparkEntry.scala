@@ -50,16 +50,6 @@ object SparkEntry {
     "kg_edges", "kg_nodes", "kg_registry", "kg_mentions",
     "kg_degrees", "kg_two_hop")
 
-  /** Evict the memoized pipeline results (and free their checkpoints) —
-    * for long-lived embedders; the driver-contract mains never need it. */
-  def clearKgCache(): Unit = kgCache.synchronized {
-    kgCache.values.foreach { k =>
-      Seq(k.edges, k.nodes, k.registry, k.personMentions)
-        .foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    }
-    kgCache.clear()
-  }
-
   private def kg(spark: SparkSession, dir: String): Kg =
     kgCache.synchronized {
       kgCache.getOrElseUpdate((spark, dir), {
@@ -75,13 +65,10 @@ object SparkEntry {
         // them as CONCURRENT jobs — serial they cost edges(label+dedup) +
         // nodes + mentions end-to-end; overlapped, the edges job's tail
         // back-fills with the other two (guide §2.6 shape).
-        var edgesCp: DataFrame = null
-        var nodesCp: DataFrame = null
-        var mentionsCp: DataFrame = null
-        awaitAll(
-          () => edgesCp = r.edges.localCheckpoint(eager = true),
-          () => nodesCp = r.nodes.localCheckpoint(eager = true),
-          () => mentionsCp =
+        val Seq(edgesCp, nodesCp, mentionsCp) = Fanout.all(
+          () => r.edges.localCheckpoint(eager = true),
+          () => r.nodes.localCheckpoint(eager = true),
+          () =>
             // mention projection off the pipeline's OWN raw frame — derived
             // here, before close(), so kg_mentions costs a projection, not a
             // second full extraction pass over the corpus
@@ -94,18 +81,6 @@ object SparkEntry {
         out
       })
     }
-
-  /** Run independent materialization thunks as concurrent driver-submitted
-    * Spark jobs; awaits ALL before propagating the first failure (the
-    * [[graft.kg.Materialize.awaitBoth]] contract, n-ary). */
-  private def awaitAll(thunks: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fs = thunks.map(t => Future(t()))
-    val rs = fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    rs.foreach(_.get)
-  }
 
   /** Flagship: full KG pipeline on sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.SizeGate
+import graft.{Fanout, SizeGate}
 import graft.model.Model._
 
 /** Incremental/resumable execution with per-partition checkpoints, lineage
@@ -45,14 +45,6 @@ object Incremental {
   // 1-row parquet write. Measured: the four 1-row writes per bucket were
   // ~2-4 s of pure scheduling overhead per 2-bucket run — the dominant
   // fixed cost of kg_incremental after the r3 optimizations.
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   private val appendSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   // per-process tag: millis + a JVM-local counter alone collide when two
   // PROCESSES append to the same dir in the same millisecond, and POSIX
@@ -148,19 +140,20 @@ object Incremental {
       .select("partition_key").collect().map(_.getInt(0)).toSet
 
   private[graft] def appendCheckpoint(spark: SparkSession, outDir: String, cp: Checkpoint): Unit =
-    appendJsonFile(cpPath(outDir),
-      s"""{"run_id":"${jsonEscape(cp.run_id)}","stage":"${jsonEscape(cp.stage)}",""" +
-      s""""partition_key":${cp.partition_key},"status":"${jsonEscape(cp.status)}",""" +
-      s""""rows_in":${cp.rows_in},"rows_out":${cp.rows_out},""" +
-      s""""started_ms":${cp.started_ms},"finished_ms":${cp.finished_ms}}""" + "\n")
+    appendRows(cpPath(outDir), cpSchema, Seq(cp))
 
   private def appendMetrics(spark: SparkSession, outDir: String,
       rows: Seq[(String, String, Int, String, Long)]): Unit =
-    if (rows.nonEmpty) appendJsonFile(metricsPath(outDir),
-      rows.map { case (r, s, p, m, v) =>
-        s"""{"run_id":"${jsonEscape(r)}","stage":"${jsonEscape(s)}",""" +
-        s""""partition_key":$p,"metric":"${jsonEscape(m)}","value":$v}"""
-      }.mkString("", "\n", "\n"))
+    appendRows(metricsPath(outDir), metricsSchema, rows)
+
+  /** Append `rows` (their fields in `schema`'s order, as [[jsonRows]]
+    * reads them back) as one JSONL file. */
+  private def appendRows(dir: String, schema: StructType, rows: Seq[Product]): Unit =
+    if (rows.nonEmpty) appendJsonFile(dir, rows.map { r =>
+      val o = jsonMapper.createObjectNode()
+      schema.fieldNames.zip(r.productIterator).foreach { case (n, v) => o.putPOJO(n, v) }
+      jsonMapper.writeValueAsString(o) + "\n"
+    }.mkString)
 
   /** Run (or resume) `runId` over the transcript table. Returns the number
     * of buckets actually processed this invocation.
@@ -181,7 +174,6 @@ object Incremental {
       nBuckets: Int = 16,
       linkCfg: Link.Config = Link.Config(fuzzy = false),
       failAtBucket: Option[Int] = None,
-      compactEvery: Int = 8,
       maxConcurrentBuckets: Int = 2): Int = {
     val spark = turns.sparkSession
     Files.createDirectories(Paths.get(outDir))
@@ -209,13 +201,7 @@ object Incremental {
       // The two tables are independent stores: submit their write jobs
       // CONCURRENTLY (the bucket checkpoint lands only after both, so a
       // crash between them just re-runs the bucket — idempotent MERGE).
-      // Pipeline outputs are already key-distinct -> dedupStaged = false.
-      parallel2(
-        () => Materialize.appendDelta(spark, s"$outDir/edges", r.edges,
-          Materialize.edgeKey, compactEvery = compactEvery, dedupStaged = false),
-        () => Materialize.appendDelta(spark, s"$outDir/nodes", r.nodes,
-          Seq("guid", "entity_type"), compactEvery = compactEvery,
-          dedupStaged = false))
+      Materialize.appendGraph(spark, outDir, r.edges, r.nodes)
       // free this bucket's pipeline caches (raw-triple persist + registry
       // checkpoint) — without this, blocks accumulate once per bucket for
       // the whole session (merged tables are parquet-backed, independent)
@@ -263,17 +249,11 @@ object Incremental {
         } finally pool.shutdown()
       }
       // end-of-run compaction: fold trailing deltas into a fresh base so
-      // steady-state reads pay zero merge-on-read cost (independent tables —
-      // concurrent jobs)
-      parallel2(
-        () => Materialize.compact(spark, s"$outDir/edges"),
-        () => Materialize.compact(spark, s"$outDir/nodes"))
+      // steady-state reads pay zero merge-on-read cost
+      Materialize.compactGraph(spark, outDir)
       processed.get()
     } finally input.unpersist() // also on a mid-bucket failure (resume re-checkpoints)
   }
-
-  private def parallel2(a: () => Unit, b: () => Unit): Unit =
-    Materialize.awaitBoth(a, b)
 
   // -- Disjoint Resolver (delta-aware) ---------------------------------------
 
@@ -428,39 +408,36 @@ object Incremental {
       // concurrent driver-submitted jobs (the per-bucket appendDelta shape)
       val rwSubj = bc(rewrite.select(col("old_guid").as("s_old"), col("new_guid").as("s_new")))
       val rwObj = bc(rewrite.select(col("old_guid").as("o_old"), col("new_guid").as("o_new")))
-      val edgeCols = Seq("subj_type", "subj_guid", "pred", "obj_kind", "obj_type",
-        "obj_guid", "obj_string", "obj_int64", "obj_float64")
-      var affectedEdges: DataFrame = null
-      var affectedNodes: DataFrame = null
-      Materialize.awaitBoth(
-        () => {
-          affectedEdges = edges
+      val (affectedEdges, affectedNodes) = Fanout.both(
+        {
+          val affected = edges
             .join(rwSubj, col("subj_guid") === col("s_old"), "left")
             .join(rwObj, col("obj_guid") === col("o_old"), "left")
             .filter(col("s_new").isNotNull || col("o_new").isNotNull)
             .localCheckpoint(eager = true) // feeds the upsert AND the tombstone
-          val edgeUpserts = affectedEdges.select(
+          val edgeUpserts = affected.select(
             col("subj_type"),
             coalesce(col("s_new"), col("subj_guid")).as("subj_guid"),
             col("pred"), col("obj_kind"), col("obj_type"),
             coalesce(col("o_new"), col("obj_guid")).as("obj_guid"),
             col("obj_string"), col("obj_int64"), col("obj_float64"))
           Materialize.appendRewrite(spark, s"$outDir/edges", edgeUpserts,
-            affectedEdges.select(edgeCols.map(col): _*), Materialize.edgeKey)
+            affected.select(Materialize.edgeKey.map(col): _*), Materialize.edgeKey)
+          affected
         },
-        () => {
-          affectedNodes = nodes
+        {
+          val affected = nodes
             .join(bc(rewrite.select(col("old_guid"), col("new_guid"), col("new_name"))),
               col("guid") === col("old_guid"))
             .localCheckpoint(eager = true)
-          val nodeUpserts = affectedNodes.select(col("new_guid").as("guid"),
+          val nodeUpserts = affected.select(col("new_guid").as("guid"),
             col("entity_type"), col("new_name").as("name"))
           Materialize.appendRewrite(spark, s"$outDir/nodes", nodeUpserts,
-            affectedNodes.select(col("guid"), col("entity_type")),
-            Seq("guid", "entity_type"))
+            affected.select(Materialize.nodeKey.map(col): _*), Materialize.nodeKey)
+          affected
         })
-      if (affectedEdges != null) affectedEdges.unpersist()
-      if (affectedNodes != null) affectedNodes.unpersist()
+      affectedEdges.unpersist()
+      affectedNodes.unpersist()
     }
     val tRewrite = System.currentTimeMillis()
 

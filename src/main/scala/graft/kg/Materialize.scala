@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
+import graft.Fanout
 import graft.model.Model._
 
 /** S7 — materialize the KG: deduplicated node/edge tables via idempotent
@@ -38,8 +39,12 @@ import graft.model.Model._
   *    instead of an O(table) snapshot;
   *  - [[Materialize.compact]] folds deltas/tombstones back into a new base
   *    every `compactEvery` appends (and at end of run), bounding read cost;
-  *  - old snapshots/deltas are GC'd after a compaction/rewrite
-  *    (`retainSnapshots` bases kept for in-flight readers).
+  *  - old snapshots/deltas are GC'd after a compaction/rewrite (the two
+  *    newest bases are kept for in-flight readers).
+  *
+  * Every write goes through one commit step (reserve, write, flip); the
+  * graph's edges/nodes pair is written through [[appendGraph]],
+  * [[mergeGraph]] and [[compactGraph]].
   *
   * The visible state is one `_CURRENT` pointer file naming the base and the
   * live deltas (`snap-N;delta-a;delta-b`), flipped atomically (tmp +
@@ -67,22 +72,7 @@ object Materialize {
   val edgeKey: Seq[String] = Seq("subj_type", "subj_guid", "pred", "obj_kind",
     "obj_type", "obj_guid", "obj_string", "obj_int64", "obj_float64")
 
-  /** Run two independent table writes as concurrent Spark jobs, awaiting
-    * BOTH before propagating a failure: abandoning the in-flight second
-    * future would let a same-JVM retry race its unsynchronized
-    * read-manifest → flip against the orphan (the single-writer assumption
-    * is per TABLE, and an orphan violates it). The first failure rethrows
-    * after both settle. */
-  private[graft] def awaitBoth(a: () => Unit, b: () => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val (fa, fb) = (Future(a()), Future(b()))
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    ra.get
-    rb.get
-  }
+  val nodeKey: Seq[String] = Seq("guid", "entity_type")
 
   /** Labeled triples → deduplicated edge rows (drop lineage, collapse
     * replays/duplicates). Map-side partial aggregation makes this cheap:
@@ -138,11 +128,6 @@ object Materialize {
       Some(Manifest(bases.headOption, deltas, tombs))
     }
   }
-
-  /** Resolve the live BASE snapshot dir, or None (legacy helper — prefer
-    * [[readTable]], which also sees un-compacted deltas). */
-  def currentSnapshot(table: String): Option[String] =
-    currentManifest(table).flatMap(_.base).map(d => Paths.get(table, d).toString)
 
   /** Read the visible table: base ∪ deltas, deduplicated on the stored
     * natural key (merge-on-read), minus tombstoned keys. Compacted tables
@@ -305,12 +290,6 @@ object Materialize {
   private def writeReserved(df: DataFrame, table: String, dirName: String): Unit =
     df.write.mode(SaveMode.Append).parquet(Paths.get(table, dirName).toString)
 
-  /** Run `write` into the reserved `dirNames`; if it throws, drop their
-    * pending markers, so gc reclaims the never-flipped dirs and a table whose
-    * first write failed can pin its layout again. */
-  private def releasingOnFailure(table: String, dirNames: String*)(write: => Unit): Unit =
-    try write catch { case e: Throwable => commitReserved(table, dirNames: _*); throw e }
-
   private[kg] val PendingStaleMs = 15L * 60 * 1000
   private def pendingMarker(table: String, dirName: String): Path =
     Paths.get(table, s".pending-$dirName")
@@ -348,7 +327,10 @@ object Materialize {
   private def withTableLock[T](table: String)(f: => T): T = {
     val keyPathNorm = Paths.get(table).toAbsolutePath.normalize.toString
     val jvm = tableLocks.computeIfAbsent(keyPathNorm, _ => new Object)
-    jvm.synchronized {
+    // re-entered by the thread that holds it (the commit step of a new
+    // base): that thread holds the _LOCK file too
+    if (Thread.holdsLock(jvm)) f
+    else jvm.synchronized {
       Files.createDirectories(Paths.get(table))
       val lock = Paths.get(table, "_LOCK")
       var tries = 0
@@ -381,20 +363,22 @@ object Materialize {
       finally st.close()
     }
 
+  private val RetainSnapshots = 2
+
   /** Drop snapshot/delta dirs no longer referenced by the manifest, keeping
-    * the newest `retainSnapshots` bases for in-flight readers — and, with
+    * the newest [[RetainSnapshots]] bases for in-flight readers — and, with
     * the same grace, every delta newer than the OLDEST retained base: a lazy
     * DataFrame planned from a pre-compaction manifest (base_old + deltas)
     * stays executable until base_old itself ages out (deltas older than the
     * oldest retained base were folded into it and have no live reader). */
-  def gc(table: String, retainSnapshots: Int = 2): Unit = {
+  private def gc(table: String): Unit = {
     currentManifest(table).foreach { m =>
       val live = m.allDirs.toSet
       val pending = pendingDirs(table) // in-flight reservations are NOT garbage
       val all = listTableDirs(table)
       def id(n: String): Long = n.split("-").last.toLong
       val keepBases = all.filter(_.startsWith("snap-"))
-        .sortBy(id).takeRight(math.max(retainSnapshots, 1)).toSet
+        .sortBy(id).takeRight(RetainSnapshots).toSet
       val oldestKeptBase = keepBases.map(id).minOption.getOrElse(Long.MaxValue)
       all.filterNot(n => live.contains(n) || keepBases.contains(n) ||
           pending.contains(n) ||
@@ -403,110 +387,132 @@ object Materialize {
     }
   }
 
+  /** The one commit step of every table write. Under the table lock it runs
+    * `pin` (the schema check), then builds `writes` and reserves one dir per
+    * kind, in order (ids ascend in that order). It writes each frame into
+    * its dir — a single write on the calling thread, several as concurrent
+    * Spark jobs — holding the lock only if the caller does. A write that
+    * throws drops the pending markers, so gc reclaims the never-flipped dirs
+    * and a table whose first write failed can pin its layout again. Then,
+    * under the lock, it flips `next(live manifest, dirs)` in, drops the
+    * markers and returns the new manifest. */
+  private def commit(table: String, pin: => Unit, writes: => Seq[(String, DataFrame)])(
+      next: (Manifest, Seq[String]) => Manifest): Manifest = {
+    val staged = withTableLock(table) {
+      pin
+      writes.map { case (kind, df) => (reserveDir(table, kind), df) }
+    }
+    val dirs = staged.map(_._1)
+    try {
+      val jobs = staged.map { case (d, df) => () => writeReserved(df, table, d) }
+      if (jobs.size == 1) jobs.head() else Fanout.all(jobs: _*)
+    } catch { case e: Throwable => commitReserved(table, dirs: _*); throw e }
+    withTableLock(table) {
+      val m = next(currentManifest(table).getOrElse(Manifest(None, Nil)), dirs)
+      flip(table, m)
+      commitReserved(table, dirs: _*)
+      m
+    }
+  }
+
+  /** The new-base step of [[mergeSnapshot]] and [[compact]]: `frame` becomes
+    * the table's only live dir, then gc. The caller holds the table lock for
+    * the whole operation — the frame reads the live table, so an append
+    * flipping in between would be folded out. Returns the new base dir. */
+  private def newBase(table: String, frame: DataFrame): String = {
+    val m = commit(table, (), Seq("snap" -> frame))((_, dirs) => Manifest(dirs.headOption, Nil))
+    gc(table)
+    m.base.get
+  }
+
+  /** The append step of [[appendDelta]] and [[appendRewrite]]: `pin`, then
+    * the `writes` (kind -> frame) flip in after the live deltas and
+    * tombstones, their data written outside the table lock. Compacts once
+    * `compactEvery` of those are live (0 = never). */
+  private def append(spark: SparkSession, table: String, compactEvery: Int, pin: => Unit)(
+      writes: => Seq[(String, DataFrame)]): Unit = {
+    val m = commit(table, pin, writes) { (live, dirs) =>
+      val (tombs, deltas) = dirs.partition(_.startsWith("tomb-"))
+      Manifest(live.base, live.deltas ++ deltas, live.tombs ++ tombs)
+    }
+    if (compactEvery > 0 && m.deltas.size + m.tombs.size >= compactEvery) compact(spark, table)
+  }
+
   /** MERGE staged rows into `table` on `key`: insert-if-absent semantics
     * (duplicates collapse; reruns are no-ops). Performs a FULL deduplicated
     * rewrite (new base snapshot, deltas folded in and cleared) — use
     * [[appendDelta]] for per-batch increments and let compaction amortize
     * the rewrites. With `replace = true` the staged frame REPLACES the
     * table's rows; its columns must still match the pinned `_SCHEMA` (a
-    * table's schema never changes once a write has flipped). Old snapshots beyond `retainSnapshots` are GC'd. Returns the
-    * merged frame. */
+    * table's schema never changes once a write has flipped). Old snapshots
+    * beyond the newest two are GC'd. Returns the merged frame. */
   def mergeSnapshot(spark: SparkSession, table: String, staged: DataFrame,
-      key: Seq[String], replace: Boolean = false,
-      retainSnapshots: Int = 2): DataFrame = withTableLock(table) {
-    // whole-op critical section: the rewrite reads the live table, so a
-    // concurrent append between read and flip would be silently folded out
+      key: Seq[String], replace: Boolean = false): DataFrame = withTableLock(table) {
     pinLayout(table, key, staged.schema)
     val merged = readTable(spark, table) match {
       case Some(existing) if !replace =>
         existing.unionByName(staged).dropDuplicates(key)
       case _ => staged.dropDuplicates(key)
     }
-    val snapDir = reserveDir(table, "snap")
-    releasingOnFailure(table, snapDir)(writeReserved(merged, table, snapDir))
-    flip(table, Manifest(Some(snapDir), Nil))
-    commitReserved(table, snapDir)
-    gc(table, retainSnapshots)
-    readDir(spark, table, snapDir, pinnedSchema(table))
+    readDir(spark, table, newBase(table, merged), pinnedSchema(table))
   }
 
   /** Append one batch as a delta: O(batch) bytes written, visible
     * immediately through merge-on-read. Triggers [[compact]] once the live
     * delta count reaches `compactEvery` (0 = never auto-compact). Idempotent
     * under replay IF the reader is the contract (duplicate rows across
-    * deltas collapse on read and at the next compaction). */
+    * deltas collapse on read and at the next compaction). `dedupStaged =
+    * false` skips the in-batch dedup shuffle when the caller guarantees the
+    * staged frame is already key-distinct (pipeline outputs are —
+    * [[edges]]/[[nodes]] end in a dedup/agg); merge-on-read would collapse
+    * any duplicates anyway, so this only trades write size. */
   def appendDelta(spark: SparkSession, table: String, staged: DataFrame,
-      key: Seq[String], compactEvery: Int = 8,
-      retainSnapshots: Int = 2, dedupStaged: Boolean = true): Unit = {
-    val deltaDir = withTableLock(table) {
-      pinLayout(table, key, staged.schema)
-      reserveDir(table, "delta")
-    }
-    // dedupStaged = false skips the in-batch dedup shuffle when the caller
-    // guarantees the staged frame is already key-distinct (pipeline outputs
-    // are — Materialize.edges/nodes end in a dedup/agg); merge-on-read
-    // would collapse any duplicates anyway, so this only trades write size.
-    // The (long) data write runs OUTSIDE the manifest lock — only the
-    // read-modify-write of _CURRENT is serialized.
-    releasingOnFailure(table, deltaDir)(writeReserved(
-      if (dedupStaged) staged.dropDuplicates(key) else staged, table, deltaDir))
-    val shouldCompact = withTableLock(table) {
-      val m = currentManifest(table).getOrElse(Manifest(None, Nil))
-      flip(table, Manifest(m.base, m.deltas :+ deltaDir, m.tombs))
-      commitReserved(table, deltaDir)
-      compactEvery > 0 && m.deltas.size + m.tombs.size + 1 >= compactEvery
-    }
-    if (shouldCompact) compact(spark, table, retainSnapshots)
-  }
+      key: Seq[String], compactEvery: Int = 8, dedupStaged: Boolean = true): Unit =
+    append(spark, table, compactEvery, pinLayout(table, key, staged.schema))(
+      Seq("delta" -> (if (dedupStaged) staged.dropDuplicates(key) else staged)))
 
   /** Partial rewrite under ONE manifest flip: delete `deleteKeys` (key
     * columns; extra columns are ignored) and insert `upserts`, both
-    * O(affected-rows) writes. The tombstone dir id is minted BEFORE the
-    * delta id, so a key present in both resolves as insert-wins — and any
-    * LATER appendDelta of a deleted key resurrects it (Iceberg
-    * sequence-number semantics), which is what makes re-delivered
-    * pre-rewrite rows safe: they reappear and the next resolver pass
-    * re-merges them (eventual consistency). */
+    * O(affected-rows) writes, run as concurrent Spark jobs. The tombstone
+    * dir id is reserved BEFORE the delta id, so a key present in both
+    * resolves as insert-wins — and any LATER appendDelta of a deleted key
+    * resurrects it (Iceberg sequence-number semantics), which is what makes
+    * re-delivered pre-rewrite rows safe: they reappear and the next resolver
+    * pass re-merges them (eventual consistency). */
   def appendRewrite(spark: SparkSession, table: String, upserts: DataFrame,
-      deleteKeys: DataFrame, key: Seq[String], compactEvery: Int = 8,
-      retainSnapshots: Int = 2): Unit = {
-    // tomb reserved BEFORE delta: monotonic reservation keeps tomb id <
-    // delta id, preserving the insert-wins resolution for keys in both.
-    // The ids only need the RESERVATION ordered — the two data writes are
-    // independent files invisible until the manifest flip, so they run as
-    // concurrent Spark jobs (both awaited even on failure — awaitBoth)
-    val (tombDir, deltaDir) = withTableLock(table) {
-      pinLayout(table, key, upserts.schema, Some(deleteKeys.schema))
-      (reserveDir(table, "tomb"), reserveDir(table, "delta"))
-    }
-    releasingOnFailure(table, tombDir, deltaDir)(awaitBoth(
-      () => writeReserved(deleteKeys.select(key.map(col): _*).dropDuplicates(key),
-        table, tombDir),
-      () => writeReserved(upserts.dropDuplicates(key), table, deltaDir)))
-    val shouldCompact = withTableLock(table) {
-      val m = currentManifest(table).getOrElse(Manifest(None, Nil))
-      flip(table, Manifest(m.base, m.deltas :+ deltaDir, m.tombs :+ tombDir))
-      commitReserved(table, tombDir, deltaDir)
-      compactEvery > 0 && m.deltas.size + m.tombs.size + 2 >= compactEvery
-    }
-    if (shouldCompact) compact(spark, table, retainSnapshots)
-  }
+      deleteKeys: DataFrame, key: Seq[String], compactEvery: Int = 8): Unit =
+    append(spark, table, compactEvery,
+      pinLayout(table, key, upserts.schema, Some(deleteKeys.schema)))(Seq(
+      "tomb" -> deleteKeys.select(key.map(col): _*).dropDuplicates(key),
+      "delta" -> upserts.dropDuplicates(key)))
 
   /** Fold base + deltas into a fresh base snapshot and GC. A no-op when
     * there are no deltas. */
-  def compact(spark: SparkSession, table: String,
-      retainSnapshots: Int = 2): Unit = withTableLock(table) {
-    // whole-op critical section (like mergeSnapshot): the fold reads the
-    // manifest's dirs, so an append flipping in between would be lost
+  def compact(spark: SparkSession, table: String): Unit = withTableLock(table) {
     currentManifest(table).foreach { m =>
-      if (m.deltas.nonEmpty || m.tombs.nonEmpty) {
-        val merged = readTable(spark, table).get
-        val snapDir = reserveDir(table, "snap")
-        releasingOnFailure(table, snapDir)(writeReserved(merged, table, snapDir))
-        flip(table, Manifest(Some(snapDir), Nil))
-        commitReserved(table, snapDir)
-        gc(table, retainSnapshots)
-      }
+      if (m.deltas.nonEmpty || m.tombs.nonEmpty) newBase(table, readTable(spark, table).get)
     }
   }
+
+  // ---- the graph: `outDir/edges` on edgeKey, `outDir/nodes` on nodeKey ----
+
+  /** Append one batch of key-distinct edge and node rows (pipeline outputs)
+    * to the graph under `outDir` as deltas — two independent tables, so two
+    * concurrent writes. */
+  def appendGraph(spark: SparkSession, outDir: String, edges: DataFrame,
+      nodes: DataFrame): Unit =
+    Fanout.all(
+      () => appendDelta(spark, s"$outDir/edges", edges, edgeKey, dedupStaged = false),
+      () => appendDelta(spark, s"$outDir/nodes", nodes, nodeKey, dedupStaged = false))
+
+  /** [[mergeSnapshot]] edge and node rows into the graph under `outDir`;
+    * returns the merged edge and node tables. */
+  def mergeGraph(spark: SparkSession, outDir: String, edges: DataFrame,
+      nodes: DataFrame): (DataFrame, DataFrame) =
+    (mergeSnapshot(spark, s"$outDir/edges", edges, edgeKey),
+      mergeSnapshot(spark, s"$outDir/nodes", nodes, nodeKey))
+
+  /** [[compact]] both graph tables under `outDir`, concurrently. */
+  def compactGraph(spark: SparkSession, outDir: String): Unit =
+    Fanout.all(() => compact(spark, s"$outDir/edges"), () => compact(spark, s"$outDir/nodes"))
 }

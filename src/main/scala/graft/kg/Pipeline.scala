@@ -145,10 +145,7 @@ object Pipeline {
       linkCfg: Link.Config = Link.Config()): Result = {
     val spark = turns.sparkSession
     val r = run(turns, dict, linkCfg)
-    val mergedEdges = Materialize.mergeSnapshot(spark, s"$outDir/edges", r.edges,
-      Materialize.edgeKey)
-    val mergedNodes = Materialize.mergeSnapshot(spark, s"$outDir/nodes", r.nodes,
-      Seq("guid", "entity_type"))
+    val (mergedEdges, mergedNodes) = Materialize.mergeGraph(spark, outDir, r.edges, r.nodes)
     r.close(keepRegistry = true)
     Result(mergedEdges, mergedNodes, r.registry,
       cleanup = { keep => if (!keep) r.registry.unpersist(); () })

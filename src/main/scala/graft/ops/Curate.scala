@@ -122,19 +122,11 @@ object Curate {
     // pipeline's straggler tail back-fills with the other's tasks instead
     // of serializing ~6 small jobs end to end (the Incremental bucket
     // overlap pattern; both futures are awaited even on failure)
-    var groups: DataFrame = null
-    var hits: DataFrame = null
-    graft.kg.Materialize.awaitBoth(
-      () => {
-        // near-dup groups (docs absent from any pair are their own reps)
-        groups = Dedup.dedupGroups(Dedup.ngramJaccardPairs(docs,
-          cfg.neardupShingleN, cfg.minJaccard))
-      },
-      () => {
-        // sparse benchmark hit counts (only docs with hits carry a row)
-        hits = Contamination.hitCountsManaged(docs, benchmark,
-          cfg.contamShingleN).seal()
-      })
+    val (groups, hits) = graft.Fanout.both(
+      // near-dup groups (docs absent from any pair are their own reps)
+      Dedup.dedupGroups(Dedup.ngramJaccardPairs(docs, cfg.neardupShingleN, cfg.minJaccard)),
+      // sparse benchmark hit counts (only docs with hits carry a row)
+      Contamination.hitCountsManaged(docs, benchmark, cfg.contamShingleN).seal())
 
     val keepNeardup = col("group_rep").isNull || col("group_rep") === col("doc_id")
     val cleanContam = coalesce(col("n_hits"), lit(0L)) === 0L

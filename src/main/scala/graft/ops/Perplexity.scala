@@ -75,21 +75,12 @@ object Perplexity {
     // the three count lanes (unigram table, bigram table, vocabulary size)
     // are independent sub-DAGs off the shared tb checkpoint / target scan:
     // build them as concurrent jobs instead of five serial driver barriers
-    var uni: DataFrame = null
-    var big: DataFrame = null
-    var nUni = 0L; var nBig = 0L; var v = 0L
-    graft.kg.Materialize.awaitBoth(
-      () => {
-        val sized = SizeGate.checkpoint(tb.groupBy(col("h1")).agg(count(lit(1)).as("c1")))
-        uni = sized.df; nUni = sized.rows
-      },
-      () => graft.kg.Materialize.awaitBoth(
-        () => {
-          val sized = SizeGate.checkpoint(tb.groupBy(col("h12")).agg(count(lit(1)).as("c2")))
-          big = sized.df; nBig = sized.rows
-        },
-        () => v = target.select(explode(tokK(col("text"))).as("h"))
-          .agg(countDistinct(col("h"))).head().getLong(0)))
+    def counts(h: String, c: String): SizeGate.Sized =
+      SizeGate.checkpoint(tb.groupBy(col(h)).agg(count(lit(1)).as(c)))
+    val (SizeGate.Sized(uni, nUni, _), (SizeGate.Sized(big, nBig, _), v)) = graft.Fanout.both(
+      counts("h1", "c1"),
+      graft.Fanout.both(counts("h12", "c2"), target.select(explode(tokK(col("text"))).as("h"))
+        .agg(countDistinct(col("h"))).head().getLong(0)))
     tb.unpersist()
     val uniP = SizeGate.broadcastIfFits("lm.unigram", uni, nUni)
     val bigP = SizeGate.broadcastIfFits("lm.bigram", big, nBig)

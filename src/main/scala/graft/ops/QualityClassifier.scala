@@ -79,25 +79,14 @@ object QualityClassifier {
     // Each class lane (checkpoint measuring totals/rows + doc count) is
     // independent — two concurrent lanes instead of serial driver
     // barriers; only the shared-vocabulary count needs both tables.
-    var pos: DataFrame = null
-    var neg: DataFrame = null
-    var nPos = 0L; var nNeg = 0L
-    var posRows = 0L; var negRows = 0L
-    var nPosDocs = 0L; var nNegDocs = 0L
-    graft.kg.Materialize.awaitBoth(
-      () => {
-        // consumed by V-union + join
-        val sized = SizeGate.checkpoint(positive.select(explode(tk(col("text"))).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("c_pos")), col("c_pos"))
-        pos = sized.df; posRows = sized.rows; nPos = sized.sums(0)
-        nPosDocs = positive.count()
-      },
-      () => {
-        val sized = SizeGate.checkpoint(negative.select(explode(tk(col("text"))).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("c_neg")), col("c_neg"))
-        neg = sized.df; negRows = sized.rows; nNeg = sized.sums(0)
-        nNegDocs = negative.count()
-      })
+    // each lane: the count table (consumed by V-union + join) measured by
+    // its checkpoint (rows, token total), and the class's doc count
+    def lane(cls: DataFrame, c: String): (SizeGate.Sized, Long) =
+      (SizeGate.checkpoint(cls.select(explode(tk(col("text"))).as("h"))
+        .groupBy(col("h")).agg(count(lit(1)).as(c)), col(c)), cls.count())
+    val ((SizeGate.Sized(pos, posRows, Seq(nPos)), nPosDocs),
+      (SizeGate.Sized(neg, negRows, Seq(nNeg)), nNegDocs)) =
+      graft.Fanout.both(lane(positive, "c_pos"), lane(negative, "c_neg"))
     val v = pos.select(col("h")).union(neg.select(col("h")))
       .distinct().count()
     val prior = math.log(math.max(nPosDocs, 1L).toDouble) -

@@ -76,7 +76,7 @@ object DedupStream {
           val r = DeltaDedup.ingest(s, stateDir, spread, cfg)
           // independent stores: concurrent write jobs, both awaited even on
           // failure (no orphan writer); both frames are key-distinct
-          Materialize.awaitBoth(
+          graft.Fanout.all(
             () => Materialize.appendDelta(s, s"$outDir/classified",
               r.classified, Seq("doc_id"), dedupStaged = false),
             () => Materialize.appendDelta(s, s"$outDir/pairs",

@@ -67,17 +67,10 @@ object StreamingIngest {
         val r = Pipeline.run(spread, dict, linkCfg)
         val t1 = System.nanoTime()
         // delta append per micro-batch: O(batch) bytes, periodic compaction
-        // (every 8 batches) instead of a full-table rewrite per batch. The
-        // two stores are independent — concurrent write jobs, BOTH awaited
-        // even on failure (no orphan writer); pipeline outputs are already
-        // key-distinct -> dedupStaged = false (a crash between them re-runs
-        // the micro-batch: idempotent MERGE).
-        Materialize.awaitBoth(
-          () => Materialize.appendDelta(batch.sparkSession,
-            s"$outDir/edges", r.edges, Materialize.edgeKey, dedupStaged = false),
-          () => Materialize.appendDelta(batch.sparkSession,
-            s"$outDir/nodes", r.nodes, Seq("guid", "entity_type"),
-            dedupStaged = false))
+        // (every 8 batches) instead of a full-table rewrite per batch (a
+        // crash between the two tables re-runs the micro-batch: idempotent
+        // MERGE)
+        Materialize.appendGraph(batch.sparkSession, outDir, r.edges, r.nodes)
         // free per-micro-batch pipeline caches — a long-lived stream would
         // otherwise accumulate one raw-triple persist per batch
         r.close()

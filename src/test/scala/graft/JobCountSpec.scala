@@ -87,6 +87,19 @@ class JobCountSpec extends AnyFunSuite {
         org.apache.spark.sql.Encoders.product[Incremental.Checkpoint].schema)
       .option("mode", "DROPMALFORMED").json(s"$out/_checkpoints")) == done)
     assert(doneOf(Incremental.readCheckpoints(spark, out)) == done)
+    // a run id holding a quote, a backslash, a newline, a tab and a
+    // non-ASCII letter reads back equal through both readers
+    val odd = "r\"\\\n\t\u00e9"
+    assert(odd.length == 6)
+    Incremental.appendCheckpoint(spark, out,
+      Incremental.Checkpoint(odd, "pipeline", 5, "done", -1L, -1L, 0L, 1L))
+    assert(Incremental.completedBuckets(spark, out, odd) == Set(5))
+    def runIds(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("partition_key") === 5).select("run_id").collect().map(_.getString(0)).toSeq
+    assert(runIds(Incremental.readCheckpoints(spark, out)) == Seq(odd))
+    assert(runIds(spark.read.schema(
+        org.apache.spark.sql.Encoders.product[Incremental.Checkpoint].schema)
+      .option("mode", "DROPMALFORMED").json(s"$out/_checkpoints")) == Seq(odd))
   }
 
   test("SizeGate.checkpoint sizes a frame from its own checkpoint job") {

@@ -54,9 +54,9 @@ class SizeGateSpec extends AnyFunSuite {
     assert(fits)
   }
 
-  test("forceDistributed is seen by gates on Materialize.awaitBoth threads") {
+  test("forceDistributed is seen by gates on Fanout threads") {
     var (a, b) = (true, true)
-    SizeGate.forceDistributed(graft.kg.Materialize.awaitBoth(
+    SizeGate.forceDistributed(Fanout.all(
       () => a = SizeGate.fits("spec.pool.a", 1L, 1L),
       () => b = SizeGate.fits("spec.pool.b", 1L, 1L)))
     assert(!a && !b)

@@ -82,7 +82,7 @@ class IncrementalSpec extends AnyFunSuite {
     assert(edges.forall(_.getAs[String]("subj_guid") == canonGuid))
 
     // resolver idempotence: second run changes nothing
-    val snapBefore = Materialize.currentSnapshot(s"$out/nodes")
+    val snapBefore = Materialize.currentManifest(s"$out/nodes").flatMap(_.base)
     Incremental.resolveDisjoint(spark, out)
     val nodes2 = Materialize.readTable(spark, s"$out/nodes").get
       .filter($"entity_type" === "Person").count()

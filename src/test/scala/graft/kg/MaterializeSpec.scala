@@ -49,13 +49,13 @@ class MaterializeSpec extends AnyFunSuite {
     import spark.implicits._
     val table = freshDir() + "/t"
     Materialize.mergeSnapshot(spark, table, Seq(("a", 1L)).toDF("k", "v"), Seq("k"))
-    val s0 = Materialize.currentSnapshot(table).get
+    val s0 = Materialize.currentManifest(table).flatMap(_.base).get
     Materialize.mergeSnapshot(spark, table, Seq(("b", 2L)).toDF("k", "v"), Seq("k"))
-    val s1 = Materialize.currentSnapshot(table).get
+    val s1 = Materialize.currentManifest(table).flatMap(_.base).get
     assert(s0 != s1)
     // previous snapshot data still on disk (reader holding s0 is unaffected)
-    assert(spark.read.parquet(s0).count() == 1)
-    assert(spark.read.parquet(s1).count() == 2)
+    assert(spark.read.parquet(s"$table/$s0").count() == 1)
+    assert(spark.read.parquet(s"$table/$s1").count() == 2)
   }
 
   test("appendDelta writes O(batch) and merge-on-read equals full merge") {
@@ -113,7 +113,7 @@ class MaterializeSpec extends AnyFunSuite {
     val table = freshDir() + "/t"
     (1 to 5).foreach { i =>
       Materialize.mergeSnapshot(spark, table,
-        Seq((s"k$i", i.toLong)).toDF("k", "v"), Seq("k"), retainSnapshots = 2)
+        Seq((s"k$i", i.toLong)).toDF("k", "v"), Seq("k"))
     }
     val snaps = new java.io.File(table).list().filter(_.startsWith("snap-")).toSeq
     assert(snaps.size == 2) // retain-2, older bases reclaimed
@@ -182,6 +182,45 @@ class MaterializeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Materialize.appendDelta(spark, t2,
       Seq(("z", 3L)).toDF("k", "v"), Seq("k", "v"), compactEvery = 0))
 
+    // every writer shares that failure path: a write that throws inside its
+    // Spark job leaves _CURRENT as it was and no pending marker, and the
+    // next write succeeds
+    val t3 = freshDir() + "/t"
+    Materialize.mergeSnapshot(spark, t3, Seq(("a", 1L)).toDF("k", "v"), Seq("k", "v"))
+    Materialize.appendDelta(spark, t3, Seq(("b", 2L)).toDF("k", "v"),
+      Seq("k", "v"), compactEvery = 0)
+    val failing = Seq(("x", 9L)).toDF("k", "v").select(boom($"k").as("k"), $"v")
+    def failsCleanly(write: => Unit): Unit = {
+      val current = Files.readString(Paths.get(t3, "_CURRENT"))
+      intercept[org.apache.spark.SparkException](write)
+      assert(Files.readString(Paths.get(t3, "_CURRENT")) == current)
+      assert(!entries(t3).exists(_.startsWith(".pending-")))
+    }
+    failsCleanly(Materialize.mergeSnapshot(spark, t3, failing, Seq("k", "v")))
+    Materialize.mergeSnapshot(spark, t3, Seq(("c", 3L)).toDF("k", "v"), Seq("k", "v"))
+    failsCleanly(Materialize.appendDelta(spark, t3, failing, Seq("k", "v"), compactEvery = 0))
+    Materialize.appendDelta(spark, t3, Seq(("d", 4L)).toDF("k", "v"),
+      Seq("k", "v"), compactEvery = 0)
+    failsCleanly(Materialize.appendRewrite(spark, t3, upserts = failing,
+      deleteKeys = Seq(("a", 1L)).toDF("k", "v"), key = Seq("k", "v"), compactEvery = 0))
+    Materialize.appendRewrite(spark, t3, upserts = Seq(("e", 5L)).toDF("k", "v"),
+      deleteKeys = Seq(("a", 1L)).toDF("k", "v"), key = Seq("k", "v"), compactEvery = 0)
+    // compaction reads the live dirs: an unreadable delta part file fails its
+    // job; once the file is restored the next compaction succeeds
+    val delta = Materialize.currentManifest(t3).get.deltas.head
+    val parts = entries(s"$t3/$delta").filter(_.endsWith(".parquet"))
+      .map(n => Paths.get(t3, delta, n)).toSeq
+    val saved = parts.map(Files.readAllBytes)
+    parts.foreach(Files.write(_, "not parquet".getBytes))
+    failsCleanly(Materialize.compact(spark, t3))
+    parts.zip(saved).foreach { case (p, b) => Files.write(p, b) }
+    Materialize.compact(spark, t3)
+    val compacted = Materialize.currentManifest(t3).get
+    assert(compacted.base.nonEmpty && compacted.deltas.isEmpty && compacted.tombs.isEmpty)
+    assert(Materialize.readTable(spark, t3).get.collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet ==
+      Set(("b", 2L), ("c", 3L), ("d", 4L), ("e", 5L)))
+
     // Iceberg sequence-number rule: a LATER re-insert of a deleted key
     // resurrects it (re-delivered pre-rewrite rows are not lost — the next
     // resolver pass re-merges them)
@@ -200,19 +239,6 @@ class MaterializeSpec extends AnyFunSuite {
     val mc = Materialize.currentManifest(table).get
     assert(mc.base.nonEmpty && mc.deltas.isEmpty && mc.tombs.isEmpty)
     assert(read() == Set(("a", 10L), ("b", 2L), ("c", 3L), ("d", 4L)))
-  }
-
-  test("awaitBoth settles the second action even when the first fails (no orphan writer)") {
-    val bDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val ex = intercept[RuntimeException] {
-      Materialize.awaitBoth(
-        () => throw new RuntimeException("boom"),
-        () => { Thread.sleep(300); bDone.set(true) })
-    }
-    assert(ex.getMessage == "boom")
-    // the in-flight second write finished BEFORE the failure propagated —
-    // a same-JVM retry can never race an orphan manifest flip
-    assert(bDone.get)
   }
 
   test("concurrent appendDelta writers lose no delta (exclusive ids + manifest lock)") {
