@@ -120,12 +120,7 @@ object CurateBench {
     val stageDir = Files.createTempDirectory(
       s"graft-curate-stage-${factor}x-${ProcessHandle.current.pid}-")
     val stageBase = stageDir.toString
-    def deleteStage(): Unit = if (Files.exists(stageDir)) {
-      val all = Files.walk(stageDir)
-      try all.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { Files.delete(f); () })
-      finally all.close()
-    }
+    def deleteStage(): Unit = kg.Materialize.deleteDirRecursive(stageDir)
     def wipeStage(): Unit = { deleteStage(); Files.createDirectories(stageDir); () }
 
     // min-of-reps per level (the noisy-host protocol); caps from the best rep

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.kg.{Link, Pipeline, Transcripts}
+import graft.kg.{Link, Materialize, Pipeline, Transcripts}
 
 /** Scaling-efficiency bench (BASELINE.md protocol): the full KG pipeline
   * (scan → reconstruct → extract → link → canonicalize → materialize) over
@@ -54,9 +54,7 @@ object KgBench {
     val stageBase = s"/tmp/graft_stage_$nConvs"
     def wipeStage(): Unit = if (staging) {
       val d = Paths.get(stageBase)
-      if (Files.exists(d))
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Files.delete(f); () })
+      Materialize.deleteDirRecursive(d)
       Files.createDirectories(d)
       ()
     }

@@ -111,10 +111,7 @@ object ResolverBench {
       }
       Files.move(part, Paths.get(inDir, f"batch-$b%03d.parquet"))
       // drop the emptied stage dir (just marker files remain)
-      val st2 = Files.walk(Paths.get(s"$base/stage-$b"))
-      try st2.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally st2.close()
+      kg.Materialize.deleteDirRecursive(Paths.get(s"$base/stage-$b"))
     }
     println(f"[resolver-bench] generated in ${(System.nanoTime() - genT0) / 1e9}%.1f s")
 
@@ -163,8 +160,7 @@ object ResolverBench {
           s"${kv.getOrElse("discover_ms", -1L)} | " +
           s"${kv.getOrElse("rewrite_ms", -1L)} | " +
           s"${kv.getOrElse("watermark_ms", -1L)} | " +
-          s"${kv.getOrElse("elapsed_ms", -1L)}" +
-          kv.get("sig_banded_keys").map(n => s" | banded=$n").getOrElse(""))
+          s"${kv.getOrElse("elapsed_ms", -1L)}")
       }
     }
 

@@ -355,7 +355,7 @@ object Materialize {
   private def flip(table: String, m: Manifest): Unit =
     writeAtomically(currentPointer(table), m.render)
 
-  private[kg] def deleteDirRecursive(p: Path): Unit =
+  private[graft] def deleteDirRecursive(p: Path): Unit =
     if (Files.exists(p)) {
       val st = Files.walk(p)
       try st.sorted(java.util.Comparator.reverseOrder())

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
@@ -25,13 +24,10 @@ import graft.functions.TextHash
   * sources absent from the budget map are dropped entirely (the filter is
   * pushed into the scan).
   *
-  * Scale shape (the same grouped two-pass distributed scan as
-  * [[Percentile.rankBucketsBy]]): ONE range-sort of the budgeted subset by
-  * (source, hash, key), then the exclusive per-source offsets derive from
-  * windows over the O(partitions + sources)-row per-(partition, source)
-  * weight-sum aggregate — zero driver collects — and broadcast back into a
-  * per-partition running-sum window. Never a per-source SinglePartition
-  * sort.
+  * Scale shape: the exclusive prefix is [[Sharding.prefixScan]] grouped by
+  * source over the budgeted subset (one range sort by (source, hash, key),
+  * zero driver collects), and the budget table rides a broadcast. Never a
+  * per-source SinglePartition sort.
   */
 object Mixing {
 
@@ -51,48 +47,25 @@ object Mixing {
       weightCol: String = "n_chars",
       salt: String = "mix"): Dedup.ManagedPairs = {
     require(budgets.nonEmpty, "mixByBudget needs at least one source budget")
-    val spark = df.sparkSession
-    val guarded = assert_true(
-      col(weightCol) >= 0 && col(idCol).isNotNull,
-      lit(s"mixByBudget: negative $weightCol or null $idCol"))
     // deterministic selection order: salted FNV-1a of (source, key); the
     // raw SIGNED value orders (the oracle reproduces the same int64)
     val hash = TextHash.fingerprint64(concat(
       lit(salt), lit("|"), col(sourceCol), lit("|"),
       col(idCol).cast("string")))
-    val sorted = df
+    val scan = Sharding.prefixScan(
       // budget-source filter FIRST — it prunes at the scan, before the sort
-      .filter(col(sourceCol).isin(budgets.keys.toSeq: _*))
-      .select(col(sourceCol), col(idCol),
-        (col(weightCol).cast("long") + coalesce(guarded.cast("long"), lit(0L)))
-          .as("weight"),
-        hash.as("__h"))
-      .sort(col(sourceCol), col("__h"), col(idCol))
-      .select(col("*"), spark_partition_id().as("__pid"))
-      .localCheckpoint(eager = true)
-    // pass 1 (distributed): per-(pid, source) weight sums, then each
-    // (pid, source) cell's exclusive within-source offset as a running
-    // window over that O(partitions + sources)-row frame
-    val cumW = Window.partitionBy(col(sourceCol)).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = sorted.groupBy(col("__pid"), col(sourceCol))
-      .agg(sum(col("weight")).as("__t"))
-      .withColumn("__off", sum(col("__t")).over(cumW) - col("__t"))
-      .select(col("__pid"), col(sourceCol), col("__off"))
-    val budgetDf = spark.createDataFrame(budgets.toSeq)
+      df.filter(col(sourceCol).isin(budgets.keys.toSeq: _*)),
+      Seq(col(sourceCol), col(idCol), hash.as("__h")), Seq(sourceCol),
+      Seq("__h", idCol), Sharding.guarded(col(weightCol),
+        col(weightCol) >= 0 && col(idCol).isNotNull,
+        s"mixByBudget: negative $weightCol or null $idCol"))
+    val budgetDf = df.sparkSession.createDataFrame(budgets.toSeq)
       .toDF(sourceCol, "__budget")
-    // pass 2: partition-local running sum + the source-wise offset; keep
-    // iff the exclusive prefix is under the source's budget
-    val w = Window.partitionBy(col("__pid"), col(sourceCol))
-      .orderBy(col("__h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = sorted
-      .join(broadcast(offsets), Seq("__pid", sourceCol))
+    // keep iff the exclusive prefix is under the source's budget
+    scan.copy(pairs = scan.pairs
       .join(broadcast(budgetDf), Seq(sourceCol))
-      .withColumn("cum_before",
-        sum(col("weight")).over(w) + col("__off") - col("weight"))
-      .filter(col("cum_before") < col("__budget"))
-      .select(col(sourceCol), col(idCol), col("weight"), col("cum_before"))
-    Dedup.ManagedPairs(out, () => { sorted.unpersist(); () })
+      .filter(col("__before") < col("__budget"))
+      .select(col(sourceCol), col(idCol), col("__w").as("weight"),
+        col("__before").as("cum_before")))
   }
 }

@@ -64,6 +64,11 @@ class MixingSpec extends AnyFunSuite {
     assert(run(Map("a" -> 0L)).isEmpty)
     val budgets = Map("a" -> 300L, "b" -> 150L)
     assert(run(budgets, parts = 1) == run(budgets, parts = 13))
+    import spark.implicits._
+    val empty = Mixing.mixByBudget(
+      corpus.toDF("source", "doc_id", "n_chars").filter("doc_id < 0"), budgets)
+    assert(empty.count() == 0L &&
+      empty.columns.toSeq == Seq("source", "doc_id", "weight", "cum_before"))
   }
 
   test("negative weight rejected per row") {

@@ -70,6 +70,10 @@ class PercentileSpec extends AnyFunSuite {
   test("rankBucketsBy == per-group brute force; rank restarts per group") {
     for (k <- Seq(3, 2)) assert(runBy(k) == bruteBy(k), s"k=$k")
     assert(runBy(3).count { case (_, (rank, _)) => rank == 1L } == 2)
+    val empty = Percentile.rankBucketsBy(
+      grouped.toDF("lang", "doc_id", "score").filter("doc_id < 0"), 3)
+    assert(empty.count() == 0L &&
+      empty.columns.toSeq == Seq("lang", "doc_id", "score", "rank", "bucket"))
   }
 
   test("rankBucketsBy invariant to input partitioning; null group rejected") {

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Each similarity primitive has one implementation under src/main/scala:
-  * the bucket cap, the top-k heap order, the pair-sealing checkpoint and
-  * the primitive-array vector kernels. */
+  * the bucket cap, the top-k heap order, the pair-sealing checkpoint, the
+  * primitive-array vector kernels and the two-pass prefix scan. */
 class PrimitivesSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -44,5 +44,9 @@ class PrimitivesSpec extends AnyFunSuite {
     val seqDefs = params.findAllMatchIn(sources("graft/ops/Similarity.scala"))
       .collect { case m if m.matched.contains("Seq[Float]") => m.group(1) }.toSet
     assert(seqDefs == Set("cosineKernel"))
+    // the two-pass prefix scan (partition-id tagging, driver offsets) is
+    // written once, in Sharding.prefixScan
+    assert(hits("spark_partition_id(").toSet == Set("graft/ops/Sharding.scala"))
+    assert(hits("scanLeft(").toSet == Set("graft/ops/Sharding.scala"))
   }
 }

@@ -30,6 +30,9 @@ class ShardingSpec extends AnyFunSuite {
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("shard_id")).toMap
     assert(got == brute(mixed, 500L))
     assert(got.values.toSet.size > 3, "fixture should span several shards")
+    val empty = Sharding.packByBudget(docs(mixed: _*).filter("doc_id < 0"), 500L)
+    assert(empty.count() == 0L &&
+      empty.columns.toSeq == Seq("doc_id", "weight", "shard_id"))
   }
 
   test("shard map is invariant to parallelism (different range-partition counts)") {
