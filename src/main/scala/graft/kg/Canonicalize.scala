@@ -1,6 +1,7 @@
 package graft.kg
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,8 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * distinct key, labeled with the min key of its component in Spark's
   * string order. The Disjoint Resolver's driver lane
   * ([[Incremental.resolveDisjoint]]) skips the DataFrame round trip: it
-  * verifies its same-as pairs on the driver and hands them straight to the
-  * union-find ([[componentsOnDriver]]).
+  * verifies its same-as pairs on the driver, hands them straight to the
+  * union-find ([[componentMap]]) and rewrites from the map it returns.
   */
 object Canonicalize {
 
@@ -93,11 +94,11 @@ object Canonicalize {
 
   /** Union-find on the driver over same-as pairs `(entity_type, key_a,
     * key_b)` (undirected; duplicates and either orientation allowed): one
-    * output row per key in a pair, labeled with its component's min key.
-    * Both the small-edge-set lane above and the resolver's driver lane
-    * ([[Incremental.resolveDisjoint]]) feed it. */
-  private[kg] def componentsOnDriver(spark: SparkSession,
-      pairs: IterableOnce[(String, String, String)]): DataFrame = {
+    * `(entity_type, key, component)` per key in a pair, labeled with its
+    * component's min key, in key order. The resolver's driver lane
+    * ([[Incremental.resolveDisjoint]]) rewrites from this map directly. */
+  private[kg] def componentMap(
+      pairs: IterableOnce[(String, String, String)]): Seq[(String, String, String)] = {
     val parent = mutable.Map.empty[(String, String), (String, String)]
     // iterative find (walk to root, then compress): the recursive form
     // overflows the driver stack on an adversarially ordered long chain
@@ -118,12 +119,14 @@ object Canonicalize {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (utf8Less(ra._2, rb._2)) parent(rb) = ra else parent(ra) = rb }
     }
-    val rows = new java.util.ArrayList[Row]()
-    verts.toSeq.sorted.foreach { k =>
-      rows.add(Row(k._1, k._2, find(k)._2))
-    }
-    spark.createDataFrame(rows, outputSchema)
+    verts.toSeq.sorted.map(k => (k._1, k._2, find(k)._2))
   }
+
+  /** [[componentMap]] as an [[outputSchema]] frame (the small-edge-set lane
+    * above). */
+  private[kg] def componentsOnDriver(spark: SparkSession,
+      pairs: IterableOnce[(String, String, String)]): DataFrame =
+    spark.createDataFrame(componentMap(pairs).map(Row.fromTuple).asJava, outputSchema)
 
   /** Alternating large-star / small-star (Kiveris et al. 2014, "Connected
     * Components in MapReduce and Beyond") — converges in O(log n) rounds

@@ -134,7 +134,7 @@ object Extract {
   }
 
   /** Fused S2+S3: replay dedup + stable ordering + extraction + pronoun
-    * resolution in ONE shuffle. Classic secondary-sort: repartition by
+    * resolution in ONE shuffle. Classic secondary-sort: repartition by a
     * `conv_id` hash, sort within partitions by the full deterministic key,
     * then a single streaming `mapPartitions` pass with O(1) state per
     * conversation (previous turn_idx for dedup, last named Person for
@@ -153,7 +153,11 @@ object Extract {
     import spark.implicits._
     val n = partitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
     turns
-      .repartition(n, $"conv_id")
+      // a hash of conv_id that Incremental's bucket filter does not use:
+      // that filter keeps rows with one pmod(hash(conv_id), nBuckets), and
+      // repartitioning a bucket on the same Murmur3 hash would put all of it
+      // in n / gcd(n, nBuckets) partitions (one, at 16 buckets on 4 cores)
+      .repartition(n, xxhash64($"conv_id"))
       .sortWithinPartitions($"conv_id", $"turn_idx", $"ts", $"role", $"tool", $"text")
       .mapPartitions { it =>
         var curConv: String = null

@@ -4,9 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.{Fanout, SizeGate}
 import graft.model.Model._
@@ -280,6 +283,21 @@ object Incremental {
   private val DriverBytesPerChar = 16L
   private val DriverBytesPerPair = 160L
 
+  // Rewrite gate. Heap per affected edge row the driver lane collects and
+  // writes back: the collected Row and its boxed values (~110 B), its seven
+  // Strings (~40 B each), the upsert copy and its dedup-set entry (~160 B),
+  // and the tombstone and upsert local relations as UnsafeRows, held once in
+  // the plan and once in the write's task partitions (~4 x 120 B): about
+  // 1 KB a row, plus per character the String (2 B, UTF-16 worst case) and
+  // the four UTF-8 copies (up to 6 B).
+  private val RewriteBytesPerRow = 1024L
+  private val RewriteBytesPerChar = 8L
+
+  private val WmKey = Seq("entity_type", "dict_key")
+
+  /** A schema of string columns `cols`. */
+  private def strings(cols: String*): StructType = StructType(cols.map(StructField(_, StringType)))
+
   /** What one resolver pass examined and changed. */
   final case class ResolveStats(touched: Long, total: Long, rewritten: Long)
 
@@ -290,32 +308,40 @@ object Incremental {
     * `docs/diagrams/megamind.drawio:80-88`).
     *
     * Each resolve records a watermark of eligible keys under
-    * `_resolve/resolved_keys`; the next invocation anti-joins the node table
-    * against it and runs same-as discovery ONLY over pairs involving a new
-    * key ([[Link.fuzzySameAsDelta]] — old×old pairs are never enumerated).
+    * `_resolve/resolved_keys`; the next invocation full-joins the node
+    * table's eligible keys with it and runs same-as discovery ONLY over pairs
+    * involving a new key ([[Link.fuzzySameAsDelta]] — old×old pairs are
+    * never enumerated).
     * Correct because a converged resolve leaves no old×old pair at or above
     * the threshold: any such pair would have been an edge of the previous
     * pass and hence one component. A [[Link.Config]] change (recorded as a
     * signature) voids that invariant, so it triggers full rediscovery
     * automatically; `fullRediscovery = true` forces it.
     *
-    * Discovery runs in one of two lanes, chosen by size. The checkpoint
-    * that materializes the flagged key set measures its rows and key bytes
+    * The pass runs in one of two lanes, chosen by size. The checkpoint that
+    * materializes the flagged key set measures its rows and key bytes
     * ([[graft.SizeGate.checkpoint]]); when they fit [[graft.SizeGate]] at a
-    * measured per-key driver cost, the LSH pass collects the keys ONCE and
-    * does banding, the bucket cap, the delta split and the Jaccard check on
-    * the driver
-    * ([[Link.fuzzySameAsOnDriver]]), then labels components with
-    * [[Canonicalize.componentsOnDriver]] — a handful of Spark jobs instead of
-    * ~20 per pass, for identical `cc` rows. Above the gate, or on the exact
-    * PPJoin path, the distributed discovery runs. Each decision goes to
+    * measured per-key driver cost, the keys are collected ONCE and the pass
+    * finishes on the driver: banding, the bucket cap, the delta split and
+    * the Jaccard check ([[Link.fuzzySameAsOnDriver]]), the component map
+    * ([[Canonicalize.componentMap]]), the rewrite map, the tombstones, the
+    * upserts and the new watermark, written as local relations. Its only
+    * row-fetching Spark jobs are two scans filtered on driver-held key sets
+    * (an InSet predicate, never a broadcast join): the node rows of the
+    * renamed names, and the affected edges, whose checkpoint sizes them for
+    * the `resolve.rewrite` gate (over it, the join-based edge rewrite runs
+    * from that checkpoint). Above the `resolve` gate, on the exact PPJoin
+    * path, or when the driver's candidate-pair bound does not fit, the
+    * distributed lane runs: Spark discovery and components, and join-based
+    * rewrites. Both lanes write the same rows. Each decision goes to
     * `_metrics` as `driver_lane`, `flagged_rows` and `flagged_bytes`.
     *
     * Rewrites are entity-granular too: only rows touching a rewritten GUID
     * are deleted+re-inserted ([[Materialize.appendRewrite]] — one tombstone
     * + one delta under a single manifest flip), O(affected) instead of the
-    * O(corpus) full-snapshot replace. Touched/total entity counts and the
-    * per-phase times (`scan_ms`, `discover_ms`, `rewrite_ms`,
+    * O(corpus) full-snapshot replace. The edge and node rewrites run
+    * concurrently; the watermark flips after both. Touched/total entity
+    * counts and the per-phase times (`scan_ms`, `discover_ms`, `rewrite_ms`,
     * `watermark_ms`) are appended to `_metrics` (stage `resolve`).
     *
     * The new watermark is the key set this pass EXAMINED minus the names its
@@ -346,20 +372,24 @@ object Incremental {
 
     val eligibleAll = nodes.filter(col("entity_type").isin(cfg.fuzzyTypes: _*))
       .select(col("entity_type"), col("name").as("dict_key")).distinct()
-    // one checkpoint job materializes the flagged set and measures it:
-    // rows, new keys and key bytes
-    val SizeGate.Sized(flagged, total, Seq(touched, flaggedBytes)) = SizeGate.checkpoint(oldKeys match {
-      case Some(old) =>
-        val marker = old.select(col("entity_type"), col("dict_key"),
-          lit(1).as("_seen"))
-        eligibleAll.join(marker, Seq("entity_type", "dict_key"), "left")
-          .select(col("entity_type"), col("dict_key"),
-            col("_seen").isNull.as("is_new"))
-      case None =>
-        eligibleAll.select(col("entity_type"), col("dict_key"),
-          lit(true).as("is_new"))
-    }, when(col("is_new"), 1L).otherwise(0L),
-      length(col("entity_type")) + length(col("dict_key")))
+    // one checkpoint job materializes the flagged set and measures it: rows,
+    // live keys, new keys and key bytes. Against a watermark it is a full
+    // join, so the watermark keys that left the node table ride along as
+    // `old_only` rows, sized by the same gate: the watermark update reads
+    // nothing else
+    val SizeGate.Sized(flagged, flaggedRows, Seq(total, touched, flaggedBytes)) =
+      SizeGate.checkpoint(oldKeys match {
+        case Some(old) =>
+          eligibleAll.withColumn("_live", lit(true))
+            .join(old.select(col("entity_type"), col("dict_key"), lit(true).as("_seen")),
+              WmKey, "full")
+            .select(col("entity_type"), col("dict_key"), col("_seen").isNull.as("is_new"),
+              col("_live").isNull.as("old_only"))
+        case None =>
+          eligibleAll.select(col("entity_type"), col("dict_key"), lit(true).as("is_new"),
+            lit(false).as("old_only"))
+      }, when(col("old_only"), 0L).otherwise(1L), when(col("is_new"), 1L).otherwise(0L),
+        length(col("entity_type")) + length(col("dict_key")))
     // phase boundary timestamps → per-phase _metrics rows: the flat-vs-
     // growing decomposition (O(delta) discovery vs O(total) merge-on-read
     // scan) must be readable from the artifact, not re-derived by hand
@@ -375,70 +405,21 @@ object Incremental {
       return ResolveStats(0L, total, 0L)
     }
 
-    val wantDriver = !cfg.exactSameAs && SizeGate.fits("resolve", total,
-      total * DriverBytesPerKey + flaggedBytes * DriverBytesPerChar)
-    val (cc0, freeDiscovery, onDriver) = sameAsComponents(flagged, cfg, wantDriver)
-    val cc = cc0.select(col("entity_type").as("cc_et"), col("key").as("cc_key"),
-      col("component"))
-
-    // guid rewrite map: old guid -> canonical guid (only where it changes)
-    val SizeGate.Sized(rewrite, nRewrites, _) = SizeGate.checkpoint(nodes.join(cc,
-        nodes("entity_type") === cc("cc_et") && nodes("name") === cc("cc_key"))
-      .filter(col("name") =!= col("component"))
-      .select(col("guid").as("old_guid"),
-        Link.guidFor(col("entity_type"), col("component")).as("new_guid"),
-        col("entity_type").as("rw_et"), col("name").as("old_name"),
-        col("component").as("new_name")))
-    val tDiscover = System.currentTimeMillis()
-    // rewrite is materialized — free the discovery's internal checkpoints
-    // so a resolver LOOP (per-micro-batch resolveEvery) stays O(1) in
-    // block-manager state instead of one candidate frame per pass
-    freeDiscovery()
-
-    if (nRewrites > 0L) {
-      // size-gated broadcast (the rewrite's checkpoint counted it):
-      // an explicit hint is never demoted by AQE, so only hint when measured
-      // small; above the gate the planner/AQE pick the join side
-      val hintBc = nRewrites <= cfg.maxBroadcastRegistryRows
-      def bc(df: DataFrame): DataFrame = if (hintBc) broadcast(df) else df
-
-      // AFFECTED edge rows only: delete the pre-rewrite rows, insert the
-      // rewritten ones — O(affected) written, not O(table). Edges and nodes
-      // are independent tables: their rewrite scans + appendRewrites run as
-      // concurrent driver-submitted jobs (the per-bucket appendDelta shape)
-      val rwSubj = bc(rewrite.select(col("old_guid").as("s_old"), col("new_guid").as("s_new")))
-      val rwObj = bc(rewrite.select(col("old_guid").as("o_old"), col("new_guid").as("o_new")))
-      val (affectedEdges, affectedNodes) = Fanout.both(
-        {
-          val affected = edges
-            .join(rwSubj, col("subj_guid") === col("s_old"), "left")
-            .join(rwObj, col("obj_guid") === col("o_old"), "left")
-            .filter(col("s_new").isNotNull || col("o_new").isNotNull)
-            .localCheckpoint(eager = true) // feeds the upsert AND the tombstone
-          val edgeUpserts = affected.select(
-            col("subj_type"),
-            coalesce(col("s_new"), col("subj_guid")).as("subj_guid"),
-            col("pred"), col("obj_kind"), col("obj_type"),
-            coalesce(col("o_new"), col("obj_guid")).as("obj_guid"),
-            col("obj_string"), col("obj_int64"), col("obj_float64"))
-          Materialize.appendRewrite(spark, s"$outDir/edges", edgeUpserts,
-            affected.select(Materialize.edgeKey.map(col): _*), Materialize.edgeKey)
-          affected
-        },
-        {
-          val affected = nodes
-            .join(bc(rewrite.select(col("old_guid"), col("new_guid"), col("new_name"))),
-              col("guid") === col("old_guid"))
-            .localCheckpoint(eager = true)
-          val nodeUpserts = affected.select(col("new_guid").as("guid"),
-            col("entity_type"), col("new_name").as("name"))
-          Materialize.appendRewrite(spark, s"$outDir/nodes", nodeUpserts,
-            affected.select(Materialize.nodeKey.map(col): _*), Materialize.nodeKey)
-          affected
-        })
-      affectedEdges.unpersist()
-      affectedNodes.unpersist()
+    val wantDriver = !cfg.exactSameAs && SizeGate.fits("resolve", flaggedRows,
+      flaggedRows * DriverBytesPerKey + flaggedBytes * DriverBytesPerChar)
+    val keys = Option.when(wantDriver)(flagged.collect().toSeq.map(r =>
+      FlaggedKey(r.getString(0), r.getString(1), r.getBoolean(2), r.getBoolean(3))))
+    val live = flagged.filter(!col("old_only")).select("entity_type", "dict_key", "is_new")
+    val rewrite = sameAsComponents(live, cfg,
+        keys.map(_.filterNot(_.oldOnly).map(k => (k.entityType, k.key, k.isNew)))) match {
+      case Left(components) =>
+        new DriverRewrite(spark, outDir, nodes, edges, cfg, components, keys.get)
+      case Right((cc, freeDiscovery)) =>
+        new SparkRewrite(spark, outDir, nodes, edges, cfg, flagged, live, cc, freeDiscovery)
     }
+    val nRewrites = rewrite.rows
+    val tDiscover = System.currentTimeMillis()
+    if (nRewrites > 0L) rewrite.write()
     val tRewrite = System.currentTimeMillis()
 
     // record the new watermark: the keys this pass examined minus the names
@@ -454,60 +435,218 @@ object Incremental {
     // ENTIRE key set every pass — measured 1.8M key rows written per
     // trigger at the 10M-turn rehearsal, an O(total) write that would
     // dominate per-trigger cost at corpus scale. Full snapshot only on the
-    // first resolve or a config change (watermark rebuilt from scratch).
+    // first resolve or a config change (watermark rebuilt from scratch),
+    // when every kept key is new.
     Files.createDirectories(Paths.get(resolveDir(outDir)))
-    val wmKey = Seq("entity_type", "dict_key")
-    val kept = flagged.join(rewrite.select(col("rw_et").as("entity_type"),
-      col("old_name").as("dict_key")), wmKey, "left_anti")
-    oldKeys match {
-      case Some(old) =>
-        Materialize.appendRewrite(spark, resolvedKeysTable(outDir),
-          kept.filter(col("is_new")).select(wmKey.map(col): _*),
-          old.select(wmKey.map(col): _*).join(kept, wmKey, "left_anti"), wmKey)
-      case None =>
-        Materialize.mergeSnapshot(spark, resolvedKeysTable(outDir),
-          kept.select(wmKey.map(col): _*), wmKey, replace = true)
-    }
+    val (added, removed) = rewrite.watermark()
+    if (oldKeys.isDefined)
+      Materialize.appendRewrite(spark, resolvedKeysTable(outDir), added, removed, WmKey)
+    else Materialize.mergeSnapshot(spark, resolvedKeysTable(outDir), added, WmKey, replace = true)
     Files.writeString(resolveCfgPath(outDir), sig)
 
     appendMetrics(spark, outDir, Seq(
       ("resolve", "resolve", -1, "touched_entities", touched),
       ("resolve", "resolve", -1, "total_entities", total),
       ("resolve", "resolve", -1, "rewritten_entities", nRewrites),
-      ("resolve", "resolve", -1, "driver_lane", if (onDriver) 1L else 0L),
-      ("resolve", "resolve", -1, "flagged_rows", total),
+      ("resolve", "resolve", -1, "driver_lane", if (rewrite.onDriver) 1L else 0L),
+      ("resolve", "resolve", -1, "flagged_rows", flaggedRows),
       ("resolve", "resolve", -1, "flagged_bytes", flaggedBytes),
       ("resolve", "resolve", -1, "scan_ms", tScan - t0),
       ("resolve", "resolve", -1, "discover_ms", tDiscover - tScan),
       ("resolve", "resolve", -1, "rewrite_ms", tRewrite - tDiscover),
       ("resolve", "resolve", -1, "watermark_ms", System.currentTimeMillis() - tRewrite),
       ("resolve", "resolve", -1, "elapsed_ms", System.currentTimeMillis() - t0)))
-    rewrite.unpersist()
+    rewrite.free()
     flagged.unpersist()
     ResolveStats(touched, total, nRewrites)
   }
 
-  /** Same-as discovery + components over `flagged` `(entity_type, dict_key,
-    * is_new)`: the `cc` frame `(entity_type, key, component)` for every key
-    * in a verified pair, a cleanup for the discovery's internal checkpoints
-    * (call once `cc` is consumed), and whether the driver lane ran. The
-    * driver lane falls back to the distributed one when its candidate-pair
-    * bound does not fit the budget. */
+  /** Same-as discovery + components over the live flagged keys `flagged`
+    * `(entity_type, dict_key, is_new)`. Given `keys` (those rows, collected
+    * for the driver lane), discovery runs on the driver when its
+    * candidate-pair bound fits the budget, and returns the component map
+    * (`Left`: `(entity_type, key, component)` for every key in a verified
+    * pair). Otherwise it runs distributed and returns the `cc` frame of the
+    * same rows with a cleanup for the discovery's internal checkpoints
+    * (`Right`; call it once `cc` is consumed). */
   private[kg] def sameAsComponents(flagged: DataFrame, cfg: Link.Config,
-      driver: Boolean): (DataFrame, () => Unit, Boolean) = {
-    val onDriver =
-      if (!driver) None
-      else Link.fuzzySameAsOnDriver(
-        flagged.select("entity_type", "dict_key", "is_new").collect()
-          .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))),
-        cfg, maxPairs = SizeGate.budget / DriverBytesPerPair)
-    onDriver match {
-      case Some(pairs) =>
-        (Canonicalize.componentsOnDriver(flagged.sparkSession, pairs), () => (), true)
+      keys: Option[Seq[(String, String, Boolean)]])
+      : Either[Seq[(String, String, String)], (DataFrame, () => Unit)] =
+    keys.flatMap(Link.fuzzySameAsOnDriver(_, cfg,
+        maxPairs = SizeGate.budget / DriverBytesPerPair)) match {
+      case Some(pairs) => Left(Canonicalize.componentMap(pairs))
       case None =>
         val (sameAs, free) = Link.fuzzySameAsManaged(flagged, cfg, delta = true)
-        (Canonicalize.connectedComponents(
-          sameAs.select(col("entity_type"), col("key_a"), col("key_b"))), free, false)
+        Right((Canonicalize.connectedComponents(
+          sameAs.select(col("entity_type"), col("key_a"), col("key_b"))), free))
     }
+
+  /** A flagged row collected for the driver lane. */
+  private final case class FlaggedKey(entityType: String, key: String, isNew: Boolean,
+      oldOnly: Boolean)
+
+  /** One resolve pass's rewrite, built from its discovery: the node rows it
+    * renames, the deletes and re-inserts of the rows touching their GUIDs
+    * in both graph tables (written concurrently), and the keys it adds to
+    * and removes from the watermark. */
+  private sealed trait Rewrite {
+    def rows: Long
+    def onDriver: Boolean
+    def write(): Unit
+    def watermark(): (DataFrame, DataFrame)
+    def free(): Unit
+  }
+
+  /** `rows` as a local relation, written as one part file. */
+  private def localRows(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+
+  /** `c` is one of `keys` — an InSet over the driver-held set (no join). */
+  private def inKeys(c: Column, keys: Set[String]): Column =
+    ColumnShim.column(InSet(ColumnShim.expression(c), keys.map(UTF8String.fromString)))
+
+  /** The join-based edge rewrite: the rows of `edges` whose subject or
+    * object GUID `rewrite` `(old_guid, new_guid)` renames are tombstoned and
+    * re-inserted renamed (deduplicated). */
+  private def rewriteEdgesByJoin(spark: SparkSession, outDir: String, edges: DataFrame,
+      rewrite: DataFrame, hintBroadcast: Boolean): Unit = {
+    def bc(df: DataFrame): DataFrame = if (hintBroadcast) broadcast(df) else df
+    val affected = edges
+      .join(bc(rewrite.select(col("old_guid").as("s_old"), col("new_guid").as("s_new"))),
+        col("subj_guid") === col("s_old"), "left")
+      .join(bc(rewrite.select(col("old_guid").as("o_old"), col("new_guid").as("o_new"))),
+        col("obj_guid") === col("o_old"), "left")
+      .filter(col("s_new").isNotNull || col("o_new").isNotNull)
+      .localCheckpoint(eager = true) // feeds the upsert AND the tombstone
+    val upserts = affected.select(
+      col("subj_type"),
+      coalesce(col("s_new"), col("subj_guid")).as("subj_guid"),
+      col("pred"), col("obj_kind"), col("obj_type"),
+      coalesce(col("o_new"), col("obj_guid")).as("obj_guid"),
+      col("obj_string"), col("obj_int64"), col("obj_float64"))
+    Materialize.appendRewrite(spark, s"$outDir/edges", upserts.dropDuplicates(Materialize.edgeKey),
+      affected.select(Materialize.edgeKey.map(col): _*), Materialize.edgeKey)
+    affected.unpersist()
+  }
+
+  /** A node row the driver lane renames. */
+  private final case class Renamed(oldGuid: String, entityType: String, oldName: String,
+      newName: String, newGuid: String)
+
+  /** The driver lane's rewrite, from the component map and the collected
+    * flagged keys. One scan, filtered on the renamed names, fetches their
+    * node rows (the rewrite map); one filtered on the renamed GUIDs fetches
+    * the affected edges. Everything else is computed here and written as
+    * local relations. */
+  private final class DriverRewrite(spark: SparkSession, outDir: String, nodes: DataFrame,
+      edges: DataFrame, cfg: Link.Config, components: Seq[(String, String, String)],
+      keys: Seq[FlaggedKey]) extends Rewrite {
+    private val newName = components.collect { case (et, k, c) if k != c => (et, k) -> c }.toMap
+    private val renamed: Seq[Renamed] =
+      if (newName.isEmpty) Nil
+      else nodes.filter(inKeys(col("name"), newName.keySet.map(_._2)))
+        .select("guid", "entity_type", "name").collect().toSeq.flatMap { r =>
+          val (guid, et, name) = (r.getString(0), r.getString(1), r.getString(2))
+          newName.get((et, name)).map(c => Renamed(guid, et, name, c, Link.guidForScala(et, c)))
+        }
+
+    def rows: Long = renamed.size.toLong
+    def onDriver: Boolean = true
+
+    def write(): Unit = { Fanout.both(rewriteEdges(), rewriteNodes()); () }
+
+    private def rewriteEdges(): Unit = {
+      val guids = renamed.map(r => r.oldGuid -> r.newGuid).toMap
+      val schema = edges.schema
+      val SizeGate.Sized(affected, n, Seq(chars)) = SizeGate.checkpoint(
+        edges.filter(inKeys(col("subj_guid"), guids.keySet) ||
+          inKeys(col("obj_guid"), guids.keySet)),
+        schema.fields.collect { case f if f.dataType == StringType =>
+          coalesce(length(col(f.name)), lit(0)) }.reduce(_ + _))
+      try {
+        if (SizeGate.fits("resolve.rewrite", n,
+            n * RewriteBytesPerRow + chars * RewriteBytesPerChar)) {
+          val (si, oi) = (schema.fieldIndex("subj_guid"), schema.fieldIndex("obj_guid"))
+          val tombs = affected.collect().toSeq
+          val upserts = tombs.map { r =>
+            def renamedGuid(i: Int) =
+              Option(r.getString(i)).flatMap(guids.get).getOrElse(r.getString(i))
+            Row.fromSeq(r.toSeq.updated(si, renamedGuid(si)).updated(oi, renamedGuid(oi)))
+          }.distinct
+          Materialize.appendRewrite(spark, s"$outDir/edges", localRows(spark, schema, upserts),
+            localRows(spark, schema, tombs), Materialize.edgeKey)
+        } else rewriteEdgesByJoin(spark, outDir, affected,
+          localRows(spark, strings("old_guid", "new_guid"), guids.toSeq.map(Row.fromTuple)),
+          hintBroadcast = rows <= cfg.maxBroadcastRegistryRows)
+      } finally affected.unpersist()
+    }
+
+    private def rewriteNodes(): Unit =
+      Materialize.appendRewrite(spark, s"$outDir/nodes",
+        localRows(spark, strings("guid", "entity_type", "name"),
+          renamed.map(r => Row(r.newGuid, r.entityType, r.newName)).distinct),
+        localRows(spark, strings(Materialize.nodeKey: _*),
+          renamed.map(r => Row(r.oldGuid, r.entityType))), Materialize.nodeKey)
+
+    def watermark(): (DataFrame, DataFrame) = {
+      val gone = renamed.map(r => (r.entityType, r.oldName)).toSet
+      def rowsOf(ks: Seq[FlaggedKey]) =
+        localRows(spark, strings(WmKey: _*), ks.map(k => Row(k.entityType, k.key)))
+      (rowsOf(keys.filter(k => k.isNew && !gone((k.entityType, k.key)))),
+        rowsOf(keys.filter(k => !k.isNew && (k.oldOnly || gone((k.entityType, k.key))))))
+    }
+
+    def free(): Unit = ()
+  }
+
+  /** The distributed lane's rewrite: the rewrite map is a checkpoint of the
+    * node rows joined with the `cc` frame, and every rewrite is a join. */
+  private final class SparkRewrite(spark: SparkSession, outDir: String, nodes: DataFrame,
+      edges: DataFrame, cfg: Link.Config, flagged: DataFrame, live: DataFrame, cc0: DataFrame,
+      freeDiscovery: () => Unit) extends Rewrite {
+    private val cc = cc0.select(col("entity_type").as("cc_et"), col("key").as("cc_key"),
+      col("component"))
+    // guid rewrite map: old guid -> canonical guid (only where it changes)
+    private val SizeGate.Sized(rewrite, n, _) = SizeGate.checkpoint(nodes.join(cc,
+        nodes("entity_type") === cc("cc_et") && nodes("name") === cc("cc_key"))
+      .filter(col("name") =!= col("component"))
+      .select(col("guid").as("old_guid"),
+        Link.guidFor(col("entity_type"), col("component")).as("new_guid"),
+        col("entity_type").as("rw_et"), col("name").as("old_name"),
+        col("component").as("new_name")))
+    // rewrite is materialized — free the discovery's internal checkpoints
+    // so a resolver LOOP (per-micro-batch resolveEvery) stays O(1) in
+    // block-manager state instead of one candidate frame per pass
+    freeDiscovery()
+
+    def rows: Long = n
+    def onDriver: Boolean = false
+
+    def write(): Unit = {
+      // an explicit hint is never demoted by AQE, so only hint when the
+      // rewrite's checkpoint counted it small; above that the planner/AQE
+      // pick the join side
+      val hint = n <= cfg.maxBroadcastRegistryRows
+      Fanout.both(rewriteEdgesByJoin(spark, outDir, edges, rewrite, hint), {
+        val rw = rewrite.select(col("old_guid"), col("new_guid"), col("new_name"))
+        val affected = nodes.join(if (hint) broadcast(rw) else rw, col("guid") === col("old_guid"))
+          .localCheckpoint(eager = true)
+        Materialize.appendRewrite(spark, s"$outDir/nodes",
+          affected.select(col("new_guid").as("guid"), col("entity_type"),
+            col("new_name").as("name")).dropDuplicates(Materialize.nodeKey),
+          affected.select(Materialize.nodeKey.map(col): _*), Materialize.nodeKey)
+        affected.unpersist()
+      })
+      ()
+    }
+
+    def watermark(): (DataFrame, DataFrame) = {
+      val kept = live.join(rewrite.select(col("rw_et").as("entity_type"),
+        col("old_name").as("dict_key")), WmKey, "left_anti")
+      (kept.filter(col("is_new")).select(WmKey.map(col): _*),
+        flagged.filter(!col("is_new")).select(WmKey.map(col): _*).join(kept, WmKey, "left_anti"))
+    }
+
+    def free(): Unit = rewrite.unpersist()
   }
 }

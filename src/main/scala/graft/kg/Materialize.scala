@@ -473,18 +473,21 @@ object Materialize {
 
   /** Partial rewrite under ONE manifest flip: delete `deleteKeys` (key
     * columns; extra columns are ignored) and insert `upserts`, both
-    * O(affected-rows) writes, run as concurrent Spark jobs. The tombstone
-    * dir id is reserved BEFORE the delta id, so a key present in both
-    * resolves as insert-wins — and any LATER appendDelta of a deleted key
-    * resurrects it (Iceberg sequence-number semantics), which is what makes
-    * re-delivered pre-rewrite rows safe: they reappear and the next resolver
-    * pass re-merges them (eventual consistency). */
+    * O(affected-rows) writes, run as concurrent Spark jobs. Neither frame is
+    * deduplicated: while a tombstone is live every read keeps one winner
+    * per key (and compaction folds through that read), so a repeated
+    * delete key or upsert row cannot change a read; a caller that wants a
+    * key-distinct delta dedups its upserts. The tombstone dir id is
+    * reserved BEFORE the delta id, so a key present in both resolves as
+    * insert-wins — and any LATER appendDelta of a deleted key resurrects it
+    * (Iceberg sequence-number semantics), which is what makes re-delivered
+    * pre-rewrite rows safe: they reappear and the next resolver pass
+    * re-merges them (eventual consistency). */
   def appendRewrite(spark: SparkSession, table: String, upserts: DataFrame,
       deleteKeys: DataFrame, key: Seq[String], compactEvery: Int = 8): Unit =
     append(spark, table, compactEvery,
       pinLayout(table, key, upserts.schema, Some(deleteKeys.schema)))(Seq(
-      "tomb" -> deleteKeys.select(key.map(col): _*).dropDuplicates(key),
-      "delta" -> upserts.dropDuplicates(key)))
+      "tomb" -> deleteKeys.select(key.map(col): _*), "delta" -> upserts))
 
   /** Fold base + deltas into a fresh base snapshot and GC. A no-op when
     * there are no deltas. */

@@ -1,16 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions.{col, length, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.kg.{Incremental, Materialize}
+import graft.kg.{Incremental, IncrementalSpec, Link, Materialize, Pipeline}
 
 /** Facts the driver already holds cost no Spark job: a table's schema, the
   * bucket checkpoints it wrote, and the size of a frame it just
@@ -22,27 +24,54 @@ class JobCountSpec extends AnyFunSuite {
   /** `body`'s result and the Spark jobs it submitted (counted under a job
     * group of its own, after the listener bus has delivered them). */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val (r, names) = jobNamesOf(body)
-    (r, names.size)
+    val (r, ledger) = ledgerOf(body)
+    (r, ledger.jobs.size)
   }
 
-  /** `body`'s result and the names (the short call sites) of the Spark jobs
-    * it submitted. */
+  /** `body`'s result and the names of the Spark jobs it submitted. */
   private def jobNamesOf[T](body: => T): (T, Seq[String]) = {
+    val (r, ledger) = ledgerOf(body)
+    (r, ledger.jobs)
+  }
+
+  /** The jobs a body submitted, each named by its SQL execution's
+    * description (`parquet at Materialize.scala:NNN`, the short call site),
+    * or by its result stage when it ran outside one, and the physical plans
+    * of those executions: the first and every adaptive re-plan. */
+  private final case class Ledger(jobs: Seq[String], plans: Seq[String])
+
+  private def ledgerOf[T](body: => T): (T, Ledger) = {
     val sc = spark.sparkContext
     val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    val names = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(Option[Long], String)]()
+    val descriptions = new ConcurrentHashMap[Long, String]()
+    val plans = new ConcurrentLinkedQueue[(Long, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          names.add(e.stageInfos.maxBy(_.stageId).name) // the result stage
+          jobs.add((Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong),
+            e.stageInfos.maxBy(_.stageId).name)) // the result stage
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          descriptions.put(s.executionId, s.description)
+          plans.add((s.executionId, s.physicalPlanDescription))
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add((u.executionId, u.physicalPlanDescription))
+        case _ => ()
+      }
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
+    // no job description: a SQL execution is then described by its call site
+    sc.setJobGroup(group, null)
     try {
       val r = body
       GraftTestBus.drain(sc)
-      (r, names.asScala.toSeq)
+      val js = jobs.asScala.toSeq
+      val executions = js.flatMap(_._1).toSet
+      (r, Ledger(
+        js.map { case (id, stage) =>
+          id.flatMap(i => Option(descriptions.get(i))).getOrElse(stage) },
+        plans.asScala.toSeq.collect { case (id, plan) if executions(id) => plan }))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -130,5 +159,24 @@ class JobCountSpec extends AnyFunSuite {
     assert(names.nonEmpty)
     names.foreach(n => assert(n.startsWith("localCheckpoint at JobCountSpec.scala:"), n))
     assert(spark.sparkContext.getLocalProperty("callSite.short") == null)
+  }
+
+  test("a driver-lane resolve pass plans no broadcast exchange and runs a bounded job count") {
+    val out = Files.createTempDirectory("graft-jobs").toString
+    val passes = IncrementalSpec.laneBatches(spark).zipWithIndex.map { case (b, i) =>
+      Incremental.run(b, Pipeline.emptyDict(spark), out, s"r$i", nBuckets = 1)
+      ledgerOf(Incremental.resolveDisjoint(spark, out, Link.Config()))
+    }
+    // each pass rewrites; pass 0 replaces the watermark, pass 1 appends to
+    // it. Measured: 11 and 13 jobs (20 and 25 with the join-based rewrite,
+    // whose SQL executions planned a BroadcastExchange in 4 and 6 of them)
+    passes.zip(Seq(11, 13)).foreach { case ((_, ledger), bound) =>
+      assert(ledger.jobs.size <= bound, ledger.jobs)
+      assert(!ledger.plans.exists(_.contains("BroadcastExchange")), ledger.plans)
+    }
+    assert(passes.forall(_._1.rewritten > 0L))
+    val driverLane = Incremental.readMetrics(spark, out)
+      .filter(col("metric") === "driver_lane").collect().map(_.getAs[Long]("value")).toSeq
+    assert(driverLane == Seq(1L, 1L))
   }
 }

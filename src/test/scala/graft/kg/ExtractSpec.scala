@@ -68,6 +68,18 @@ class ExtractSpec extends AnyFunSuite {
     assert(fused.nonEmpty)
   }
 
+  test("a 16-bucket slice extracts into more than one of the session's 4 partitions") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val turns = Transcripts.synthetic(spark,
+      Transcripts.GenConfig(seed = 7L, nConvs = 400, turnsPerConv = 4), partitions = 4)
+    // Incremental.run's bucket filter
+    val slice = turns.filter(pmod(hash(col("conv_id")), lit(16)) === 5)
+    val sizes = Extract.extract(slice).rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4" && sizes.length == 4)
+    assert(sizes.count(_ > 0) > 1, sizes.toSeq)
+  }
+
   test("pronoun triples resolve to the last named Person in conversation order") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -206,10 +206,14 @@ class IncrementalSpec extends AnyFunSuite {
       val cfg = Link.Config(maxBandBucket = if (seed % 2 == 0) 2 else 10000)
       val flagged = keys.toDF("entity_type", "dict_key", "is_new")
       def lane(driver: Boolean) = {
-        val (cc, free, onDriver) = Incremental.sameAsComponents(flagged, cfg, driver)
-        assert(onDriver == driver)
-        val got = rows(cc)
-        free()
+        val got = Incremental.sameAsComponents(flagged, cfg, Option.when(driver)(keys)) match {
+          case Left(components) =>
+            assert(driver)
+            components.map { case (et, k, c) => s"$et|$k|$c" }.toSet
+          case Right((cc, free)) =>
+            assert(!driver)
+            try rows(cc) finally free()
+        }
         (got, graft.ops.CapMetrics.latest("link.lsh"))
       }
       val (driverCc, driverCaps) = lane(driver = true)
@@ -223,30 +227,30 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("resolver lanes: two-batch resolve gives identical tables, watermarks and metrics") {
     import spark.implicits._
-    val ts0 = new java.sql.Timestamp(0L)
-    def turns(lines: String*) = lines.zipWithIndex.map { case (text, i) =>
-      graft.model.Model.Turn(s"c${text.hashCode}", i, "user", text, "", ts0) }.toDS()
-    val b1 = turns("My name is Alice Smith.", "Alice Smith lives in Francee.",
-      "My name is Bob Jones.", "Bob Jones lives in Japan.", "My name is Al.",
-      "Order 7 total 12.5.")
-    val b2 = turns("My name is Alice Smit.", "Alice Smit lives in France.",
-      "My name is Bob Jones Jr.", "My name is Dave Black.", "My name is Alx.")
+    val Seq(b1, b2) = IncrementalSpec.laneBatches(spark)
     val cfg = Link.Config()
     def converge(driver: Boolean) = {
       val out = Files.createTempDirectory(s"graft-lane-$driver").toString
       val dict = Pipeline.emptyDict(spark)
       val passes = Seq(b1, b2).zipWithIndex.map { case (b, i) =>
         Incremental.run(b, dict, out, s"r$i", nBuckets = 1)
+        // another writer drops a resolved key's node: the watermark has a
+        // key the node table no longer holds
+        if (i == 1) Materialize.mergeSnapshot(spark, s"$out/nodes",
+          Materialize.readTable(spark, s"$out/nodes").get.filter($"name" =!= "al"),
+          Materialize.nodeKey, replace = true)
+        val before = rows(Materialize.readTable(spark, s"$out/edges").get)
         def resolve() = Incremental.resolveDisjoint(spark, out, cfg)
         val st = if (driver) resolve() else SizeGate.forceDistributed(resolve())
-        (st, graft.ops.CapMetrics.latest("link.lsh"))
+        val watermark = rows(Materialize.readTable(spark, s"$out/_resolve/resolved_keys").get)
+        (st, graft.ops.CapMetrics.latest("link.lsh"), before, watermark)
       }
       (out, passes)
     }
     val (outD, passesD) = converge(driver = true)
     val (outS, passesS) = converge(driver = false)
     assert(passesD == passesS)
-    assert(passesD.map(_._1.rewritten).sum >= 2L, passesD)
+    assert(passesD.forall(_._1.rewritten >= 1L), passesD.map(_._1))
     for (t <- Seq("nodes", "edges", "_resolve/resolved_keys"))
       assert(rows(Materialize.readTable(spark, s"$outD/$t").get) ==
         rows(Materialize.readTable(spark, s"$outS/$t").get), t)
@@ -255,6 +259,23 @@ class IncrementalSpec extends AnyFunSuite {
     assert(rows(Materialize.readTable(spark, s"$outD/_resolve/resolved_keys").get) ==
       rows(Materialize.readTable(spark, s"$outD/nodes").get
         .filter($"entity_type".isin(cfg.fuzzyTypes: _*)).select("entity_type", "name")))
+
+    // the second pass covers the rewrite's corner cases: an edge whose
+    // subject and object are both renamed, two edges that collapse into one
+    // upsert, and watermark keys it tombstones (renamed, or gone from the
+    // node table)
+    def g(et: String, k: String) = Link.guidForScala(et, k)
+    def livesIn(p: String, n: String) =
+      s"Person|${g("Person", p)}|lives_in|subject|Nation|${g("Nation", n)}|null|null|null"
+    val (both, twin, merged) = (livesIn("alice smith", "francee"), livesIn("alice smitt", "france"),
+      livesIn("alice smit", "france"))
+    val edgesD = rows(Materialize.readTable(spark, s"$outD/edges").get)
+    assert(Set(both, twin).subsetOf(passesD(1)._3), passesD(1)._3)
+    assert(edgesD.contains(merged) && !edgesD.contains(both) && !edgesD.contains(twin))
+    assert(edgesD.count(_.startsWith(s"Person|${g("Person", "alice smit")}|lives_in|")) == 1)
+    val wm1 = Set("Person|alice smith", "Nation|francee", "Person|al")
+    assert(wm1.subsetOf(passesD(0)._4) && wm1.intersect(passesD(1)._4).isEmpty)
+    assert(Materialize.currentManifest(s"$outD/_resolve/resolved_keys").get.tombs.nonEmpty)
 
     // each gate decision is in _metrics, next to the phase times
     def gate(out: String) = Incremental.readMetrics(spark, out)
@@ -272,5 +293,26 @@ class IncrementalSpec extends AnyFunSuite {
     Incremental.run(b1, Pipeline.emptyDict(spark), outG, "g", nBuckets = 1)
     Incremental.resolveDisjoint(spark, outG, cfg)
     assert(gate(outG)("driver_lane") == Seq(1L))
+  }
+}
+
+object IncrementalSpec {
+
+  /** The resolver-lane fixture: two batches of one-turn conversations; each
+    * resolve renames some keys, the second old and new keys of both fuzzy
+    * types in play. */
+  def laneBatches(spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.Dataset[graft.model.Model.Turn]] = {
+    import spark.implicits._
+    val ts0 = new java.sql.Timestamp(0L)
+    def turns(lines: String*) = lines.zipWithIndex.map { case (text, i) =>
+      graft.model.Model.Turn(s"c${text.hashCode}", i, "user", text, "", ts0) }.toDS()
+    Seq(
+      turns("My name is Alice Smith.", "Alice Smith lives in Francee.",
+        "My name is Bob Jones.", "Bob Jones lives in Japan.", "Bob Joness lives in Japan.",
+        "My name is Al.", "Order 7 total 12.5."),
+      turns("My name is Alice Smit.", "Alice Smit lives in France.",
+        "Alice Smitt lives in France.", "My name is Bob Jones Jr.",
+        "My name is Dave Black.", "My name is Alx."))
   }
 }

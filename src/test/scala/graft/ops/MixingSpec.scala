@@ -45,6 +45,7 @@ class MixingSpec extends AnyFunSuite {
     val budgets = Map("a" -> 300L, "b" -> 150L)
     val got = run(budgets)
     assert(got == brute(budgets))
+    assert(TestSpark.uncoalesced(run(budgets)) == got)
     // partial fill on both sources: some docs kept, some dropped
     val keptA = got.keySet.count(_ < 60)
     assert(keptA > 0 && keptA < 60, s"source a should partially fill: $keptA")

@@ -29,7 +29,10 @@ class PercentileSpec extends AnyFunSuite {
       .toMap
 
   test("rankBuckets == brute-force (k = 3, 4, 1, and k > n)") {
-    for (k <- Seq(3, 4, 1, 25)) assert(run(k) == brute(k), s"k=$k")
+    for (k <- Seq(3, 4, 1, 25)) {
+      assert(run(k) == brute(k), s"k=$k")
+      assert(TestSpark.uncoalesced(run(k)) == brute(k), s"k=$k, uncoalesced")
+    }
   }
 
   test("bucket sizes differ by at most 1 and cover 0..k-1") {
@@ -68,7 +71,10 @@ class PercentileSpec extends AnyFunSuite {
       .toMap
 
   test("rankBucketsBy == per-group brute force; rank restarts per group") {
-    for (k <- Seq(3, 2)) assert(runBy(k) == bruteBy(k), s"k=$k")
+    for (k <- Seq(3, 2)) {
+      assert(runBy(k) == bruteBy(k), s"k=$k")
+      assert(TestSpark.uncoalesced(runBy(k)) == bruteBy(k), s"k=$k, uncoalesced")
+    }
     assert(runBy(3).count { case (_, (rank, _)) => rank == 1L } == 2)
     val empty = Percentile.rankBucketsBy(
       grouped.toDF("lang", "doc_id", "score").filter("doc_id < 0"), 3)

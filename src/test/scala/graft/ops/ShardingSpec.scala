@@ -25,10 +25,14 @@ class ShardingSpec extends AnyFunSuite {
   private val mixed: Seq[(Long, Long)] =
     (0 until 200).map(i => (i.toLong, ((i * 37) % 90 + 1).toLong))
 
-  test("packByBudget == exclusive-prefix-sum div budget (brute force)") {
-    val got = Sharding.packByBudget(docs(mixed: _*), budget = 500L)
+  private def pack(rows: Seq[(Long, Long)], budget: Long): Map[Long, Long] =
+    Sharding.packByBudget(docs(rows: _*), budget)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("shard_id")).toMap
+
+  test("packByBudget == exclusive-prefix-sum div budget (brute force)") {
+    val got = pack(mixed, budget = 500L)
     assert(got == brute(mixed, 500L))
+    assert(TestSpark.uncoalesced(pack(mixed, budget = 500L)) == got)
     assert(got.values.toSet.size > 3, "fixture should span several shards")
     val empty = Sharding.packByBudget(docs(mixed: _*).filter("doc_id < 0"), 500L)
     assert(empty.count() == 0L &&
@@ -51,9 +55,9 @@ class ShardingSpec extends AnyFunSuite {
 
   test("a single over-budget document occupies exactly one shard; packing continues after it") {
     val rows = Seq((1L, 10L), (2L, 5000L), (3L, 10L), (4L, 10L))
-    val got = Sharding.packByBudget(docs(rows: _*), budget = 100L)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val got = pack(rows, budget = 100L)
     assert(got == brute(rows, 100L))
+    assert(TestSpark.uncoalesced(pack(rows, budget = 100L)) == got)
     assert(got(2L) == 0L)   // starts inside shard 0 (cum 10 < 100)
     assert(got(3L) == 50L)  // next doc starts at cum 5010 -> shard 50
     assert(got(4L) == 50L)
