@@ -89,8 +89,11 @@ object Canonicalize {
     * which disagrees for supplementary vs U+E000..U+FFFF characters; the
     * driver lanes use this so they pick the same min key as the
     * distributed ones. */
-  private[kg] def utf8Less(a: String, b: String): Boolean =
-    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0
+  private[kg] def utf8Less(a: String, b: String): Boolean = utf8Compare(a, b) < 0
+
+  /** The three-way form of [[utf8Less]]. */
+  private[kg] def utf8Compare(a: String, b: String): Int =
+    if (a == b) 0 else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
   /** Union-find on the driver over same-as pairs `(entity_type, key_a,
     * key_b)` (undirected; duplicates and either orientation allowed): one

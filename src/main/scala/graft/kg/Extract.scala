@@ -136,13 +136,12 @@ object Extract {
   /** Fused S2+S3: replay dedup + stable ordering + extraction + pronoun
     * resolution in ONE shuffle. Classic secondary-sort: repartition by a
     * `conv_id` hash, sort within partitions by the full deterministic key,
-    * then a single streaming `mapPartitions` pass with O(1) state per
-    * conversation (previous turn_idx for dedup, last named Person for
-    * pronouns). Preferred over window functions here because the extractor
+    * then a single streaming `mapPartitions` pass of [[extractSorted]].
+    * Preferred over window functions here because the extractor
     * is a `mapPartitions` anyway — windows before/after it cannot share its
     * exchange (object-mapped stages erase partitioning info), so the fused
     * form saves a full extra shuffle AND keeps the conversation loop
-    * byte-identical to the in-memory oracle's.
+    * byte-identical to the driver lane's ([[Pipeline.runOnDriver]]).
     *
     * Skew: a hot conversation serializes only its own rows (per-turn work is
     * O(1)); partitions hold many conversations, and AQE rebalances
@@ -159,27 +158,55 @@ object Extract {
       // in n / gcd(n, nBuckets) partitions (one, at 16 buckets on 4 cores)
       .repartition(n, xxhash64($"conv_id"))
       .sortWithinPartitions($"conv_id", $"turn_idx", $"ts", $"role", $"tool", $"text")
-      .mapPartitions { it =>
-        var curConv: String = null
-        var lastPerson: Option[String] = None
-        var prevIdx = Int.MinValue
-        it.flatMap { tu =>
-          if (tu.conv_id != curConv) {
-            curConv = tu.conv_id; lastPerson = None; prevIdx = Int.MinValue
-          }
-          if (tu.turn_idx == prevIdx) Iterator.empty // replay: first row won
-          else {
-            prevIdx = tu.turn_idx
-            val (ts, person) = extractTurn(tu.conv_id, tu.turn_idx, tu.role, tu.tool, tu.text)
-            if (person.isDefined) lastPerson = person
-            ts.iterator.flatMap { t =>
-              if (t.subj_tuid == PronounTuid) lastPerson.map(p => t.copy(subj_tuid = p))
-              else Some(t)
-            }
-          }
+      .mapPartitions(extractSorted)
+      .toDF()
+  }
+
+  /** The order [[extract]] sorts turns in before [[extractSorted]]: by
+    * conv_id, turn_idx, ts, role, tool, text, ascending with nulls first,
+    * strings by their UTF-8 bytes — Spark's order, so a driver-side sort
+    * picks the same replay winners. */
+  val sparkOrder: Ordering[Turn] = {
+    def nullsFirst[T](o: Ordering[T]): Ordering[T] = (a, b) =>
+      if (a == null) { if (b == null) 0 else -1 } else if (b == null) 1 else o.compare(a, b)
+    val s = nullsFirst[String](Canonicalize.utf8Compare)
+    val ts = nullsFirst[java.sql.Timestamp](_ compareTo _)
+    (a, b) => {
+      var c = s.compare(a.conv_id, b.conv_id)
+      if (c == 0) c = Integer.compare(a.turn_idx, b.turn_idx)
+      if (c == 0) c = ts.compare(a.ts, b.ts)
+      if (c == 0) c = s.compare(a.role, b.role)
+      if (c == 0) c = s.compare(a.tool, b.tool)
+      if (c == 0) c = s.compare(a.text, b.text)
+      c
+    }
+  }
+
+  /** The conversation loop over turns in [[sparkOrder]], with O(1) state
+    * per conversation: the first row of each `turn_idx` wins (replay
+    * dedup), and a pronoun triple takes the last Person named so far in its
+    * conversation (dropped when there is none). Both ingest lanes run it:
+    * [[extract]] per sorted partition, [[Pipeline.runOnDriver]] over a
+    * sorted bucket. */
+  def extractSorted(turns: Iterator[Turn]): Iterator[RawTriple] = {
+    var curConv: String = null
+    var lastPerson: Option[String] = None
+    var prevIdx = Int.MinValue
+    turns.flatMap { tu =>
+      if (tu.conv_id != curConv) {
+        curConv = tu.conv_id; lastPerson = None; prevIdx = Int.MinValue
+      }
+      if (tu.turn_idx == prevIdx) Iterator.empty // replay: first row won
+      else {
+        prevIdx = tu.turn_idx
+        val (ts, person) = extractTurn(tu.conv_id, tu.turn_idx, tu.role, tu.tool, tu.text)
+        if (person.isDefined) lastPerson = person
+        ts.iterator.flatMap { t =>
+          if (t.subj_tuid == PronounTuid) lastPerson.map(p => t.copy(subj_tuid = p))
+          else Some(t)
         }
       }
-      .toDF()
+    }
   }
 
   /** Window-function formulation of the same semantics (used by tests to

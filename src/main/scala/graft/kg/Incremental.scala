@@ -158,8 +158,35 @@ object Incremental {
       jsonMapper.writeValueAsString(o) + "\n"
     }.mkString)
 
+  // Ingest gate. Heap per input turn while a bucket runs on the driver
+  // (layout estimate): the collected Turn with its four Strings and
+  // Timestamp (~260 B) and its sort slot, about one extracted triple (~150 B
+  // with its Options and boxed value), its normalized key, mention, registry
+  // and dedup-set entries (~300 B), and about one edge written back as a
+  // local relation: the KgEdge (~150 B), its UnsafeRow held in the plan, in
+  // the parallelized partition and in that partition's serialized task
+  // (~3 x 300 B) — about 2 KB a turn, plus per character the String (up to
+  // 2 B) and the UTF-8 copies of the collect and of the written rows (up to
+  // 6 B).
+  private val IngestBytesPerTurn = 2048L
+  private val IngestBytesPerChar = 8L
+
   /** Run (or resume) `runId` over the transcript table. Returns the number
     * of buckets actually processed this invocation.
+    *
+    * The input is checkpointed once ([[graft.SizeGate.checkpoint]], which
+    * counts its turns and characters in the same job) and each bucket is
+    * the slice `pmod(hash(conv_id), nBuckets) == b` of it. A bucket runs in
+    * one of two lanes, chosen once per run. When the whole input fits the
+    * `ingest` gate (and the linking is not fuzzy exact same-as), a bucket's
+    * turns are collected and S2-S7 run on the driver
+    * ([[Pipeline.runOnDriver]]); its edge and node rows are written as
+    * one-part-file local relations, so a bucket costs one collect and two
+    * one-task writes. Otherwise, or when the driver's fuzzy candidate bound
+    * does not fit, the bucket runs [[Pipeline.run]]. Both lanes write the
+    * same rows. `_metrics` gets a per-bucket `driver_lane` row, and the
+    * driver lane's `rows_in` (turns) and `edges_bucket_out` counts (-1 on
+    * the distributed lane, where counting is an extra job).
     *
     * Buckets are independent partitions of the input writing through an
     * idempotent MERGE (batch-order independence is property-tested), so up
@@ -179,6 +206,7 @@ object Incremental {
       failAtBucket: Option[Int] = None,
       maxConcurrentBuckets: Int = 2): Int = {
     val spark = turns.sparkSession
+    import spark.implicits._
     Files.createDirectories(Paths.get(outDir))
     val done = completedBuckets(spark, outDir, runId)
     val todo = (0 until nBuckets).filterNot(done.contains)
@@ -186,7 +214,12 @@ object Incremental {
     // materialize the input once — each bucket filters the checkpoint
     // instead of re-running the upstream derivation per bucket. (At cluster
     // scale the input IS a table; this matters when `turns` is computed.)
-    val input = turns.localCheckpoint(eager = true)
+    val SizeGate.Sized(checkpointed, nTurns, Seq(chars)) = SizeGate.checkpoint(turns.toDF(),
+      Seq("conv_id", "role", "text", "tool").map(c => coalesce(length(col(c)), lit(0))).reduce(_ + _))
+    val input = checkpointed.as[Turn]
+    val driverDict = Option.when(!(linkCfg.fuzzy && linkCfg.exactSameAs) &&
+        SizeGate.fits("ingest", nTurns, nTurns * IngestBytesPerTurn + chars * IngestBytesPerChar))(
+      Link.dictOnDriver(dict))
     val sequential = failAtBucket.isDefined || maxConcurrentBuckets <= 1
     val processed = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -196,7 +229,6 @@ object Incremental {
       val t0 = System.currentTimeMillis()
       val slice = input.filter(pmod(hash(col("conv_id")), lit(nBuckets)) === b)
       val lshSeqBefore = graft.ops.CapMetrics.seqOf("link.lsh")
-      val r = Pipeline.run(slice, dict, linkCfg)
       // per-bucket DELTA append: O(bucket) bytes written per bucket instead
       // of a full-table rewrite (the old rewrite-per-bucket was O(B^2) write
       // amplification across B buckets); merge-on-read keeps the table
@@ -204,15 +236,28 @@ object Incremental {
       // The two tables are independent stores: submit their write jobs
       // CONCURRENTLY (the bucket checkpoint lands only after both, so a
       // crash between them just re-runs the bucket — idempotent MERGE).
-      Materialize.appendGraph(spark, outDir, r.edges, r.nodes)
-      // free this bucket's pipeline caches (raw-triple persist + registry
-      // checkpoint) — without this, blocks accumulate once per bucket for
-      // the whole session (merged tables are parquet-backed, independent)
-      r.close()
-      // rows_in / rows_out stay -1 (not counted): a count per bucket is an
-      // extra Spark job each, O(B * bucket-read) across B buckets
+      val local = driverDict.flatMap { d =>
+        val bucket = slice.collect().toSeq
+        Pipeline.runOnDriver(bucket, d, linkCfg, maxPairs = SizeGate.budget / DriverBytesPerPair)
+          .map { case (edges, nodes) => (bucket.size.toLong, edges, nodes) }
+      }
+      val (rowsIn, rowsOut) = local match {
+        case Some((n, edges, nodes)) =>
+          Materialize.appendGraph(spark, outDir, edges.toDF().coalesce(1), nodes.toDF().coalesce(1))
+          (n, edges.size.toLong)
+        case None =>
+          val r = Pipeline.run(slice, dict, linkCfg)
+          Materialize.appendGraph(spark, outDir, r.edges, r.nodes)
+          // free this bucket's pipeline caches (raw-triple persist + registry
+          // checkpoint) — without this, blocks accumulate once per bucket for
+          // the whole session (merged tables are parquet-backed, independent)
+          r.close()
+          // not counted: a count per bucket is an extra Spark job each,
+          // O(B * bucket-read) across B buckets
+          (-1L, -1L)
+      }
       appendCheckpoint(spark, outDir,
-        Checkpoint(runId, "pipeline", b, "done", -1L, -1L,
+        Checkpoint(runId, "pipeline", b, "done", rowsIn, rowsOut,
           t0, System.currentTimeMillis()))
       // cap observability into the run's _metrics table ("no silent caps"):
       // fuzzy LSH bucket drops for THIS bucket's linking pass — recorded
@@ -225,8 +270,9 @@ object Incremental {
           }
         else Seq.empty
       appendMetrics(spark, outDir, Seq(
-        (runId, "pipeline", b, "rows_in", -1L),
-        (runId, "pipeline", b, "edges_bucket_out", -1L)) ++ lshCaps)
+        (runId, "pipeline", b, "rows_in", rowsIn),
+        (runId, "pipeline", b, "edges_bucket_out", rowsOut),
+        (runId, "pipeline", b, "driver_lane", if (local.isDefined) 1L else 0L)) ++ lshCaps)
       processed.incrementAndGet()
       ()
     }

@@ -76,9 +76,21 @@ object Link {
   def guidFor(entityType: Column, canonicalKey: Column): Column =
     sha2(concat(entityType, lit("|"), canonicalKey), 256)
 
-  /** Scala-side mirrors for the in-memory oracle. */
-  def normKeyScala(s: String): String =
-    s.toLowerCase.trim.replaceAll("\\s+", " ")
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
+  /** [[normKey]] in plain Scala, equal to it on every string: `\s+` (Java's
+    * six ASCII whitespace characters) collapses to one space, only U+0020
+    * is trimmed (Spark's `trim`; Java's also strips U+0000-U+001F), and
+    * the result is lower-cased by ICU in the default locale, as Spark's
+    * `lower` does under its default `spark.sql.icu.caseMappings.enabled`
+    * (the JDK's `toLowerCase` lags ICU's Unicode version). */
+  def normKeyScala(s: String): String = {
+    val c = Whitespace.matcher(s).replaceAll(" ")
+    var (b, e) = (0, c.length)
+    while (b < e && c.charAt(b) == ' ') b += 1
+    while (e > b && c.charAt(e - 1) == ' ') e -= 1
+    com.ibm.icu.lang.UCharacter.toLowerCase(c.substring(b, e))
+  }
   def guidForScala(entityType: String, canonicalKey: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s"$entityType|$canonicalKey".getBytes("UTF-8"))
@@ -103,6 +115,17 @@ object Link {
           ments("norm_key") === dict("variant_norm"), "left")
       .select(ments("entity_type"), ments("norm_key"),
         coalesce(dict("canonical_norm"), ments("norm_key")).as("dict_key"))
+
+  /** A dict frame (the [[applyDict]] columns) collected for the driver
+    * lane: `(entity_type, variant_norm)` to the distinct `canonical_norm`
+    * values of its rows (null kept: [[applyDict]] coalesces it to the
+    * mention's own key). Rows with a null join key never match and are
+    * left out. */
+  private[kg] def dictOnDriver(dict: DataFrame): Map[(String, String), Seq[String]] =
+    dict.select("entity_type", "variant_norm", "canonical_norm").collect().toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .groupMap(r => (r.getString(0), r.getString(1)))(_.getString(2))
+      .map { case (k, cs) => k -> cs.distinct }
 
   // -- Tier-3: MinHash-LSH ----------------------------------------------------
 
@@ -362,6 +385,29 @@ object Link {
     def sh(k: String) = packed.getOrElseUpdate(k, shinglesPacked(k))
     Some(candidates.toSeq.filter { case (_, a, b) =>
       jaccardPackedKernel(sh(a), sh(b)) >= cfg.jaccardThreshold })
+  }
+
+  /** [[registryManaged]] on the driver over the distinct `mentions`
+    * `(entity_type, norm_key)` of a bucket: each mention to its canonical
+    * keys. Those are its dict keys ([[dictOnDriver]] matches, else its own
+    * key; several only when several dict rows match it, as the left join
+    * gives), and under `cfg.fuzzy` their components: [[fuzzySameAsOnDriver]]
+    * with every key new, then [[Canonicalize.componentMap]]. None when the
+    * same-as candidate bound does not fit `maxPairs` (the caller then runs
+    * the distributed registry). */
+  private[kg] def registryOnDriver(mentions: Iterable[(String, String)],
+      dict: Map[(String, String), Seq[String]], cfg: Config,
+      maxPairs: Long): Option[Map[(String, String), Seq[String]]] = {
+    val keyed = mentions.iterator.map { case m @ (_, nk) =>
+      m -> dict.get(m).fold(Seq(nk))(cs => cs.map(c => if (c == null) nk else c).distinct)
+    }.toMap
+    val components =
+      if (!cfg.fuzzy) Some(Map.empty[(String, String), String])
+      else fuzzySameAsOnDriver(keyed.iterator.flatMap { case ((et, _), ks) =>
+          ks.map((et, _, true)) }.toSeq, cfg, maxPairs)
+        .map(pairs => Canonicalize.componentMap(pairs).map { case (et, k, c) => (et, k) -> c }.toMap)
+    components.map(cc => keyed.map { case (m @ (et, _), ks) =>
+      m -> ks.map(k => cc.getOrElse((et, k), k)) })
   }
 
   /** Full linking: mentions → dict keys → fuzzy same-as edges → CC canonical

@@ -1,5 +1,7 @@
 package graft.kg
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +15,10 @@ import graft.model.Model._
   * (Ingester → Entity Registry → Graph Mutator → Disjoint Resolver,
   * `docs/diagrams/megamind.drawio`) re-expressed as one declarative Spark
   * job; each Knative hop becomes a shuffle boundary Catalyst can optimize
-  * across.
+  * across. The reference ingests one small subgraph at a time with a
+  * synchronous registry lookup: for a bucket that fits the driver,
+  * [[runOnDriver]] runs the same chain there in plain collections
+  * ([[Incremental.run]]'s driver lane) and gives the same rows.
   */
 object Pipeline {
 
@@ -136,6 +141,55 @@ object Pipeline {
       },
       raw = Some(raw))
   }
+
+  /** [[run]] on the driver, for a bucket of turns small enough to hold
+    * there: the same S2-S7 chain in plain collections, giving the rows
+    * [[run]] gives as a set. Turns are sorted in Spark's order
+    * ([[Extract.sparkOrder]]) and run through the same conversation loop
+    * ([[Extract.extractSorted]]); the registry is [[Link.registryOnDriver]]
+    * over the mentions' [[Link.normKeyScala]] keys; labelling and the edge
+    * dedup key on `(type, canonical key)` like [[Link.label]] and
+    * [[Materialize.edges]], with `obj_float64` as Spark's grouping leaves
+    * it (see [[groupingDouble]]), and the GUIDs are minted by
+    * [[Link.guidForScala]]. `dict` is [[Link.dictOnDriver]]'s form. None
+    * when the fuzzy same-as candidates do not fit `maxPairs`; the caller
+    * then runs [[run]]. `cfg` must not ask for fuzzy exact same-as (the
+    * driver mirrors the MinHash/LSH path only). */
+  private[kg] def runOnDriver(turns: Seq[Turn], dict: Map[(String, String), Seq[String]],
+      cfg: Link.Config, maxPairs: Long): Option[(Seq[KgEdge], Seq[KgNode])] = {
+    val raw = Extract.extractSorted(turns.sorted(Extract.sparkOrder).iterator).toVector
+    val norm = mutable.HashMap.empty[String, String]
+    def nk(s: String) = norm.getOrElseUpdate(s, Link.normKeyScala(s))
+    def subj(t: RawTriple) = (t.subj_type, nk(t.subj_tuid))
+    // Extract fills obj_type and obj_tuid on every entity-object triple
+    def obj(t: RawTriple) =
+      Option.when(t.obj_kind == ObjKind.Subject)((t.obj_type.get, nk(t.obj_tuid.get)))
+    val mentions = raw.iterator.flatMap(t => subj(t) +: obj(t).toSeq).toSet
+    Link.registryOnDriver(mentions, dict, cfg, maxPairs).map { reg =>
+      val guids = mutable.HashMap.empty[(String, String), String]
+      def guid(et: String, k: String) = guids.getOrElseUpdate((et, k), Link.guidForScala(et, k))
+      val seen = mutable.HashSet.empty[Any]
+      val edges = for {
+        t <- raw
+        sk <- reg(subj(t))
+        ok <- obj(t).fold(Seq(Option.empty[String]))(m => reg(m).map(Some(_)))
+        od = t.obj_float64.map(groupingDouble)
+        if seen.add((t.subj_type, sk, t.pred, t.obj_kind, t.obj_type, ok, t.obj_string,
+          t.obj_int64, od.map(java.lang.Double.doubleToRawLongBits)))
+      } yield KgEdge(t.subj_type, guid(t.subj_type, sk), t.pred, t.obj_kind, t.obj_type,
+        ok.map(guid(t.obj_type.get, _)), t.obj_string, t.obj_int64, od)
+      val nodes = reg.toSeq.flatMap { case ((et, _), ks) => ks.map(k => (et, k)) }.distinct
+        .map { case (et, k) => KgNode(guid(et, k), et, k) }
+      (edges, nodes)
+    }
+  }
+
+  /** What Spark's grouping does to a double key (`dropDuplicates` in
+    * [[Materialize.edges]]): -0.0 becomes 0.0 and every NaN the canonical
+    * NaN. Extract emits both, from text such as "total -0." or "total
+    * NaN.". */
+  private def groupingDouble(d: Double): Double =
+    if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
 
   /** Run + persist with idempotent MERGE into `outDir/{edges,nodes}`. The
     * merged frames read back from the written snapshots, so the pipeline's

@@ -161,6 +161,28 @@ class JobCountSpec extends AnyFunSuite {
     assert(spark.sparkContext.getLocalProperty("callSite.short") == null)
   }
 
+  test("a driver-lane ingest collects each bucket once, writes it as local rows and plans no exchange") {
+    val out = Files.createTempDirectory("graft-jobs").toString
+    val batch = IncrementalSpec.laneBatches(spark).head
+    val (processed, ledger) = ledgerOf(
+      Incremental.run(batch, Pipeline.emptyDict(spark), out, "r", nBuckets = 2))
+    assert(processed == 2)
+    // measured: 11 — the input checkpoint, per bucket one collect and the
+    // edge and node writes, and two jobs per table for the end-of-run
+    // compaction (the distributed lane ran about ten jobs per bucket)
+    assert(ledger.jobs.size <= 11, ledger.jobs)
+    assert(ledger.jobs.count(_.startsWith("collect at Incremental.scala:")) == 2, ledger.jobs)
+    // the compaction reads the two deltas back; every other execution is
+    // ingest, and none of those plans an exchange
+    val (compaction, ingest) = ledger.plans.partition(_.toLowerCase.contains("scan parquet"))
+    assert(compaction.nonEmpty && ingest.nonEmpty)
+    assert(!ingest.exists(_.contains("Exchange")), ingest)
+    val driverLane = Incremental.readMetrics(spark, out)
+      .filter(col("stage") === "pipeline" && col("metric") === "driver_lane")
+      .collect().map(_.getAs[Long]("value")).toSeq
+    assert(driverLane == Seq(1L, 1L))
+  }
+
   test("a driver-lane resolve pass plans no broadcast exchange and runs a bounded job count") {
     val out = Files.createTempDirectory("graft-jobs").toString
     val passes = IncrementalSpec.laneBatches(spark).zipWithIndex.map { case (b, i) =>
@@ -176,7 +198,8 @@ class JobCountSpec extends AnyFunSuite {
     }
     assert(passes.forall(_._1.rewritten > 0L))
     val driverLane = Incremental.readMetrics(spark, out)
-      .filter(col("metric") === "driver_lane").collect().map(_.getAs[Long]("value")).toSeq
+      .filter(col("stage") === "resolve" && col("metric") === "driver_lane")
+      .collect().map(_.getAs[Long]("value")).toSeq
     assert(driverLane == Seq(1L, 1L))
   }
 }

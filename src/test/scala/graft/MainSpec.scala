@@ -100,7 +100,9 @@ class MainSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft-main-stage").toString
     val turns = Transcripts.fromTestdataResolve(spark, "/root/testdata/sf0.001")
     turns.write.mode("overwrite").parquet(s"$base/in")
-    try {
+    // staging is the distributed lane's raw-triple boundary: a bucket this
+    // small would otherwise run on the driver and stage nothing
+    try SizeGate.forceDistributed {
       Main.main(Array("--in", s"$base/in", "--out", s"$base/kgS", "--buckets", "2",
         "--fuzzy", "--threshold", "0.8", "--stage-dir", s"$base/stage"))
       assert(sys.props.get("graft.stage.dir").contains(s"$base/stage"))
@@ -112,10 +114,11 @@ class MainSpec extends AnyFunSuite {
       linkCfg = Link.Config(fuzzy = true, jaccardThreshold = 0.8))
     val want = edgeSet(Materialize.readTable(spark, s"$base/kgM/edges").get)
     assert(got == want && got.nonEmpty)
-    // per-bucket staging dirs are deleted by Result.close — no disk leak
+    // the staged run wrote its raw triples under the staging dir, and
+    // Result.close deleted each bucket's — no disk leak
     val stage = new java.io.File(s"$base/stage")
-    assert(!stage.exists() || stage.list().isEmpty,
-      s"staging leak: ${Option(stage.list()).map(_.toSeq)}")
+    assert(stage.isDirectory, "nothing was staged")
+    assert(stage.list().isEmpty, s"staging leak: ${stage.list().toSeq}")
   }
 
   test("--stream with --resolve-every equals the batch run + resolver") {

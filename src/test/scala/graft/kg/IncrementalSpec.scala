@@ -18,6 +18,7 @@ class IncrementalSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet
 
   test("kill-and-resume: failed run resumes from checkpoints; output equals one-shot run") {
+    import spark.implicits._
     val turns = Transcripts.synthetic(spark, cfg, partitions = 4)
     val dict = Pipeline.emptyDict(spark)
 
@@ -25,30 +26,124 @@ class IncrementalSpec extends AnyFunSuite {
     val ref = Pipeline.run(turns, dict, Link.Config(fuzzy = false))
     val refEdges = edgeSet(ref.edges)
 
-    // incremental run killed at bucket 3
-    val out = Files.createTempDirectory("graft-inc").toString
-    val runId = "run-1"
-    intercept[RuntimeException] {
-      Incremental.run(turns, dict, out, runId, nBuckets = 6,
-        failAtBucket = Some(3))
+    for (driver <- Seq(true, false)) {
+      def lane[T](body: => T): T = if (driver) body else SizeGate.forceDistributed(body)
+      // incremental run killed at bucket 3
+      val out = Files.createTempDirectory("graft-inc").toString
+      val runId = "run-1"
+      intercept[RuntimeException] {
+        lane(Incremental.run(turns, dict, out, runId, nBuckets = 6,
+          failAtBucket = Some(3)))
+      }
+      val doneBefore = Incremental.completedBuckets(spark, out, runId)
+      assert(doneBefore == Set(0, 1, 2), s"got $doneBefore")
+
+      // resume: only the remaining buckets run
+      val processed = lane(Incremental.run(turns, dict, out, runId, nBuckets = 6))
+      assert(processed == 3)
+      val finalEdges = edgeSet(Materialize.readTable(spark, s"$out/edges").get)
+      assert(finalEdges == refEdges, s"driver=$driver")
+
+      // second resume is a no-op
+      assert(lane(Incremental.run(turns, dict, out, runId, nBuckets = 6)) == 0)
+
+      // lineage/metrics recorded per partition: the driver lane counts its
+      // turns and edges, the distributed lane does not count
+      val cps = Incremental.readCheckpoints(spark, out)
+      assert(cps.filter("status = 'done'").count() == 6)
+      def metric(m: String) = Incremental.readMetrics(spark, out)
+        .filter($"metric" === m).collect().map(r =>
+          r.getAs[Int]("partition_key") -> r.getAs[Long]("value")).toMap
+      assert(Incremental.readMetrics(spark, out)
+        .filter("metric = 'rows_in'").count() == 6)
+      assert(metric("rows_in").keySet == (0 until 6).toSet)
+      assert(metric("driver_lane").values.toSet == Set(if (driver) 1L else 0L))
+      if (driver) {
+        assert(metric("rows_in").values.sum == turns.count())
+        assert(metric("edges_bucket_out").values.sum >= refEdges.size.toLong)
+      } else {
+        assert(metric("rows_in").values.toSet == Set(-1L))
+        assert(metric("edges_bucket_out").values.toSet == Set(-1L))
+      }
     }
-    val doneBefore = Incremental.completedBuckets(spark, out, runId)
-    assert(doneBefore == Set(0, 1, 2), s"got $doneBefore")
+  }
 
-    // resume: only the remaining buckets run
-    val processed = Incremental.run(turns, dict, out, runId, nBuckets = 6)
-    assert(processed == 3)
-    val finalEdges = edgeSet(Materialize.readTable(spark, s"$out/edges").get)
-    assert(finalEdges == refEdges)
+  test("ingest lanes: the driver lane writes the distributed lane's tables, doubles bit for bit") {
+    import spark.implicits._
+    def ts(ms: Long) = new java.sql.Timestamp(ms)
+    def cp(c: Int) = new String(Character.toChars(c))
+    def turn(c: String, i: Int, text: String, t: Long = 0L, role: String = "user") =
+      graft.model.Model.Turn(c, i, role, text, if (role == "tool") "lookup" else "", ts(t))
+    val deseret = cp(0x10400) // a non-BMP capital with a lower-case form
+    val special = Seq(
+      // replays of one turn that differ in ts, role or text; pronoun turns
+      turn("r1", 0, "My name is Zed Quill.", t = 5), turn("r1", 0, "My name is Ann Quill.", t = 4),
+      turn("r1", 1, "They ordered 3 items."),
+      turn("r1", 2, "lookup returned HIGH for order 90007", role = "tool"),
+      turn("r1", 2, "lookup returned LOW for order 90007"),
+      // same ts and role: the text decides, by UTF-8 bytes (U+FF21 first;
+      // UTF-16 order puts the surrogate pair first)
+      turn("r2", 0, "My name is \uff21li."), turn("r2", 0, s"My name is ${deseret}li."),
+      turn("r2", 1, "They ordered 4 items."),
+      turn("r3", 0, "They ordered 5 items."), // no antecedent: dropped
+      // control characters and non-BMP forms in surface forms and conv ids
+      turn("c\u0001", 0, "My name is Bo\u0001b  Ray."),
+      turn("c\u0001", 1, s"Bo\u0001b Ray lives in ${deseret}slo\u3000."),
+      turn(s"c$deseret", 0, s"My name is ${cp(0x10570)}ra \u00a0Lee."),
+      // -0.0, -0, 0.0 and NaN values
+      turn("d1", 0, "Order 90007 has total -0.0."), turn("d2", 0, "Order 90007 has total 0.0."),
+      turn("d3", 0, "Order 90008 has total -0."), turn("d4", 0, "Order 90009 has total NaN."),
+      turn("d5", 0, "Order 90009 has total NaN."), turn("d6", 0, "Oslo is -0 degrees."),
+      // dict aliases (two canonical forms for one variant, a null one) and
+      // fuzzy variants
+      turn("a1", 0, "My name is Bob Smith."), turn("a2", 0, "My name is Robert Smith."),
+      turn("a3", 0, "My name is Robert Smithh."), turn("a4", 0, "My name is Zed Quill."))
+    val turns = Transcripts.synthetic(spark, Transcripts.GenConfig(seed = 5L, nConvs = 60,
+        turnsPerConv = 8, replayFraction = 0.2), partitions = 4)
+      .union(special.toDS())
+    val dict = Pipeline.syntheticDict(spark).unionByName(Seq(
+        ("Person", "bob smith", Some("bobby smith")), ("Person", "zed quill", None))
+      .toDF("entity_type", "variant_norm", "canonical_norm"))
+    // each row with its doubles as raw bits
+    def bits(table: String): Set[Seq[Any]] =
+      Materialize.readTable(spark, table).get.collect().map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v => v
+      }).toSet
+    for (fuzzy <- Seq(false, true)) {
+      val linkCfg = Link.Config(fuzzy = fuzzy)
+      // one bucket: its delta becomes the table as written (a read of
+      // several dirs deduplicates, and would normalize doubles itself)
+      def ingest(driver: Boolean) = {
+        val out = Files.createTempDirectory(s"graft-ingest-$driver").toString
+        def run() = Incremental.run(turns, dict, out, "r", nBuckets = 1, linkCfg = linkCfg)
+        if (driver) run() else SizeGate.forceDistributed(run())
+        val lanes = Incremental.readMetrics(spark, out).filter($"metric" === "driver_lane")
+          .collect().map(_.getAs[Long]("value")).toSeq
+        assert(lanes == Seq(if (driver) 1L else 0L), s"fuzzy=$fuzzy driver=$driver")
+        (bits(s"$out/edges"), bits(s"$out/nodes"))
+      }
+      val (edgesD, nodesD) = ingest(driver = true)
+      val (edgesS, nodesS) = ingest(driver = false)
+      assert(edgesD == edgesS, s"fuzzy=$fuzzy")
+      assert(nodesD == nodesS, s"fuzzy=$fuzzy")
 
-    // second resume is a no-op
-    assert(Incremental.run(turns, dict, out, runId, nBuckets = 6) == 0)
-
-    // lineage/metrics recorded per partition
-    val cps = Incremental.readCheckpoints(spark, out)
-    assert(cps.filter("status = 'done'").count() == 6)
-    assert(Incremental.readMetrics(spark, out)
-      .filter("metric = 'rows_in'").count() == 6)
+      // the fixture's corner cases are in the tables
+      def g(et: String, k: String) = Link.guidForScala(et, k)
+      val total = edgesD.filter(_(2) == "total").map(e => e(1) -> e(8)).toSet
+      val (zero, nan) = (java.lang.Double.doubleToRawLongBits(0.0),
+        java.lang.Double.doubleToRawLongBits(Double.NaN))
+      assert(Seq("90007" -> zero, "90008" -> zero, "90009" -> nan)
+        .map { case (o, b) => g("Order", o) -> b }.forall(total.contains), total)
+      assert(total.count(_._1 == g("Order", "90007")) == 1)
+      val names = nodesD.map(_(2))
+      assert(Set[Any]("ann quill", "bo\u0001b ray", s"${cp(0x10428)}slo\u3000",
+        s"${cp(0x10597)}ra \u00a0lee", "\uff41li", "bobby smith").subsetOf(names), names)
+      assert(!names.contains(s"${cp(0x10428)}li"))
+      val ordered = edgesD.filter(_(2) == "ordered_items").map(e => e(1) -> e(7))
+      assert(Set[(Any, Any)](g("Person", "ann quill") -> 3L, g("Person", "\uff41li") -> 4L)
+        .subsetOf(ordered))
+    }
   }
 
   test("disjoint-resolver compaction merges fuzzy aliases across batches, idempotently") {

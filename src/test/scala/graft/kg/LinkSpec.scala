@@ -17,6 +17,23 @@ class LinkSpec extends AnyFunSuite {
     assert(got.toSeq == Seq("alice smith", "bob", "a b"))
   }
 
+  test("normKeyScala equals normKey on control, space, case-mapping and non-BMP characters") {
+    import spark.implicits._
+    def cp(c: Int) = new String(Character.toChars(c))
+    val inputs = Seq(
+      "\u0001bob", "bob\u0000", "\u001fz", "\u0000 a \u0001", " \t\n x \r\f\u000b",
+      "\u00a0Bob\u00a0", " \u2003X\u2003 ", "\u0085Y\u0085",
+      "\u039f\u0394\u039f\u03a3 \u03a3\u039f\u03a3", "\u0130stanbul", "I\u0307",
+      "\u1e9e", cp(0x10400) + "li " + cp(0x10570), "  ", "", "A  B\t\tC")
+    val got = inputs.toDF("s").select(Link.normKey(org.apache.spark.sql.functions.col("s")))
+      .as[String].collect().toSeq
+    assert(got == inputs.map(Link.normKeyScala))
+    // the cases Java's trim and toLowerCase got wrong
+    assert(Link.normKeyScala("\u0001bob") == "\u0001bob")
+    assert(Link.normKeyScala(cp(0x10570)) == cp(0x10597))
+    assert(Link.normKeyScala("\u03a3\u039f\u03a3") == "\u03c3\u03bf\u03c2")
+  }
+
   test("guid mint: Spark sha2 agrees with the Scala mirror (determinism across engines)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
