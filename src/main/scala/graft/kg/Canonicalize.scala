@@ -56,7 +56,7 @@ object Canonicalize {
     * per-iteration driver scheduling overhead is a measured
     * scaling-efficiency tax, so the driver path is preferred while it
     * safely fits). */
-  def connectedComponents(sameAs: DataFrame, maxIter: Int = 25): DataFrame = {
+  def connectedComponents(sameAs: DataFrame): DataFrame = {
     val spark = sameAs.sparkSession
     val fwd = sameAs.select(col("entity_type"), col("key_a").as("src"), col("key_b").as("dst"))
     val edges = fwd.unionByName(
@@ -70,7 +70,7 @@ object Canonicalize {
     if (fits)
       componentsOnDriver(spark,
         cp.collect().iterator.map(r => (r.getString(0), r.getString(1), r.getString(2))))
-    else labelsByStar(cp, maxIter)
+    else labelsByStar(cp)
   }
 
   /** The string edge rows `edges`, checkpointed, and whether they fit the
@@ -131,6 +131,10 @@ object Canonicalize {
       pairs: IterableOnce[(String, String, String)]): DataFrame =
     spark.createDataFrame(componentMap(pairs).map(Row.fromTuple).asJava, outputSchema)
 
+  // star rounds before labelsByStar stops: the rounds are O(log n), so 25
+  // cover any edge set a cluster holds
+  private val MaxStarRounds = 25
+
   /** Alternating large-star / small-star (Kiveris et al. 2014, "Connected
     * Components in MapReduce and Beyond") — converges in O(log n) rounds
     * even on path graphs (vs O(diameter) for naive label propagation), each
@@ -138,7 +142,7 @@ object Canonicalize {
     * star per component rooted at its minimum key; labels fall out of the
     * final stars.
     */
-  private def labelsByStar(edges: DataFrame, maxIter: Int): DataFrame = {
+  private def labelsByStar(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -188,7 +192,7 @@ object Canonicalize {
     var cs = checksum(e)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxStarRounds && !converged) {
       val next = smallStar(largeStar(e)).localCheckpoint(eager = true)
       val ncs = checksum(next)
       e.unpersist()

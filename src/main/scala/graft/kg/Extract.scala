@@ -147,10 +147,10 @@ object Extract {
     * O(1)); partitions hold many conversations, and AQE rebalances
     * post-shuffle partition sizes.
     */
-  def extract(turns: Dataset[Turn], partitions: Option[Int] = None): DataFrame = {
+  def extract(turns: Dataset[Turn]): DataFrame = {
     val spark = turns.sparkSession
     import spark.implicits._
-    val n = partitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
+    val n = spark.sessionState.conf.numShufflePartitions
     turns
       // a hash of conv_id that Incremental's bucket filter does not use:
       // that filter keeps rows with one pmod(hash(conv_id), nBuckets), and

@@ -191,14 +191,14 @@ object Incremental {
     * Buckets are independent partitions of the input writing through an
     * idempotent MERGE (batch-order independence is property-tested), so up
     * to `maxConcurrentBuckets` of them run as CONCURRENT driver-submitted
-    * jobs (guide-standard overlap: the next bucket's tasks back-fill
-    * executors idled by the current bucket's straggler tail — 2-3 in
-    * flight is the sweet spot; the delta-append manifest flips are
-    * lock-serialized and create-exclusive, built for exactly this shape).
-    * `failAtBucket` (the resume-test injection hook) forces sequential
-    * execution so the completed-bucket set at the failure point stays
-    * deterministic; per-bucket `link.lsh` cap attribution is also recorded
-    * only in sequential mode (concurrent buckets would interleave the
+    * jobs, one [[graft.Fanout]] worker each (guide-standard overlap: the
+    * next bucket's tasks back-fill executors idled by the current bucket's
+    * straggler tail — 2-3 in flight is the sweet spot; the delta-append
+    * manifest flips are lock-serialized and create-exclusive, built for
+    * exactly this shape). `failAtBucket` (the resume-test injection hook)
+    * forces one worker, so the completed-bucket set at the failure point
+    * stays deterministic; per-bucket `link.lsh` cap attribution is also
+    * recorded only with one worker (concurrent buckets would interleave the
     * process-wide metric sequence — the caps still reach driver logs). */
   def run(turns: Dataset[Turn], dict: DataFrame, outDir: String, runId: String,
       nBuckets: Int = 16,
@@ -278,25 +278,17 @@ object Incremental {
     }
 
     try {
-      if (sequential) todo.foreach(runBucket)
-      else {
-        // bounded concurrency on a dedicated pool (the global EC would cap
-        // at CPU count and is shared); FIFO job scheduling gives the
-        // back-fill behaviour — earlier buckets get resources first, later
-        // buckets use what is left
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(maxConcurrentBuckets, todo.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val fs = todo.map(b => scala.concurrent.Future(runBucket(b)))
-          // await ALL (even on failure — an abandoned in-flight bucket would
-          // race the cleanup below), then rethrow the first failure
-          val rs = fs.map(f => scala.util.Try(scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf)))
-          rs.foreach(_.get)
-        } finally pool.shutdown()
-      }
+      // workers drain one shared index into `todo` (one worker when
+      // sequential); FIFO job scheduling gives the back-fill behaviour —
+      // earlier buckets get resources first, later buckets use what is
+      // left. A failed bucket ends its worker; Fanout awaits the others
+      // (an abandoned in-flight bucket would race the cleanup below), then
+      // rethrows the first failure.
+      val next = new java.util.concurrent.atomic.AtomicInteger(0)
+      val worker = () => Iterator.continually(next.getAndIncrement())
+        .takeWhile(_ < todo.size).foreach(i => runBucket(todo(i)))
+      val workers = if (sequential) 1 else math.min(maxConcurrentBuckets, todo.size)
+      Fanout.all(Seq.fill(workers)(worker): _*)
       // end-of-run compaction: fold trailing deltas into a fresh base so
       // steady-state reads pay zero merge-on-read cost
       Materialize.compactGraph(spark, outDir)

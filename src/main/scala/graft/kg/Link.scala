@@ -231,12 +231,14 @@ object Link {
 
   /** Delta same-as discovery for the incremental Disjoint Resolver: `keys`
     * carries an `is_new` boolean and ONLY pairs involving a new key are
-    * discovered/verified. Old×old pairs are never enumerated — the blocked
-    * joins split into (new ⋈ all) ∪ (old ⋈ new), each with one
-    * O(delta)-sized side (see [[graft.ops.SimJoin.candidatePairs]] for the
-    * exact-path argument). Equivalence with the full discovery requires the
-    * old key set to be CONVERGED (no old×old pair at or above the
-    * threshold) — which is the resolver's post-resolve invariant. */
+    * discovered/verified. Old×old pairs are never enumerated — on the LSH
+    * path the new keys' band rows probe all band rows
+    * ([[graft.ops.Dedup.bandPairs]]), on the exact path the prefix joins
+    * split into (new ⋈ all) ∪ (old ⋈ new), each with one O(delta)-sized
+    * side (see [[graft.ops.SimJoin.candidatePairs]]). Equivalence with the
+    * full discovery requires the old key set to be CONVERGED (no old×old
+    * pair at or above the threshold) — which is the resolver's
+    * post-resolve invariant. */
   def fuzzySameAsDelta(keys: DataFrame, cfg: Config): DataFrame =
     sameAsImpl(keys, cfg, delta = true)._1
 
@@ -322,20 +324,11 @@ object Link {
     val capped = graft.ops.CapMetrics.capBuckets(banded, "link.lsh", cfg.maxBandBucket,
       $"entity_type", $"band", $"band_hash")
 
-    val cond = $"a.entity_type" === $"b.entity_type" && $"a.band" === $"b.band" &&
-      $"a.band_hash" === $"b.band_hash" && $"a.key" < $"b.key"
-    def bandJoin(l: DataFrame, r: DataFrame): DataFrame =
-      l.as("a").join(r.as("b"), cond)
-        .select($"a.entity_type".as("entity_type"),
-          $"a.key".as("key_a"), $"b.key".as("key_b"))
-    // delta split, branch by the LEFT (smaller-key) side's newness — same
-    // partition argument as the exact path: new-involved pairs only, each
-    // exactly once per band before the distinct
-    val candidates =
-      (if (!delta) bandJoin(capped, capped)
-       else bandJoin(capped.filter($"is_new"), capped)
-         .unionByName(bandJoin(capped.filter(!$"is_new"), capped.filter($"is_new"))))
-      .distinct()
+    // delta: only pairs with a new side (the is_new rows probe the whole
+    // capped frame), so old×old buckets add no pairs and no join work
+    val candidates = graft.ops.Dedup.bandPairs(capped, "key", Seq("entity_type"),
+        probe = Option.when(delta)(capped.filter($"is_new")))
+      .select($"entity_type", $"id_a".as("key_a"), $"id_b".as("key_b"))
 
     (verifySameAs(eligible, candidates, cfg.jaccardThreshold),
       () => { capped.unpersist(); () })

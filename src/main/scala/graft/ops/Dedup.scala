@@ -210,47 +210,81 @@ object Dedup {
   /** Near-duplicate pairs via MinHash+LSH blocking, verified with exact
     * shingle-set Jaccard. Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
     *
-    * Plan shape: signature flatMap (one pass over text, checkpointed — it
-    * feeds both self-join sides) → equi-join on (band, band_hash) →
-    * distinct candidate pairs (tiny) → join back to text → exact verify.
+    * Plan shape: band rows ([[docBands]], one pass over text, capped and
+    * checkpointed — it feeds both self-join sides) → [[bandPairs]]
+    * equi-join on (band, band_hash) → distinct candidate pairs (tiny) →
+    * join back to text → exact verify.
     */
   def minhashPairs(docs: DataFrame, cfg: MinHashConfig = MinHashConfig()): DataFrame =
     minhashPairsManaged(docs, cfg).seal()
 
   /** [[minhashPairs]] as a [[ManagedPairs]] (lazy plan + explicit free). */
   def minhashPairsManaged(docs: DataFrame,
-      cfg: MinHashConfig = MinHashConfig()): ManagedPairs = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+      cfg: MinHashConfig = MinHashConfig()): ManagedPairs =
+    minhashPairsOf(docs.select(col("doc_id"), col("text")), "dedup.minhash", cfg, delta = false)
 
+  /** The body of [[minhashPairsManaged]] and
+    * [[DeltaDedup.minhashPairsDeltaManaged]]: [[docBands]] of `docs`
+    * (doc_id, text, and `is_new` when `delta`), capped under CapMetrics
+    * `site`, paired by [[bandPairs]] (probing with the `is_new` rows when
+    * `delta`), then verified by exact shingle Jaccard. */
+  private[ops] def minhashPairsOf(docs: DataFrame, site: String, cfg: MinHashConfig,
+      delta: Boolean): ManagedPairs = {
     // single consumer (the bucket-count window) — the stage boundary both
-    // join sides share is the observed+checkpointed `capped` frame below
-    val sigs = docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        bandHashKernel(wordShinglesKernel(if (text == null) "" else text, cfg.shingleN),
-          cfg.numHashes, cfg.bands).map { case (b, h) => (id, b, h) }
-      }
-      .toDF("doc_id", "band", "band_hash")
-
-    // oversized buckets are dropped before the quadratic self-join
-    val capped = CapMetrics.capBuckets(sigs, "dedup.minhash", cfg.maxBandBucket,
+    // join sides share is the observed+checkpointed `capped` frame below;
+    // oversized buckets are dropped before the quadratic join
+    val capped = CapMetrics.capBuckets(docBands(docs, cfg), site, cfg.maxBandBucket,
       col("band"), col("band_hash"))
-
-    val a = capped.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
-    val b = capped.select(col("doc_id").as("doc_b"), col("band"), col("band_hash"))
-    val candidates = a.join(b, Seq("band", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-
     // candidates sealed eagerly: the verify consumes them twice (the
     // involved-id probe and the pair join) and they are a lazy DAG over
     // `capped` — id-only rows, bounded by the cap
-    val sealedCand = candidates.localCheckpoint(eager = true)
+    val sealedCand = bandPairs(capped, "doc_id",
+        probe = Option.when(delta)(capped.filter(col("is_new"))))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+      .localCheckpoint(eager = true)
     val (verified, freeShingled) =
       verifyJaccard(docs, sealedCand, cfg.shingleN, cfg.jaccardThreshold)
     ManagedPairs(verified,
       () => { capped.unpersist(); sealedCand.unpersist(); freeShingled(); () })
+  }
+
+  /** MinHash band rows of a doc frame: one `(doc_id, band, band_hash)` row
+    * per band of [[bandHashKernel]] over the doc's [[wordShinglesKernel]]
+    * set (null text shingles as ""). Every other column of `docs` but
+    * `text` is carried onto each of the doc's rows; `doc_id` is cast to
+    * long. */
+  private[ops] def docBands(docs: DataFrame, cfg: MinHashConfig): DataFrame = {
+    val bandsOf = udf((text: String) => bandHashKernel(
+      wordShinglesKernel(if (text == null) "" else text, cfg.shingleN), cfg.numHashes, cfg.bands))
+    val keep = docs.columns.filterNot(Set("doc_id", "text")).map(col).toSeq
+    docs.select(col("doc_id").cast("long").as("doc_id") +: keep :+
+        explode(bandsOf(col("text"))).as("bh"): _*)
+      .select(col("doc_id") +: keep :+ col("bh._1").as("band") :+
+        col("bh._2").as("band_hash"): _*)
+  }
+
+  /** The MinHash band-pair join, written once for every LSH site: rows of
+    * the band frame `bands` that share a bucket (`groups`, `band`,
+    * `band_hash`) pair up by their `id` column. Returns the distinct
+    * `(groups..., id_a, id_b)` with id_a < id_b.
+    *
+    * Without a `probe` this is the one-sided self-join (`a < b` inside the
+    * join). With one (rows of the band frame's shape: its new rows, or a
+    * fresh batch's) it returns only pairs with a probe side: the probe
+    * joins the whole frame once and each pair is put in order with
+    * least/greatest, so buckets without a probe row add no pairs and no
+    * join work. The caller caps `bands` and `probe` first
+    * ([[CapMetrics.capBuckets]] or an anti-join), so no bucket over the
+    * cap reaches the quadratic join. */
+  private[graft] def bandPairs(bands: DataFrame, id: String, groups: Seq[String] = Nil,
+      probe: Option[DataFrame] = None): DataFrame = {
+    val keys = groups ++ Seq("band", "band_hash")
+    def side(df: DataFrame, as: String) = df.select(keys.map(col) :+ col(id).as(as): _*)
+    val (a, b) = (col("a"), col("b"))
+    val (lo, hi, on) = probe.fold((a, b, a < b))(_ => (least(a, b), greatest(a, b), a =!= b))
+    side(probe.getOrElse(bands), "a").join(side(bands, "b"), keys).filter(on)
+      .select(groups.map(col) :+ lo.as("id_a") :+ hi.as("id_b"): _*)
+      .distinct()
   }
 
   /** Re-spread a small candidate-id frame across the machine before the

@@ -76,40 +76,13 @@ object DeltaDedup {
   /** [[minhashPairsDelta]] as a [[Dedup.ManagedPairs]] (lazy plan +
     * explicit free of the corpus-scale signature checkpoint). */
   def minhashPairsDeltaManaged(batch: DataFrame, corpus: DataFrame,
-      cfg: Dedup.MinHashConfig = Dedup.MinHashConfig()): Dedup.ManagedPairs = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val all = batch.select(col("doc_id"), col("text"), lit(true).as("is_new"))
-      .unionByName(corpus.select(col("doc_id"), col("text"), lit(false).as("is_new")))
-
-    val sigs = all.select(col("doc_id"), col("text"), col("is_new"))
-      .as[(Long, String, Boolean)]
-      .flatMap { case (id, text, isNew) =>
-        Dedup.bandHashKernel(
-          Dedup.wordShinglesKernel(if (text == null) "" else text, cfg.shingleN),
-          cfg.numHashes, cfg.bands).map { case (b, h) => (id, isNew, b, h) }
-      }.toDF("doc_id", "is_new", "band", "band_hash")
-
-    // bucket cap over the COMBINED frame (same key space as the full op)
-    val capped = CapMetrics.capBuckets(sigs, "dedup.delta", cfg.maxBandBucket,
-      col("band"), col("band_hash"))
-
+      cfg: Dedup.MinHashConfig = Dedup.MinHashConfig()): Dedup.ManagedPairs =
+    // bucket cap over the COMBINED frame (same key space as the full op);
     // probe side: batch only — old×old never meets
-    val a = capped.filter(col("is_new"))
-      .select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
-    val b = capped.select(col("doc_id").as("doc_b"), col("band"), col("band_hash"))
-    val candidates = a.join(b, Seq("band", "band_hash"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-
-    val sealedCand = candidates.localCheckpoint(eager = true)
-    val (verified, freeShingled) = Dedup.verifyJaccard(all.drop("is_new"),
-      sealedCand, cfg.shingleN, cfg.jaccardThreshold)
-    Dedup.ManagedPairs(verified,
-      () => { capped.unpersist(); sealedCand.unpersist(); freeShingled(); () })
-  }
+    Dedup.minhashPairsOf(
+      batch.select(col("doc_id"), col("text"), lit(true).as("is_new"))
+        .unionByName(corpus.select(col("doc_id"), col("text"), lit(false).as("is_new"))),
+      "dedup.delta", cfg, delta = true)
 
   // ---- persisted-state incremental ingest --------------------------------------
 
@@ -162,7 +135,6 @@ object DeltaDedup {
   def ingest(spark: SparkSession, dir: String, batch: DataFrame,
       cfg: Dedup.MinHashConfig = Dedup.MinHashConfig(),
       partnerTexts: Option[DataFrame] = None): IngestResult = {
-    import spark.implicits._
     import graft.kg.Materialize
 
     val sig = cfgSig(cfg)
@@ -221,12 +193,7 @@ object DeltaDedup {
 
     // ---- near-dup layer: band ONLY the batch (O(delta) compute)
     val SizeGate.Sized(fresh, freshRows, _) = SizeGate.checkpoint(
-      batch.select(col("doc_id"), col("text")).as[(Long, String)]
-        .flatMap { case (id, text) =>
-          Dedup.bandHashKernel(
-            Dedup.wordShinglesKernel(if (text == null) "" else text, cfg.shingleN),
-            cfg.numHashes, cfg.bands).map { case (bd, h) => (id, bd, h) }
-        }.toDF("doc_id", "band", "band_hash"))
+      Dedup.docBands(batch.select(col("doc_id"), col("text")), cfg))
     val bandedDocs = freshRows / cfg.bands
 
     val allSigs = (Materialize.readTable(spark, sigsTable(dir)) match {
@@ -252,14 +219,8 @@ object DeltaDedup {
     def capped(df: DataFrame): DataFrame =
       df.join(overP, Seq("band", "band_hash"), "left_anti")
 
-    val candidates = capped(fresh).select(col("doc_id").as("doc_a"),
-        col("band"), col("band_hash"))
-      .join(capped(allSigs).select(col("doc_id").as("doc_b"),
-        col("band"), col("band_hash")), Seq("band", "band_hash"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
+    val candidates = Dedup.bandPairs(capped(allSigs), "doc_id", probe = Some(capped(fresh)))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       .localCheckpoint(eager = true)
 
     val verified = partnerTexts.map { corpusTexts =>

@@ -31,8 +31,8 @@ class WritePathSpec extends AnyFunSuite {
     // each commit primitive has one call site (its definition aside)
     for (name <- Seq("writeReserved", "reserveDir", "flip"))
       assert(hits(s"""(?<!def )\\b$name\\(""") == Seq("graft/kg/Materialize.scala"), name)
-    // threads are joined by Fanout, and by Incremental.run's bounded bucket pool
-    assert(hits("""Await\.result""") == Seq("graft/Fanout.scala", "graft/kg/Incremental.scala"))
+    // threads are joined by Fanout only
+    assert(hits("""Await\.result""") == Seq("graft/Fanout.scala"))
     assert(hits("retainSnapshots").isEmpty)
   }
 }

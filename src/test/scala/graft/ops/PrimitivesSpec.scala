@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Each similarity primitive has one implementation under src/main/scala:
   * the bucket cap, the top-k heap order, the pair-sealing checkpoint, the
-  * primitive-array vector kernels and the two-pass prefix scan. */
+  * primitive-array vector kernels, the two-pass prefix scan, the doc
+  * band-row builder and the band-pair join. */
 class PrimitivesSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -26,6 +27,11 @@ class PrimitivesSpec extends AnyFunSuite {
   /** The file of each occurrence of `needle`. */
   private def hits(needle: String): Seq[String] = sources.toSeq.flatMap { case (f, s) =>
     Seq.fill(java.util.regex.Pattern.quote(needle).r.findAllMatchIn(s).size)(f)
+  }
+
+  /** The file of each match of `regex`, in path order. */
+  private def matches(regex: String): Seq[String] = sources.toSeq.sortBy(_._1).flatMap {
+    case (f, s) => Seq.fill(regex.r.findAllMatchIn(s).size)(f)
   }
 
   test("one copy of each similarity primitive under src/main/scala") {
@@ -48,5 +54,11 @@ class PrimitivesSpec extends AnyFunSuite {
     // written once, in Sharding.prefixScan
     assert(hits("spark_partition_id(").toSet == Set("graft/ops/Sharding.scala"))
     assert(hits("scanLeft(").toSet == Set("graft/ops/Sharding.scala"))
+    // MinHash band rows of documents are built once (Dedup.docBands), and
+    // band rows are paired once (Dedup.bandPairs): an equi-join on the band
+    // columns, the cap's anti-join aside
+    assert(matches("""(?<!def )\bbandHashKernel\(""") == Seq("graft/ops/Dedup.scala"))
+    assert(matches("""Seq\("band", "band_hash"\)(?!, "left_anti")|band_hash"\)? ===""") ==
+      Seq("graft/ops/Dedup.scala"))
   }
 }
